@@ -1,0 +1,51 @@
+package streambench
+
+/** Minimal JSON renderer for the run record (maps, sequences, arrays of
+  * primitives, options). Non-finite doubles render as null. */
+object Json {
+  def render(v: Any): String = { val sb = new StringBuilder; write(sb, v); sb.toString }
+
+  private def quote(sb: StringBuilder, s: String): Unit = {
+    sb.append('"')
+    s.foreach {
+      case '"'  => sb.append("\\\"")
+      case '\\' => sb.append("\\\\")
+      case '\n' => sb.append("\\n")
+      case '\r' => sb.append("\\r")
+      case '\t' => sb.append("\\t")
+      case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
+      case c => sb.append(c)
+    }
+    sb.append('"')
+  }
+
+  private def seq(sb: StringBuilder, xs: Iterator[Any]): Unit = {
+    sb.append('[')
+    var first = true
+    xs.foreach { x => if (!first) sb.append(','); first = false; write(sb, x) }
+    sb.append(']')
+  }
+
+  def write(sb: StringBuilder, v: Any): Unit = v match {
+    case null | None => sb.append("null")
+    case Some(x) => write(sb, x)
+    case s: String => quote(sb, s)
+    case b: Boolean => sb.append(b)
+    case d: Double => if (d.isNaN || d.isInfinite) sb.append("null") else sb.append(d)
+    case n: Int => sb.append(n)
+    case n: Long => sb.append(n)
+    case n: java.lang.Number => sb.append(n.toString)
+    case m: scala.collection.Map[_, _] =>
+      sb.append('{')
+      var first = true
+      m.foreach { case (k, x) =>
+        if (!first) sb.append(','); first = false
+        quote(sb, k.toString); sb.append(':'); write(sb, x)
+      }
+      sb.append('}')
+    case a: Array[_] => seq(sb, a.iterator)
+    case xs: Iterable[_] => seq(sb, xs.iterator)
+    case p: Product => seq(sb, p.productIterator)
+    case other => quote(sb, other.toString)
+  }
+}
