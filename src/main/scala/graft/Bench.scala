@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -70,47 +69,27 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val ckptBase = if (new java.io.File("/dev/shm").canWrite) "/dev/shm" else "/tmp"
-    val ckptRoot = s"$ckptBase/graft_bench_ckpt_${System.nanoTime()}"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
+    val cpus = GraftSession.defaultCpus
+    // single-node bench: checkpoint to tmpfs when it has room — a cluster
+    // deployment checkpoints to a fast DFS, not the OS root disk, and the
+    // per-batch offset/commit/state-delta fsyncs otherwise measure the
+    // benchmark host's disk instead of the engine
+    val ckptRoot = SparkEntry.scratchDir("graft_bench_ckpt")
+    val spark = GraftSession(cpus, Map(
       // streaming state housekeeping: retain the minimum checkpoint history
       // (2 batches) — the default 100 keeps every delta file of the bench
       // run alive and pays file-system maintenance per batch
-      .config("spark.sql.streaming.minBatchesToRetain", "2")
+      "spark.sql.streaming.minBatchesToRetain" -> "2",
       // never snapshot-compact mid-run: the bench's state fits in the deltas
       // and the maintenance thread's snapshot write would race the timed loop
-      .config("spark.sql.streaming.stateStore.minDeltasForSnapshot", "1000")
-      .config("spark.sql.streaming.stateStore.maintenanceInterval", "600s")
+      "spark.sql.streaming.stateStore.minDeltasForSnapshot" -> "1000",
+      "spark.sql.streaming.stateStore.maintenanceInterval" -> "600s",
       // RunStats totals sum over recentProgress; the default retention (100)
       // silently truncates the per-batch duration totals once a run exceeds
       // 100 micro-batches (larger SF / smaller trigger) while still claiming
       // to be full-run numbers — retain far past any plausible batch count
-      .config("spark.sql.streaming.numRecentProgressUpdates", "10000")
-      // single-node bench: checkpoint to tmpfs when present — a cluster
-      // deployment checkpoints to a fast DFS, not the OS root disk, and the
-      // per-batch offset/commit/state-delta fsyncs otherwise measure the
-      // benchmark host's disk instead of the engine
-      .config("spark.sql.streaming.checkpointLocation", ckptRoot)
-      // local checkpoints only (tmpfs/tmp): the NIO manager avoids the
-      // Hadoop local-FS fork-per-stat path (no libhadoop here), which
-      // jstack showed dominating the stream thread's runnable time — a
-      // DFS deployment keeps Spark's default manager
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        "graft.streaming.LocalCheckpointFileManager")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // clean the (possibly tmpfs-resident) checkpoint tree even when a
-    // stream or query throws
-    sys.addShutdownHook {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckptRoot))
-    }
+      "spark.sql.streaming.numRecentProgressUpdates" -> "10000",
+      "spark.sql.streaming.checkpointLocation" -> ckptRoot))
 
     def time(f: => Unit): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
@@ -170,7 +149,7 @@ object Bench {
         RunStats(sec, prog.length, tot("addBatch"), tot("walCommit"),
           tot("commitOffsets"), tot("queryPlanning"),
           prog.flatMap(_.stateOperators).map(_.commitTimeMs).sum)
-      } finally spark.conf.set("spark.sql.shuffle.partitions", cpus)
+      } finally spark.conf.set("spark.sql.shuffle.partitions", cpus.toString)
     }
     // stateful warmup: the first stateful streaming query in a JVM pays
     // state-store provider/codegen initialization (~10s) that has nothing to
@@ -223,12 +202,16 @@ object Bench {
     // per-batch Janino recompile the advancing-watermark literal forces,
     // see the block comment), so codegen must be the ONLY variable.
     // r15 ran it at shuffle_partitions = cpus, which mostly measured
-    // state-partition sizing, not codegen: the r16 CodegenLoop matrix
-    // (warm, 26 batches) put 4→32 state partitions at ~+1.0 s/run
-    // (32 state-store commits/batch: commitTimeMs 5-14 → 150-540 ms/run;
-    // plus 2×32-task scheduling for ~3.6k rows) vs codegen on/off at
-    // ~+0.2-0.4 s/run (+37 Janino compiles ≈ 1.4/batch — the advancing
-    // watermark predicates — ~150-250 ms). Both series' configs are
+    // state-partition sizing, not codegen: the r16 matrix over this
+    // windowed workload (warm, 26 batches) put 4→32 state partitions at
+    // ~+1.0 s/run (32 state-store commits/batch: commitTimeMs 5-14 →
+    // 150-540 ms/run; plus 2×32-task scheduling for ~3.6k rows) vs codegen
+    // on/off at ~+0.2-0.4 s/run (+37 Janino compiles ≈ 1.4/batch — the
+    // advancing watermark predicates — ~150-250 ms). The compile split
+    // shows on the one-batch windowed gate too:
+    // `SPARK_GRAFT_SF_DIR=<sf0.1> Diag q_stream_window 2`, with and without
+    // `spark.sql.codegen.factoryMode=NO_CODEGEN spark.sql.codegen.wholeStage=false`,
+    // prints +13 vs +3 compiles per warm pass. Both series' configs are
     // stamped below. Fewer samples: this series tracks, it does not gate.
     val codegenPairs = (1 to CodegenHeadlineSamples)
       .map(_ => (stream(agg = false), stream(agg = true)))
@@ -288,9 +271,6 @@ object Bench {
       // magnitude (negative) so the artifact shows time-to-exception
       (name, if (ok.nonEmpty) ok.min else vs.head)
     }
-    // 0.1 ms resolution: full double precision only pads the contract line
-    // (scheduler noise is ±15-30%, so digits past 4 decimals carry nothing)
-    def r4(d: Double): Double = math.round(d * 10000) / 10000.0
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + r4(v) }
       .mkString("{", ",", "}")
     val failedNames = results.collect { case (k, v) if v < 0 => "\"" + k + "\"" }
@@ -372,6 +352,12 @@ object Bench {
     println(s"""{"metric":"total","value":${r4(total)},"unit":"sec"""" + headline +
       s""","queries":$qs,"sf":"$sfDir"}""")
     spark.stop()
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckptRoot))
   }
+
+  /** 0.1 ms resolution: full double precision only pads the contract line
+    * (scheduler noise is ±15-30%, so digits past 4 decimals carry nothing).
+    * Negatives (failed-query markers) round toward −∞, so a failure that
+    * took under 0.05 ms still reads as negative, never as `0.0`. */
+  private[graft] def r4(d: Double): Double =
+    (if (d < 0) math.floor(d * 10000) else math.round(d * 10000).toDouble) / 10000.0
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.functions.TextFunctions
-import graft.operators.{Dedup, Multimodal, Similarity}
+import graft.operators.{Dedup, Exec, Multimodal, Similarity}
 
 /**
  * Driver contract: one query per implemented operator (SURVEY §2), each with
@@ -29,7 +29,8 @@ object SparkEntry {
   private def mid(dir: String) = s"$dir/events.parquet"
 
   /** Gate-scratch directory for per-run verification plumbing (per-epoch
-    * outputs, temp indexes, seeded copies): tmpfs when the host has one,
+    * outputs, temp indexes, seeded copies) and Bench's checkpoint root:
+    * tmpfs when the host has one with room ([[tmpfsUsable]]),
     * else the OS temp dir, deleted at JVM exit either way. These artifacts
     * are the harness's scratch space, not the operator under measurement —
     * a cluster job would land them on its fast local scratch/DFS, while
@@ -37,7 +38,7 @@ object SparkEntry {
     * commit latency taxes every epoch write. The DURABLE sink gate
     * (q_sink_durable) deliberately does NOT use this: real disk is part of
     * its contract. */
-  private def scratchDir(prefix: String): String = {
+  private[graft] def scratchDir(prefix: String): String = {
     val shm = new java.io.File("/dev/shm")
     val p =
       if (tmpfsUsable(shm))
@@ -87,7 +88,7 @@ object SparkEntry {
           fresh
         }
       val df = entry._2.getOrElseUpdate(dir,
-        Dedup.lazyShare(
+        Exec.lazyShare(
           Dedup.ngramJaccardPairs(Tables.documents(s, dir), "doc_id", "text",
             k = 3, threshold = 0.5)))
       // a clearCache() (e.g. Bench between sweep passes) drops the persist
@@ -369,16 +370,21 @@ object SparkEntry {
       watermarkDelay: String, joinType: String): Unit = {
     val bucketUs = 600L * 1000000L
     val prev = s.conf.get("spark.sql.shuffle.partitions")
-    // State-cost profile (graft.tools.StreamJoinProfile, sf0.1, ~2.2-2.8 s
-    // wall): batch 0 addBatch ~2.0 s = dual full-log scan + banding shuffle
-    // (~1 s) + symmetric-hash-join state puts/commits (~0.95 s summed over
-    // tasks for 79k stored rows in 4 stores/partition); batch 1 (mandatory
-    // AvailableNow watermark finalization + eviction) ~0.7 s; plus ~0.5 s
-    // streaming protocol (planning, WAL, offset commits). Sweeps measured:
-    // state partitions 4 vs 8 is within host noise, 16 regresses (summed
-    // store-commit cost grows linearly); RocksDB regresses ~15% here (per-
-    // store open/changelog overhead, while the in-memory provider holds 24 MB
-    // trivially); un-banded join is 3.5x worse (per-partition nested loop).
+    // State-cost profile (sf0.1, ~2.2-2.8 s wall): batch 0 addBatch ~2.0 s
+    // = dual full-log scan + banding shuffle (~1 s) + symmetric-hash-join
+    // state puts/commits (~0.95 s summed over tasks for 79k stored rows in
+    // 4 stores/partition); batch 1 (mandatory AvailableNow watermark
+    // finalization + eviction) ~0.7 s; plus ~0.5 s streaming protocol
+    // (planning, WAL, offset commits). `SPARK_GRAFT_SF_DIR=<sf0.1> Diag
+    // q_stream_join` prints this split per epoch. Sweeps measured: state
+    // partitions 4 vs 8 is within host noise, 16 regresses (summed
+    // store-commit cost grows linearly; rerun by changing the pin below);
+    // RocksDB regresses, ~15% on a 32-core host and +50% wall on a 4-core
+    // one (Diag with `spark.sql.streaming.stateStore.providerClass=
+    // org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider`:
+    // state commit 0.12 → 0.98 s; per-store open/changelog overhead, while
+    // the in-memory provider holds 24 MB trivially); un-banded join is 3.5x
+    // worse (per-partition nested loop).
     // The remaining cost IS the protocol's state-commit volume — every
     // stored row is a row the interval condition may still match, so the
     // plan below is the floor for stream-stream interval-join semantics.
@@ -1092,7 +1098,7 @@ object SparkEntry {
       // upstream; the boundary sample itself reads the RAW column-pruned
       // scan (boundarySource), not the pipeline — bucket boundaries shape
       // only balance, so sampling the superset is free and value-identical
-      val staged = Dedup.lazyShare(mixed)
+      val staged = Exec.lazyShare(mixed)
       operators.Sampling.packSequences(staged, Seq(col("source")), col("doc_id"),
           TextFunctions.tokenCount(col("text")), maxSeqLen = 512,
           boundarySource = Some(docs))
@@ -2500,7 +2506,7 @@ object SparkEntry {
       val docs = Tables.documents(s, dir)
       val (w, bias, oov) = operators.CorpusOps.naiveBayesFit(
         docs, "doc_id", "text", col("lang") === "en")
-      val weights = Dedup.lazyShare(w)
+      val weights = Exec.lazyShare(w)
       val tag = java.util.UUID.randomUUID().toString.replace("-", "")
       val logName = sharedDocsLog(s, dir, withId = true)
       val nCorpus = GraftEventLog.count(logName)

@@ -445,7 +445,7 @@ object CorpusOps {
     }
     // benchmark side is read twice (banding + verification) — share it
     // lazily so it shingles once; the corpus side streams through each stage
-    val bBase = Dedup.lazyShare(shingled(bench, "bench_id"))
+    val bBase = Exec.lazyShare(shingled(bench, "bench_id"))
     val cBase = shingled(corpus, "doc_id")
     val bBand = Dedup.dropHotKeys(banded(bBase, "bench_id"),
       Seq("band", "bucket"), maxBenchBucket, "decontaminateNearDup")
@@ -1187,7 +1187,7 @@ object CorpusOps {
       broadcastDf: Boolean = false): DataFrame = {
     // tokenization is the dominant per-row cost; spread a sub-split input
     // so it does not run single-threaded above a one-partition scan
-    val docs = Dedup.spreadCpuScan(docs0, idCol)
+    val docs = Exec.spreadCpuScan(docs0, idCol)
     val tf = docs
       .select(col(idCol).as("doc_id"), explode(TextFunctions.words(col(textCol))).as("term"))
       .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
@@ -1236,8 +1236,8 @@ object CorpusOps {
     val k1p1 = k1 + 1.0
     val oneMb = 1.0 - b
     // tokenization dominates; spread a sub-split input (see
-    // [[Dedup.spreadCpuScan]]) so it does not run on one core
-    val toks = Dedup.spreadCpuScan(docs, idCol)
+    // [[Exec.spreadCpuScan]]) so it does not run on one core
+    val toks = Exec.spreadCpuScan(docs, idCol)
       .select(col(idCol).as("doc_id"),
         TextFunctions.tokenCount(col(textCol)).cast("long").as("dl"),
         explode(TextFunctions.words(col(textCol))).as("term"))
@@ -1294,7 +1294,7 @@ object CorpusOps {
     require(k1 >= 0 && b >= 0 && b <= 1, s"bad BM25 params k1=$k1 b=$b")
     val k1p1 = k1 + 1.0
     val oneMb = 1.0 - b
-    val qt = Dedup.lazyShare(queries
+    val qt = Exec.lazyShare(queries
       .select(col(queryIdCol).as("query_id"),
         explode(TextFunctions.words(col(queryTextCol))).as("term"))
       .filter(col("term") =!= "").distinct())
@@ -1388,7 +1388,7 @@ object CorpusOps {
   def bm25FitMany(docs: DataFrame, idCol: String, textCol: String,
       queries: DataFrame, queryIdCol: String, queryTextCol: String)
       : (DataFrame, DataFrame, Long, Double) = {
-    val qt = Dedup.lazyShare(queries
+    val qt = Exec.lazyShare(queries
       .select(col(queryIdCol).as("query_id"),
         explode(TextFunctions.words(col(queryTextCol))).as("term"))
       .filter(col("term") =!= "").distinct())
@@ -1404,7 +1404,7 @@ object CorpusOps {
     // above already runs a job here): a stream scoring against them must
     // not pay the corpus scan inside its first trigger
     qt.count()
-    val dftShared = Dedup.lazyShare(dft)
+    val dftShared = Exec.lazyShare(dft)
     dftShared.count()
     (qt, dftShared, st.getLong(0), st.getDouble(1))
   }
@@ -1461,7 +1461,7 @@ object CorpusOps {
     val st = docs.agg(count(lit(1)),
       avg(TextFunctions.tokenCount(col(textCol)).cast("long"))).head()
     // fit-time materialization ([[bm25FitMany]]'s rationale)
-    val dftShared = Dedup.lazyShare(dft)
+    val dftShared = Exec.lazyShare(dft)
     dftShared.count()
     (dftShared, st.getLong(0), st.getDouble(1))
   }
@@ -1815,7 +1815,7 @@ object CorpusOps {
     val dft = dftAll.filter(col("term").isin(queryTerms.distinct: _*))
     // batch-only path (streams score through bm25ScoreWith directly):
     // spread a sub-split corpus so tokenization does not run on one core
-    bm25ScoreWith(Dedup.spreadCpuScan(docs, idCol), idCol, textCol,
+    bm25ScoreWith(Exec.spreadCpuScan(docs, idCol), idCol, textCol,
         dft, nDocs, avgdl, k1, b)
       .orderBy(col("score").desc, col("doc_id").asc)
       .limit(k)
@@ -1965,7 +1965,7 @@ object CorpusOps {
     // token total, vocabulary size) — share it lazily so the corpus
     // explodes once for it, and derive total/vocab from it (sum of counts
     // == token total) instead of re-exploding the corpus per scalar
-    val uniFull = Dedup.lazyShare(
+    val uniFull = Exec.lazyShare(
       toks.groupBy(col("term")).agg(count(lit(1)).as("cnt1")))
     val uni = if (vocabCap == Int.MaxValue) uniFull
       else cappedVocab(uniFull.withColumnRenamed("cnt1", "cnt"), vocabCap)
@@ -2075,7 +2075,7 @@ object CorpusOps {
       docs: DataFrame, idCol: String, textCol: String, nBuckets: Int = 3,
       vocabCap: Int = Int.MaxValue, broadcastLm: Boolean = false): DataFrame = {
     require(nBuckets >= 2, s"nBuckets must be >= 2, got $nBuckets")
-    val scored = Dedup.lazyShare(lmQualityScore(docs, idCol, textCol, vocabCap, broadcastLm))
+    val scored = Exec.lazyShare(lmQualityScore(docs, idCol, textCol, vocabCap, broadcastLm))
     // bounded histogram + running count: ≤ ~10^4·ln(T+V) rows by construction
     val histCum = scored.groupBy(col("avg_nll")).agg(count(lit(1)).as("n_docs"))
       .withColumn("cum",
@@ -2170,8 +2170,8 @@ object CorpusOps {
           hashFunctions.word_shingles(col(textCol), 2))).as("f"))
       .select(col("doc_id"),
         hashFunctions.fnv1a64(col("f")).bitwiseAND(lit((buckets - 1).toLong)).as("b"))
-    val corpusFeats = Dedup.lazyShare(feats(corpus))
-    val tgtFeats = Dedup.lazyShare(feats(target))
+    val corpusFeats = Exec.lazyShare(feats(corpus))
+    val tgtFeats = Exec.lazyShare(feats(target))
     val cntT = tgtFeats.groupBy(col("b")).agg(count(lit(1)).as("ct"))
     val cntR = corpusFeats.groupBy(col("b")).agg(count(lit(1)).as("cr"))
     val totT = tgtFeats.agg(count(lit(1)).as("tt"))
@@ -2342,8 +2342,8 @@ object CorpusOps {
     def vocab(df: DataFrame, cntAs: String): DataFrame =
       df.select(explode(TextFunctions.words(col(textCol))).as("term"))
         .groupBy(col("term")).agg(count(lit(1)).as(cntAs))
-    val vo = Dedup.lazyShare(vocab(oldDocs, "cnt_old"))
-    val vn = Dedup.lazyShare(vocab(newDocs, "cnt_new"))
+    val vo = Exec.lazyShare(vocab(oldDocs, "cnt_old"))
+    val vn = Exec.lazyShare(vocab(newDocs, "cnt_new"))
     val to = vo.agg(sum(col("cnt_old")).as("__to"))
     val tn = vn.agg(sum(col("cnt_new")).as("__tn"))
     val pOld = TextFunctions.stableRound(
@@ -2486,7 +2486,7 @@ object CorpusOps {
    */
   def naiveBayesScore(docs: DataFrame, idCol: String, textCol: String,
       positive: Column, broadcastWeights: Boolean = false): DataFrame = {
-    val toks = Dedup.lazyShare(docs.select(col(idCol).as("doc_id"),
+    val toks = Exec.lazyShare(docs.select(col(idCol).as("doc_id"),
       positive.cast("boolean").as("__pos"),
       explode(TextFunctions.words(col(textCol))).as("term")))
     // NULL labels (a nullable predicate column) belong to NEITHER class —
@@ -2536,7 +2536,7 @@ object CorpusOps {
     val toks = docs.select(positive.cast("boolean").as("__pos"),
       explode(TextFunctions.words(col(textCol))).as("term"))
     // same NULL-label rule as naiveBayesScore: neither class
-    val cnt = Dedup.lazyShare(toks.groupBy(col("term")).agg(
+    val cnt = Exec.lazyShare(toks.groupBy(col("term")).agg(
       sum(when(col("__pos"), 1L).otherwise(0L)).as("cpos"),
       sum(when(!col("__pos"), 1L).otherwise(0L)).as("cneg")))
     val t = cnt.agg(sum(col("cpos")), sum(col("cneg")), count(lit(1))).head()
@@ -2628,7 +2628,7 @@ object CorpusOps {
     // rows no matter what the caller passes (an already-discretized score
     // re-rounds to itself)
     val s = TextFunctions.stableRound(col(scoreCol), scoreDigits)
-    val hist = Dedup.lazyShare(
+    val hist = Exec.lazyShare(
       df.groupBy(col(groupCol).as("__g"), s.as("__s"))
         .agg(count(lit(1)).as("__c")))
     val tot = hist.groupBy(col("__g")).agg(sum(col("__c")).as("__n"))
@@ -2696,7 +2696,7 @@ object CorpusOps {
   private[operators] def cappedVocab(counts: DataFrame, cap: Int): DataFrame = {
     require(cap > 0, s"vocabCap must be positive, got $cap")
     val spark = counts.sparkSession
-    val vocab = Dedup.lazyShare(counts)
+    val vocab = Exec.lazyShare(counts)
     val histCum = vocab.groupBy(col("cnt")).agg(count(lit(1)).as("__nt"))
       .withColumn("__cum",
         sum(col("__nt")).over(Window.orderBy(col("cnt").desc)))

@@ -166,124 +166,6 @@ object Dedup extends Logging {
   }
 
   /**
-   * Share one materialization of a deterministic intermediate that the
-   * surrounding plan reads more than once (both sides of a self-join, a
-   * band table plus its verification join), WITHOUT executing anything at
-   * construction: `persist` only registers the plan with the CacheManager
-   * (which also dedups repeated builds by canonicalized plan), whereas a
-   * lazy `localCheckpoint` force-plans its AQE stages eagerly — running
-   * real Spark jobs while the operator is merely being CONSTRUCTED, i.e.
-   * during `EXPLAIN` of any SQL TVF built on it.
-   */
-  private[graft] def lazyShare(df: DataFrame): DataFrame = {
-    // canonicalized-plan key: a re-share of an EQUIVALENT plan (same gate
-    // re-constructed, retry, second pass) touches the existing entry
-    // instead of adding a duplicate whose eviction would unpersist the
-    // newer share's one CacheManager entry out from under it
-    val key = df.queryExecution.analyzed.canonicalized
-    shareRegistry.synchronized {
-      shareRegistry.put(key, df)
-      if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE) {
-        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      }
-      while (shareRegistry.size() > LazyShareCap) {
-        val it = shareRegistry.entrySet().iterator()
-        val eldest = it.next(); it.remove()
-        // non-blocking: an in-flight reader of an evicted share recomputes
-        // from lineage (AsofFitted.release's contract); a stopped session
-        // just no-ops/throws harmlessly
-        try eldest.getValue.unpersist(false) catch { case _: Throwable => () }
-      }
-    }
-    df
-  }
-
-  /** Upper bound on live [[lazyShare]] cache entries. Shares are scoped to
-    * one operator construction (both sides of a self-join, a band table
-    * plus its verify join) but a plain `persist` has no release point — a
-    * long-lived driver constructing gates forever would accrete one
-    * corpus-scale cached relation per DISTINCT input (CacheManager dedups
-    * equivalent plans). The LRU registry below unpersists the eldest share
-    * past this cap: by then its gate's action has long finished, and a
-    * straggler reader only recomputes from lineage. */
-  private val LazyShareCap = 64
-
-  /** Insertion+access-ordered so the eldest entry is the least recently
-    * (re-)shared plan; bounded at [[LazyShareCap]] entries, so the registry
-    * itself cannot leak plan objects either. */
-  private val shareRegistry =
-    new java.util.LinkedHashMap[
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, DataFrame](
-      16, 0.75f, true)
-
-  /** Live share count (tests). */
-  private[graft] def lazyShareLive: Int =
-    shareRegistry.synchronized(shareRegistry.size())
-
-  /**
-   * Run independent Spark actions concurrently (guide §2.6: actions are
-   * only sequential because driver code calls them sequentially). Used
-   * where one epoch/fit produces several independent outputs — the
-   * survivor write and the index admission of a streaming dedup epoch,
-   * the band/shingle/segment tables of one index build — whose small jobs
-   * otherwise serialize their scheduling tails. Inputs shared through
-   * [[lazyShare]]/`persist` stay safe: cache blocks are computed under
-   * block-level locking, so concurrent first readers do not corrupt, at
-   * worst duplicate, the materialization. The first work item runs on the
-   * calling thread (fresh threads inherit the caller's job group /
-   * description via Spark's inheritable thread locals); every item is
-   * awaited, the first failure is rethrown with the others suppressed.
-   */
-  private[graft] def concurrently(works: Seq[() => Unit]): Unit = {
-    if (works.lengthCompare(1) <= 0) { works.foreach(_()); return }
-    val errs = new java.util.concurrent.CopyOnWriteArrayList[Throwable]()
-    val threads = works.tail.map { w =>
-      val t = new Thread(() => {
-        try w() catch { case e: Throwable => errs.add(e); () }
-      }, "graft-concurrent-action")
-      t.setDaemon(true)
-      t.start()
-      t
-    }
-    try works.head() catch { case e: Throwable => errs.add(0, e) }
-    threads.foreach(_.join())
-    if (!errs.isEmpty) {
-      val first = errs.get(0)
-      (1 until errs.size()).foreach(i => first.addSuppressed(errs.get(i)))
-      throw first
-    }
-  }
-
-  /** Two-action sugar for [[concurrently]]. */
-  private[graft] def concurrently(a: => Unit, b: => Unit): Unit =
-    concurrently(Seq(() => a, () => b))
-
-  /**
-   * Spread a physically tiny input before CPU-heavy per-row map work
-   * (tokenize / shingle / rolling-fingerprint kernels). A source whose
-   * plan-stats size is below ONE scan split planned as ~one scan
-   * partition — and a single-row-group parquet file cannot be split at
-   * all — so the whole fused per-row pipeline above it runs on one core
-   * while the rest of the machine idles (profiled: sequential 150-270 ms
-   * single-task stages). One metadata-scale hash exchange on the row key
-   * buys the map parallelism. Capped at 8 ways: the r16 A/B measured
-   * 8-way beating 32-way on sub-MB inputs (per-task constants dominate
-   * past ~8). Guard: an input of at least one split is left alone — a
-   * cluster-scale table is already parallel there, and the exchange
-   * would be a full corpus shuffle (guide §2: derive partitioning from
-   * input size, not a constant).
-   */
-  private[graft] def spreadCpuScan(df: DataFrame, key: String): DataFrame = {
-    val spark = df.sparkSession
-    val cores = spark.sparkContext.defaultParallelism
-    if (cores <= 1) return df
-    val split = spark.sessionState.conf.filesMaxPartitionBytes
-    val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (est > 0 && est < split) df.repartition(math.min(cores, 8), col(key))
-    else df
-  }
-
-  /**
    * The shared skew guard: drop index rows whose key (shingle, fingerprint,
    * LSH bucket) occurs in more than `cap` rows, recording what was dropped
    * under `tag`. The hot-key table is one narrow row per distinct key —
@@ -553,7 +435,7 @@ object Dedup extends Logging {
       k: Int = 3, threshold: Double = 0.5, maxShingleDf: Int = 1000): DataFrame = {
     // share the exploded index lazily: both sides of the self-join read it,
     // and without sharing the shingle computation runs twice
-    val sh = lazyShare(docs.select(
+    val sh = Exec.lazyShare(docs.select(
       col(idCol).as("doc_id"),
       array_distinct(TextFunctions.wordShingles(col(textCol), k)).as("sh"))
       .filter(size(col("sh")) > 0)
@@ -815,7 +697,7 @@ object Dedup extends Logging {
   private def bucketedPairs(
       banded0: DataFrame, bucketCol: String, maxBucketSize: Int, tag: String)
       : DataFrame = {
-    val banded = lazyShare(banded0)
+    val banded = Exec.lazyShare(banded0)
     val sized = dropHotKeys(banded, Seq("band", bucketCol), maxBucketSize, tag)
     val a = sized.as("a"); val b = sized.as("b")
     a.join(b, col(s"a.band") === col(s"b.band") &&
@@ -906,9 +788,12 @@ object Dedup extends Logging {
    * dedup are shallow (dups of dups), so rounds stay single-digit at any
    * corpus size; `maxIterations` bounds the worst case.
    */
-  /** Cost note (ClustersProfile at sf0.1): the upstream pair pipeline is
-    * ~90% of q_dedup_clusters' wall time; with the neighbor-min init below,
-    * label propagation converges in 1 round on the near-dup components. */
+  /** Cost note (sf0.1): the upstream pair pipeline is ~90% of
+    * q_dedup_clusters' wall time; with the neighbor-min init below, label
+    * propagation converges in 1 round on the near-dup components.
+    * `SPARK_GRAFT_SF_DIR=<sf0.1> Diag q_dedup_clusters 1` lists the jobs:
+    * those at the edge-list `localCheckpoint` below carry the pair
+    * pipeline, the propagation round's jobs follow. */
   def clusters(pairs: DataFrame, aCol: String = "doc_a", bCol: String = "doc_b",
       maxIterations: Int = 20): DataFrame = {
     // materialize the edge list once — every propagation round joins against
@@ -998,7 +883,7 @@ object Dedup extends Logging {
       docs: DataFrame, idCol: String, textCol: String,
       ngram: Int = 24, window: Int = 8, minShared: Int = 5,
       maxFingerprintDf: Int = 1000): DataFrame = {
-    val fp = lazyShare(spreadCpuScan(docs, idCol)
+    val fp = Exec.lazyShare(Exec.spreadCpuScan(docs, idCol)
       .select(col(idCol).as("doc_id"),
         explode(array_distinct(rolling_fingerprints(col(textCol), ngram, window))).as("f")))
     // df-cap: a fingerprint present in thousands of docs is a stop-phrase
@@ -1253,7 +1138,7 @@ object Dedup extends Logging {
         // actions over the SAME persisted rows, and the replay contract
         // above already covers every partial-completion interleaving
         // (retry excludes + overwrites the epoch's delta) — overlap them
-        if (admit) concurrently(
+        if (admit) Exec.concurrently(
           writeBatch(fresh, epochId),
           admitEpoch(fresh, keyCols, path, epochId))
         else writeBatch(fresh, epochId)
@@ -1529,9 +1414,9 @@ object Dedup extends Logging {
     require(numHashes % bands == 0, s"bands $bands must divide numHashes $numHashes")
     val spark = docs.sparkSession
     withIndexLease(indexFs(spark, path), path, "saveMinHashIndex") {
-      val base = lazyShare(shingleBase(docs, idCol, textCol, k, "doc_id"))
+      val base = Exec.lazyShare(shingleBase(docs, idCol, textCol, k, "doc_id"))
       // independent outputs from one shared base — overlap the two writes
-      concurrently(
+      Exec.concurrently(
         bandRows(base, "doc_id", numHashes, bands, seed)
           .write.mode("overwrite").parquet(s"$path/bands/epoch=-1"),
         hashedShingles(base, "doc_id")
@@ -1604,7 +1489,7 @@ object Dedup extends Logging {
     val spark = batch.sparkSession
     requireBroadcastSizedBatch(batch)
     val p = minHashParamsOf(spark, path)
-    val base = lazyShare(shingleBase(batch, idCol, textCol, p.k, "doc_id"))
+    val base = Exec.lazyShare(shingleBase(batch, idCol, textCol, p.k, "doc_id"))
     val bBand = dropHotKeys(
       bandRows(base, "doc_id", p.numHashes, p.bands, p.seed),
       Seq("band", "bucket"), maxBatchBucket, "minHashIndex")
@@ -1651,8 +1536,8 @@ object Dedup extends Logging {
       path: String): Unit = {
     val p = minHashParamsOf(batch.sparkSession, path)
     withIndexLease(indexFs(batch.sparkSession, path), path, "appendToMinHashIndex") {
-      val base = lazyShare(shingleBase(batch, idCol, textCol, p.k, "doc_id"))
-      concurrently(
+      val base = Exec.lazyShare(shingleBase(batch, idCol, textCol, p.k, "doc_id"))
+      Exec.concurrently(
         bandRows(base, "doc_id", p.numHashes, p.bands, p.seed)
           .write.mode("append").parquet(s"$path/bands/epoch=-1"),
         hashedShingles(base, "doc_id")
@@ -1680,7 +1565,7 @@ object Dedup extends Logging {
       try {
         // overlap write + admission ([[dedupStreamAgainstHashIndex]]'s
         // rationale): independent actions, replay-contract-covered
-        if (admit) concurrently(
+        if (admit) Exec.concurrently(
           writeBatch(fresh, epochId),
           admitMinHashEpoch(fresh, idCol, textCol, path, epochId))
         else writeBatch(fresh, epochId)
@@ -1690,9 +1575,9 @@ object Dedup extends Logging {
   private[graft] def admitMinHashEpoch(df: DataFrame, idCol: String,
       textCol: String, path: String, epochId: Long): Unit = {
     val p = minHashParamsOf(df.sparkSession, path)
-    val base = lazyShare(shingleBase(df, idCol, textCol, p.k, "doc_id"))
+    val base = Exec.lazyShare(shingleBase(df, idCol, textCol, p.k, "doc_id"))
     // independent outputs from one shared base — overlap the two writes
-    concurrently(
+    Exec.concurrently(
       bandRows(base, "doc_id", p.numHashes, p.bands, p.seed)
         .write.mode("overwrite").parquet(s"$path/bands/epoch=$epochId"),
       hashedShingles(base, "doc_id")

@@ -112,7 +112,7 @@ object Fuzzy {
       maxDist: Int, share: Boolean,
       maxSegmentDf: Int = Int.MaxValue): FuzzyFitted = {
     require(maxDist >= 1, s"maxDist must be >= 1, got $maxDist")
-    val shared = if (share) Dedup.lazyShare _ else identity[DataFrame] _
+    val shared = if (share) Exec.lazyShare _ else identity[DataFrame] _
     val ids = catalog
       .select(col(idCol).as("__lid"), col(keyCol).as("__lkey"))
       .filter(col("__lid").isNotNull && col("__lkey").isNotNull)
@@ -317,13 +317,13 @@ object Fuzzy {
       .select(col(idCol).as("__lid"), col(keyCol).as("__lkey"))
       .filter(col("__lid").isNotNull && col("__lkey").isNotNull)
       .distinct()
-    val keys = Dedup.lazyShare(ids.select(col("__lkey")).distinct())
+    val keys = Exec.lazyShare(ids.select(col("__lkey")).distinct())
     try {
       val (segIdx, shortIdx) = indexFrames(keys, maxDist, maxSegmentDf)
       // three independent tables of one slice — overlap the writes (the
       // first shared-`keys` reader materializes the cache under block
       // locking; the others read it)
-      Dedup.concurrently(Seq(
+      Exec.concurrently(Seq(
         () => segIdx.write.mode(mode).parquet(s"$path/segments/$epochDir"),
         () => shortIdx.write.mode(mode).parquet(s"$path/shorts/$epochDir"),
         () => ids.write.mode(mode).parquet(s"$path/ids/$epochDir")))
@@ -366,8 +366,8 @@ object Fuzzy {
     // output pairs. Segment/short duplicates are already harmless — the
     // candidate set dedups before the verify. One narrow 2-column
     // shuffle, paid once per load, shared across every probe.
-    FuzzyFitted(Dedup.lazyShare(t("segments")), Dedup.lazyShare(t("shorts")),
-      Dedup.lazyShare(t("ids").distinct()), maxDist)
+    FuzzyFitted(Exec.lazyShare(t("segments")), Exec.lazyShare(t("shorts")),
+      Exec.lazyShare(t("ids").distinct()), maxDist)
   }
 
   /** Admit a catalog delta: index ONLY the new slice's distinct keys

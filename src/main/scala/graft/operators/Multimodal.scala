@@ -445,7 +445,7 @@ object Multimodal {
       try {
         // overlap write + admission ([[Dedup.dedupStreamAgainstHashIndex]]'s
         // rationale): independent actions, replay-contract-covered
-        if (admit) Dedup.concurrently(
+        if (admit) Exec.concurrently(
           writeBatch(fresh, epochId),
           admitPhashEpoch(fresh, path, epochId, codec))
         else writeBatch(fresh, epochId)

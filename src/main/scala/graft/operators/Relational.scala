@@ -250,7 +250,7 @@ object Relational {
       sort_array(collect_list(when(col(s"__r_$d").isNotNull,
         struct(col("__t").as("t"), col(s"__r_$d").as("v"))))).as(s"__arr_$d")
     }
-    val perBucket = Dedup.lazyShare(dedup.groupBy(col("__key"), col("__bkt"))
+    val perBucket = Exec.lazyShare(dedup.groupBy(col("__key"), col("__bkt"))
       .agg(arrAggs.head, arrAggs.tail: _*))
     // per key: the <=CumSumBuckets bucket summaries (bucket, last value per
     // column), sorted by bucket — the probe computes any bucket's carry-in
@@ -262,7 +262,7 @@ object Relational {
           try_element_at(col(s"__arr_$d"), lit(-1)).getField("v").as(s"last_$d")): _*)))
         .as("__summary"))
       .select(col("__key").as("__skey"), col("__summary"))
-    AsofFitted(perBucket, Dedup.lazyShare(byKey), bucket, maxBkt, rightCols)
+    AsofFitted(perBucket, Exec.lazyShare(byKey), bucket, maxBkt, rightCols)
   }
 
   /** Probe a fitted as-of right side ([[asofFit]]): attach each left row's

@@ -807,7 +807,7 @@ object Similarity extends org.apache.spark.internal.Logging {
     // update re-stringified all of them; the share collapses the plan to
     // one subtree + InMemoryRelation reads (persist is lazy — EXPLAIN
     // still runs zero jobs)
-    val sized = Dedup.lazyShare(
+    val sized = Exec.lazyShare(
       Dedup.dropHotKeys(idx, Seq("cell"), maxCellSize, "semanticDedup")
         .withColumn("v", col("v").cast("array<double>")))
     // the pair join is pinned to the documented scale shape — SHUFFLE

@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.GraftSession
 
 /**
  * Multi-JVM proof that slow-partition throttling (ref R3) works WITHOUT the
@@ -20,17 +21,16 @@ import org.apache.spark.sql.functions._
  * at 1 (ThrottlerSpec asserts on that line from a subprocess).
  */
 object ClusterThrottleCheck {
-  /** JDK 17 module opens Spark needs outside spark-submit — the executor
-    * processes need them too (mirrors build.sbt's list). */
-  val JdkAddOpens: Seq[String] = Seq(
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar",
-  ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
+  /** The `--add-opens=…` flags this JVM was started with (build.sbt's list,
+    * which Spark needs outside spark-submit). The JVM reports each in that
+    * single-argument form, which both `java` and
+    * `spark.executor.extraJavaOptions` accept, so a child JVM or executor
+    * gets exactly the opens its parent has. */
+  def jvmAddOpens: Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments
+      .asScala.toSeq.filter(_.startsWith("--add-opens="))
+  }
 
   def main(args: Array[String]): Unit = {
     // the worker's executor launcher resolves the Spark distribution from
@@ -38,15 +38,9 @@ object ClusterThrottleCheck {
     if (System.getenv("SPARK_HOME") == null)
       System.setProperty("spark.test.home", "/opt/spark")
     // spark.* system properties are rejected in executor extraJavaOptions
-    val execOpts = JdkAddOpens.mkString(" ")
-    val spark = SparkSession.builder()
-      .master("local-cluster[2,1,1024]")
-      .appName("graft-cluster-throttle-check")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.executor.extraClassPath", System.getProperty("java.class.path"))
-      .config("spark.executor.extraJavaOptions", execOpts)
-      .getOrCreate()
+    val spark = GraftSession(cpus = 4, master = "local-cluster[2,1,1024]", overrides = Map(
+      "spark.executor.extraClassPath" -> System.getProperty("java.class.path"),
+      "spark.executor.extraJavaOptions" -> jvmAddOpens.mkString(" ")))
     try {
       import spark.implicits._
       val base = java.nio.file.Files.createTempDirectory("graft-cluster-thr").toString

@@ -1,10 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.GraftEventLog
+import graft.{GraftEventLog, GraftSession}
 import graft.sources.{Event, EventLogRegistry}
 
 /**
@@ -13,14 +12,7 @@ import graft.sources.{Event, EventLogRegistry}
  */
 object Demo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(cpus = 4)
     import spark.implicits._
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -2,26 +2,26 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
-import graft.SparkEntry
+import graft.{GraftSession, SparkEntry}
 
-/** Dumps formatted physical plans of the headline queries to docs/PLANS.md —
-  * the plan-review artifact (pushdown, pruning, join strategies, codegen
-  * spans) kept current by re-running this main. */
+/** Formatted physical plans of gates — the plan-review artifact (pushdown,
+  * pruning, join strategies, codegen spans).
+  *  - `runMain graft.tools.ExplainDump [sfDir]` regenerates docs/PLANS.md
+  *    from the headline gates below (sfDir defaults to sf0.001);
+  *  - `runMain graft.tools.ExplainDump <sfDir> <outDir> <suffix> <gate[,gate…]>`
+  *    writes `<outDir>/<gate>_<suffix>.txt` per named gate (before/after
+  *    plan artifacts of an optimization round). */
 object ExplainDump {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        "graft.streaming.LocalCheckpointFileManager")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    // a fixed local[8]: the dumped plans print partition counts, so they
+    // must not change with the machine that regenerates them
+    val spark = GraftSession(cpus = 8)
     spark.sparkContext.setLogLevel("ERROR")
+    def explain(name: String): String = SparkEntry.queries(name)(spark, dir)
+      .queryExecution.explainString(ExplainMode.fromString("formatted"))
 
     val picks = Seq(
       "q_agg_pricing", "q_join_broadcast", "q_join_multi", "q_window_rank",
@@ -54,21 +54,35 @@ object ExplainDump {
       "q_group_drift", "q_fuzzy_persisted", "q_multimodal_dedup",
       "q_multimodal_dedup_incremental", "q_corpus_pack_bestfit",
       "q_group_cat_drift")
-    val sb = new StringBuilder
-    sb.append("# PLANS — formatted physical plans of headline queries\n\n")
-    sb.append("Generated by `sbt \"runMain graft.tools.ExplainDump\"` at sf0.001.\n")
-    sb.append("Reviewed-for: pushdown reaching scans (PushedFilters / narrowed\n")
-    sb.append("ranges), column pruning (ReadSchema), broadcast joins on dims,\n")
-    sb.append("whole-stage codegen spans (`*(n)` prefixes), AQE nodes.\n\n")
-    for (name <- picks) {
-      val df = SparkEntry.queries(name)(spark, dir)
-      sb.append(s"## $name\n\n```\n")
-      sb.append(df.queryExecution.explainString(ExplainMode.fromString("formatted")).trim)
-      sb.append("\n```\n\n")
+    args.drop(1) match {
+      case Array(outDir, suffix, gates) =>
+        Files.createDirectories(Paths.get(outDir))
+        for (name <- gates.split(',')) {
+          val out = Paths.get(outDir, s"${name}_$suffix.txt")
+          Files.writeString(out, explain(name))
+          println(s"dumped $name -> $out")
+        }
+      case Array() =>
+        val sb = new StringBuilder
+        sb.append("# PLANS — formatted physical plans of headline queries\n\n")
+        val arg = if (args.isEmpty) "" else s" $dir"
+        sb.append(s"Generated by `sbt \"runMain graft.tools.ExplainDump$arg\"` at " +
+          s"${Paths.get(dir).getFileName}.\n")
+        sb.append("Reviewed-for: pushdown reaching scans (PushedFilters / narrowed\n")
+        sb.append("ranges), column pruning (ReadSchema), broadcast joins on dims,\n")
+        sb.append("whole-stage codegen spans (`*(n)` prefixes), AQE nodes.\n\n")
+        for (name <- picks) {
+          sb.append(s"## $name\n\n```\n")
+          sb.append(explain(name).trim)
+          sb.append("\n```\n\n")
+        }
+        Files.createDirectories(Paths.get("docs"))
+        Files.writeString(Paths.get("docs/PLANS.md"), sb.toString)
+        println(s"wrote docs/PLANS.md (${picks.size} plans)")
+      case _ =>
+        System.err.println(
+          "usage: ExplainDump [sfDir] | ExplainDump <sfDir> <outDir> <suffix> <gate[,gate…]>")
     }
-    Files.createDirectories(Paths.get("docs"))
-    Files.writeString(Paths.get("docs/PLANS.md"), sb.toString)
-    println(s"wrote docs/PLANS.md (${picks.size} plans)")
     spark.stop()
   }
 }

@@ -5,19 +5,9 @@ import org.apache.spark.sql.SparkSession
 /** One shared local session for all suites (forked test JVM). */
 object SparkTestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // tests checkpoint to local disk/tmpfs only: the NIO manager (no
-      // Hadoop local-FS subprocess stats) is the engine's local-path
-      // default, so the suites exercise the same code path the bench runs
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        "graft.streaming.LocalCheckpointFileManager")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // a fixed local[4], not the host's cpu count: plan-shape assertions
+    // and partition counts in the suites must not depend on the machine
+    val s = GraftSession(cpus = 4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -207,10 +207,10 @@ class RateLimiterPropertySpec extends AnyFunSuite {
     // SparkContext (one context per JVM).
     val javaBin = System.getProperty("java.home") + "/bin/java"
     val cp = System.getProperty("java.class.path")
-    val cmd = (Seq(javaBin) ++ graft.tools.ClusterThrottleCheck.JdkAddOpens ++
-      Seq("-Xmx1g", "-Dspark.ui.enabled=false",
-        "-Dspark.sql.session.timeZone=UTC", "-cp", cp,
-        "graft.tools.ClusterThrottleCheck")).toList
+    // the child gets this JVM's own --add-opens flags: build.sbt holds the
+    // one list
+    val cmd = (Seq(javaBin) ++ graft.tools.ClusterThrottleCheck.jvmAddOpens ++
+      Seq("-Xmx1g", "-cp", cp, "graft.tools.ClusterThrottleCheck")).toList
     val pb = new ProcessBuilder(cmd: _*)
     pb.environment().put("SPARK_SCALA_VERSION", "2.13")
     pb.redirectErrorStream(true)
