@@ -4,13 +4,9 @@ import java.util.concurrent.ConcurrentHashMap
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
-import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.{MessageType, MessageTypeParser}
 import org.apache.spark.internal.Logging
 
@@ -55,6 +51,17 @@ import types._
  * and range reads are footer/listing arithmetic plus a bounded read of the
  * overlapping files — no Spark session, no driver-held data, same as the
  * read contract of [[ParquetEventLog]].
+ *
+ * Commit cost: every file goes through [[ParquetIO]] — one shared,
+ * read-only Hadoop conf, and parquet readers given explicit options —
+ * because a fresh `Configuration` costs 7-9 ms, and with one per staged
+ * file, footer and reader the driver commit of a 16-file epoch took
+ * 300-400 ms. The commit then does work in proportion to THIS epoch's files:
+ * each partition's next segment id comes from a per-(path, partition)
+ * tail cache, checked only against the existence of `seg-<next>` (an
+ * existing one means another writer appended: re-list), and each renamed
+ * file's footer row count carries over to its segment name, so nothing
+ * re-lists or re-opens the log's older segments.
  */
 object DurableEventLog extends EventLogClient with Logging {
 
@@ -78,9 +85,6 @@ object DurableEventLog extends EventLogClient with Logging {
       |  repeated binary sysprop_vals (UTF8);
       |}""".stripMargin)
 
-  private def hconf = new Configuration()
-  private def fsFor(path: String): FileSystem = new Path(path).getFileSystem(hconf)
-
   // ---- creation / validation ----
 
   private val metaCache = new ConcurrentHashMap[String, Int]()
@@ -90,7 +94,7 @@ object DurableEventLog extends EventLogClient with Logging {
     * re-route every partitionKey. */
   def create(path: String, partitions: Int): Unit = {
     require(partitions > 0, s"partitions must be positive, got $partitions")
-    val fs = fsFor(path)
+    val fs = ParquetIO.fs(path)
     val meta = new Path(path, "_meta/partitions")
     if (fs.exists(meta)) {
       val existing = readPartitions(fs, meta)
@@ -120,13 +124,13 @@ object DurableEventLog extends EventLogClient with Logging {
   }
 
   def exists(path: String): Boolean =
-    fsFor(path).exists(new Path(path, "_meta/partitions"))
+    ParquetIO.fs(path).exists(new Path(path, "_meta/partitions"))
 
   /** Partition count from the on-disk meta (the truth; the conf's count is
     * only used at creation). Cached — immutable once created. */
   private def partitionsOf(path: String): Int =
     metaCache.computeIfAbsent(path, p => {
-      val fs = fsFor(p)
+      val fs = ParquetIO.fs(p)
       val meta = new Path(p, "_meta/partitions")
       if (!fs.exists(meta)) throw new IllegalArgumentException(
         s"durable event-log path not initialized: $p (write to it first, or " +
@@ -145,25 +149,54 @@ object DurableEventLog extends EventLogClient with Logging {
   /** Drop cached metadata (tests; simulates a fresh process). */
   def invalidate(path: String): Unit = {
     metaCache.remove(path)
-    fileRows.keySet().removeIf(_.startsWith(path))
+    val root = ParquetIO.fs(path).makeQualified(new Path(path)).toString + "/"
+    footers.keySet().removeIf(_.startsWith(root))
+    segTail.keySet().removeIf(_._1 == path)
     ()
   }
 
   // ---- segment listing / footer arithmetic ----
 
-  /** Per-segment-file row count (immutable once written — segments are
-    * never rewritten — so a process-wide cache is exact). */
-  private val fileRows = new ConcurrentHashMap[String, java.lang.Long]()
+  /** One file's footer summary: its row count, and its ts_micros max over
+    * all row groups (Long.MaxValue when stats are absent, forcing the scan
+    * — never a silently wrong skip). */
+  private final case class Footer(rows: Long, tsMax: Long)
 
-  private def rowsOf(fs: FileSystem, f: Path): Long =
-    fileRows.computeIfAbsent(f.toString, _ => {
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, hconf))
-      try java.lang.Long.valueOf(r.getRecordCount) finally r.close()
-    }).longValue()
+  /** Footer summaries by qualified file path (immutable once written —
+    * segments are never rewritten — so a process-wide cache is exact). */
+  private val footers = new ConcurrentHashMap[String, Footer]()
+
+  private def footerOf(f: Path): Footer =
+    footers.computeIfAbsent(f.toString, _ => readFooter(f))
+
+  private def readFooter(f: Path): Footer = {
+    val r = ParquetIO.openFooter(f)
+    try {
+      val tsMax =
+        try {
+          import scala.jdk.CollectionConverters._
+          val idx = r.getFileMetaData.getSchema.getFieldIndex("ts_micros")
+          val maxes = r.getFooter.getBlocks.asScala.map { b =>
+            val s = b.getColumns.get(idx).getStatistics
+            if (s == null || !s.hasNonNullValue) Long.MaxValue
+            else s.genericGetMax.asInstanceOf[java.lang.Long].longValue()
+          }
+          if (maxes.isEmpty) Long.MinValue else maxes.max
+        } catch {
+          case scala.util.control.NonFatal(_) => Long.MaxValue
+        }
+      Footer(r.getRecordCount, tsMax)
+    } finally r.close()
+  }
+
+  private def segDirOf(fs: FileSystem, path: String, pid: PartitionId): Path =
+    fs.makeQualified(new Path(path, s"segments/p=$pid"))
+
+  private def segFile(segDir: Path, id: Long): Path = new Path(segDir, f"seg-$id%012d.parquet")
 
   /** A partition's segment files in segment-id order (the seqNo order). */
   private def segmentsOf(fs: FileSystem, path: String, pid: PartitionId): Seq[Path] = {
-    val dir = new Path(path, s"segments/p=$pid")
+    val dir = segDirOf(fs, path, pid)
     if (!fs.exists(dir)) Seq.empty
     else fs.listStatus(dir).map(_.getPath)
       .filter(p => p.getName.startsWith("seg-") && p.getName.endsWith(".parquet"))
@@ -173,15 +206,29 @@ object DurableEventLog extends EventLogClient with Logging {
   private def segIdOf(p: Path): Long =
     p.getName.stripPrefix("seg-").stripSuffix(".parquet").toLong
 
+  private def listedNextSegId(fs: FileSystem, path: String, pid: PartitionId): Long =
+    segmentsOf(fs, path, pid).lastOption.map(segIdOf(_) + 1).getOrElse(0L)
+
+  /** Next segment id per (path, partition) as the last commit in this JVM
+    * left it. Trusted only while `seg-<next>` does not exist: if it does,
+    * another writer appended, and the partition is listed again. */
+  private val segTail = new ConcurrentHashMap[(String, PartitionId), java.lang.Long]()
+
+  private def nextSegId(fs: FileSystem, path: String, pid: PartitionId): Long = {
+    val cached = segTail.get((path, pid))
+    if (cached != null && !fs.exists(segFile(segDirOf(fs, path, pid), cached))) cached
+    else listedNextSegId(fs, path, pid)
+  }
+
   // ---- EventLogClient ----
 
   override def partitionCount(name: String): Int = partitionsOf(parseName(name)._1)
 
   override def boundedSeqNos(name: String): Map[PartitionId, (SequenceNumber, SequenceNumber)] = {
     val (path, _) = parseName(name)
-    val fs = fsFor(path)
+    val fs = ParquetIO.fs(path)
     (0 until partitionsOf(path)).map { pid =>
-      val latest = segmentsOf(fs, path, pid).map(rowsOf(fs, _)).sum
+      val latest = segmentsOf(fs, path, pid).map(footerOf(_).rows).sum
       pid -> ((0L, latest))
     }.toMap
   }
@@ -189,7 +236,7 @@ object DurableEventLog extends EventLogClient with Logging {
   override def receive(name: String, pid: PartitionId, from: SequenceNumber, count: Long)
       : Iterator[(SequenceNumber, Event)] = {
     val (path, _) = parseName(name)
-    val fs = fsFor(path)
+    val fs = ParquetIO.fs(path)
     val until0 = if (count > Long.MaxValue - from) Long.MaxValue else from + count
     val out = ArrayBuffer.empty[(SequenceNumber, Event)]
     var seq = 0L
@@ -197,9 +244,9 @@ object DurableEventLog extends EventLogClient with Logging {
     var i = 0
     while (i < segs.length && seq < until0) {
       val f = segs(i)
-      val n = rowsOf(fs, f)
+      val n = footerOf(f).rows
       if (seq + n > from) { // overlaps the requested range
-        val reader = ParquetReader.builder(new GroupReadSupport(), f).withConf(hconf).build()
+        val reader = ParquetIO.groupReader(f)
         try {
           var g = reader.read()
           var s = seq
@@ -221,12 +268,12 @@ object DurableEventLog extends EventLogClient with Logging {
     // exact semantics — no sortedness assumption); whole segments whose
     // footer ts max is below the target are skipped by arithmetic
     val (path, _) = parseName(name)
-    val fs = fsFor(path)
+    val fs = ParquetIO.fs(path)
     var seq = 0L
     for (f <- segmentsOf(fs, path, pid)) {
-      val n = rowsOf(fs, f)
-      if (tsMaxOf(fs, f) >= micros) {
-        val reader = ParquetReader.builder(new GroupReadSupport(), f).withConf(hconf).build()
+      val footer = footerOf(f)
+      if (footer.tsMax >= micros) {
+        val reader = ParquetIO.groupReader(f)
         try {
           var g = reader.read()
           var s = seq
@@ -237,30 +284,10 @@ object DurableEventLog extends EventLogClient with Logging {
           }
         } finally reader.close()
       }
-      seq += n
+      seq += footer.rows
     }
     seq
   }
-
-  /** Footer ts_micros max over all row groups (Long.MaxValue when stats are
-    * absent, forcing the scan — never a silently wrong skip). Cached. */
-  private val fileTsMax = new ConcurrentHashMap[String, java.lang.Long]()
-  private def tsMaxOf(fs: FileSystem, f: Path): Long =
-    fileTsMax.computeIfAbsent(f.toString, _ => {
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, hconf))
-      try {
-        import scala.jdk.CollectionConverters._
-        val idx = r.getFileMetaData.getSchema.getFieldIndex("ts_micros")
-        val maxes = r.getFooter.getBlocks.asScala.map { b =>
-          val s = b.getColumns.get(idx).getStatistics
-          if (s == null || !s.hasNonNullValue) Long.MaxValue
-          else s.genericGetMax.asInstanceOf[java.lang.Long].longValue()
-        }
-        java.lang.Long.valueOf(if (maxes.isEmpty) Long.MinValue else maxes.max)
-      } catch {
-        case scala.util.control.NonFatal(_) => java.lang.Long.valueOf(Long.MaxValue)
-      } finally r.close()
-    }).longValue()
 
   /** One-event append: a single-row segment under the lease. Correct but
     * file-per-event — the sink's staged batches are the throughput path;
@@ -274,12 +301,11 @@ object DurableEventLog extends EventLogClient with Logging {
         .getOrElse(math.floorMod(sendRoundRobin.getAndIncrement(), partitions.toLong).toInt))
     require(target >= 0 && target < partitions,
       s"partition id $target out of range [0, $partitions)")
-    val fs = fsFor(path)
+    val fs = ParquetIO.fs(path)
     graft.operators.Dedup.withIndexLease(fs, path, "durableSend") {
-      val dir = new Path(path, s"segments/p=$target")
+      val dir = segDirOf(fs, path, target)
       fs.mkdirs(dir)
-      val next = segmentsOf(fs, path, target).lastOption.map(segIdOf(_) + 1).getOrElse(0L)
-      writeSegment(new Path(dir, f"seg-$next%012d.parquet"), Seq(event))
+      writeSegment(segFile(dir, listedNextSegId(fs, path, target)), Seq(event))
     }
     ()
   }
@@ -288,9 +314,7 @@ object DurableEventLog extends EventLogClient with Logging {
   // ---- encode / decode ----
 
   private[sources] def writeSegment(file: Path, events: Iterable[Event]): Long = {
-    val writer = ExampleParquetWriter.builder(
-        org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(file, hconf))
-      .withType(EventSchema).withConf(hconf).build()
+    val writer = ParquetIO.writer(file, EventSchema)
     val factory = new SimpleGroupFactory(EventSchema)
     var n = 0L
     try events.foreach { e =>
@@ -343,7 +367,7 @@ object DurableEventLog extends EventLogClient with Logging {
   private[sources] def stageTask(path: String, queryId: String, epochId: Long,
       taskPartition: Int, taskId: Long,
       rowsByPid: Map[Int, Seq[Event]]): String = {
-    val fs = fsFor(path)
+    val fs = ParquetIO.fs(path)
     val taskDirName = s"t$taskPartition-$taskId"
     val dir = new Path(stagingDir(path, queryId, epochId), taskDirName)
     fs.delete(dir, true) // replace a previous attempt's partial staging
@@ -357,7 +381,7 @@ object DurableEventLog extends EventLogClient with Logging {
   /** EXECUTOR-side abort: drop this task's staged files. */
   private[sources] def discardTask(path: String, queryId: String, epochId: Long,
       taskPartition: Int, taskId: Long): Unit = {
-    val fs = fsFor(path)
+    val fs = ParquetIO.fs(path)
     fs.delete(new Path(stagingDir(path, queryId, epochId), s"t$taskPartition-$taskId"), true)
     ()
   }
@@ -366,7 +390,7 @@ object DurableEventLog extends EventLogClient with Logging {
     * idempotence survives driver restarts (unlike the in-memory sink's
     * process map). */
   private[sources] def epochCommitted(path: String, queryId: String, epochId: Long): Boolean =
-    fsFor(path).exists(commitMarker(path, queryId, epochId))
+    ParquetIO.fs(path).exists(commitMarker(path, queryId, epochId))
 
   /** DRIVER-side commit under the lease: rename the successful tasks'
     * staged files into the partition segment sequences in the given order,
@@ -376,7 +400,7 @@ object DurableEventLog extends EventLogClient with Logging {
     * duplicates are swept and -1 is returned (nothing re-publishes). */
   private[sources] def publishStaged(path: String, queryId: String, epochId: Long,
       taskDirsInOrder: Seq[String]): Long = {
-    val fs = fsFor(path)
+    val fs = ParquetIO.fs(path)
     graft.operators.Dedup.withIndexLease(fs, path, "durablePublish") {
       val epochDir = stagingDir(path, queryId, epochId)
       if (epochCommitted(path, queryId, epochId)) {
@@ -396,19 +420,24 @@ object DurableEventLog extends EventLogClient with Logging {
             .sortBy(p => p.getName.stripPrefix("p").stripSuffix(".parquet").toInt)
             .foreach { f =>
               val pid = f.getName.stripPrefix("p").stripSuffix(".parquet").toInt
-              val segDir = new Path(path, s"segments/p=$pid")
+              val segDir = segDirOf(fs, path, pid)
               fs.mkdirs(segDir)
-              val next = nextSeg.getOrElseUpdate(pid,
-                segmentsOf(fs, path, pid).lastOption.map(segIdOf(_) + 1).getOrElse(0L))
-              published += rowsOf(fs, f)
-              val dest = new Path(segDir, f"seg-$next%012d.parquet")
-              fileRows.remove(f.toString) // key moves with the file
+              val next = nextSeg.getOrElseUpdate(pid, nextSegId(fs, path, pid))
+              val footer = readFooter(f)
+              published += footer.rows
+              val dest = segFile(segDir, next)
+              // local rename(2) silently replaces an existing destination
+              if (fs.exists(dest)) throw new IllegalStateException(
+                s"staged-write commit for $path epoch $epochId: segment $dest " +
+                  "already exists; refusing to replace it")
               if (!fs.rename(f, dest)) throw new IllegalStateException(
                 s"staged-write commit for $path epoch $epochId: rename " +
                   s"$f -> $dest failed")
+              footers.put(dest.toString, footer) // the footer moves with the file
               nextSeg.put(pid, next + 1)
             }
         }
+        nextSeg.foreach { case (pid, next) => segTail.put((path, pid), next) }
         val marker = commitMarker(path, queryId, epochId)
         fs.mkdirs(marker.getParent)
         fs.create(marker, true).close()
@@ -421,7 +450,7 @@ object DurableEventLog extends EventLogClient with Logging {
   /** DRIVER-side abort: sweep the epoch's staging, leave the epoch OPEN
     * (no marker) — a restart legitimately re-runs it. */
   private[sources] def sweepStaged(path: String, queryId: String, epochId: Long): Unit = {
-    val fs = fsFor(path)
+    val fs = ParquetIO.fs(path)
     fs.delete(stagingDir(path, queryId, epochId), true)
     ()
   }

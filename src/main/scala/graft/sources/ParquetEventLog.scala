@@ -5,15 +5,10 @@ import java.util.concurrent.ConcurrentHashMap
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.Group
-import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
-import org.apache.parquet.hadoop.api.ReadSupport
-import org.apache.parquet.hadoop.example.GroupReadSupport
-import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.hadoop.ParquetReader
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, MessageTypeParser}
 import org.apache.spark.internal.Logging
 
@@ -92,7 +87,6 @@ object ParquetEventLog extends EventLogClient with Logging {
 
   private val metaCache = new ConcurrentHashMap[String, LogMeta]()
   private val seekCache = new ConcurrentHashMap[(String, Long), Map[PartitionId, SequenceNumber]]()
-  private def hconf = new Configuration()
 
   def validate(path: String): Unit = { metaFor(path); () }
 
@@ -116,7 +110,7 @@ object ParquetEventLog extends EventLogClient with Logging {
 
   private def listFiles(path: String): Seq[Path] = {
     val p = new Path(path)
-    val fs = p.getFileSystem(hconf)
+    val fs = ParquetIO.fs(path)
     val st = fs.getFileStatus(p) // throws FileNotFoundException for bad paths
     if (!st.isDirectory) Seq(p)
     else fs.listStatus(p).toSeq.map(_.getPath)
@@ -134,7 +128,7 @@ object ParquetEventLog extends EventLogClient with Logging {
     var tsUnit: LogicalTypeAnnotation.TimeUnit = LogicalTypeAnnotation.TimeUnit.NANOS
     var statsOk = true
     val fms = files.map { f =>
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, hconf))
+      val r = ParquetIO.openFooter(f)
       try {
         val footer = r.getFooter
         val schema = footer.getFileMetaData.getSchema
@@ -291,13 +285,8 @@ object ParquetEventLog extends EventLogClient with Logging {
       meta: LogMeta,
       file: String,
       fields: Seq[String],
-      filter: Option[FilterPredicate]): ParquetReader[Group] = {
-    val conf = hconf
-    conf.set(ReadSupport.PARQUET_READ_SCHEMA, project(meta, fields).toString)
-    val b = ParquetReader.builder(new GroupReadSupport(), new Path(file)).withConf(conf)
-    filter.foreach(f => b.withFilter(FilterCompat.get(f)))
-    b.build()
-  }
+      filter: Option[FilterPredicate]): ParquetReader[Group] =
+    ParquetIO.groupReader(new Path(file), Some(project(meta, fields)), filter)
 
   private def idRangeFilter(lo: Long, hi: Long): FilterPredicate =
     FilterApi.and(

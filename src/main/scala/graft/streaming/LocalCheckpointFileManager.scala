@@ -27,8 +27,9 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
  * Semantics match Spark's rename-based managers:
  *  - `createAtomic` writes to a hidden temp file in the target directory
  *    and renames it into place on `close()`; with `overwriteIfPossible =
- *    false` an existing target raises `FileAlreadyExistsException`, which
- *    `HDFSMetadataLog` uses to detect a concurrent committer.
+ *    false` it hard-links it into place instead, so an existing target
+ *    raises `FileAlreadyExistsException`, which `HDFSMetadataLog` uses to
+ *    detect a concurrent committer.
  *  - `delete` is recursive and silent on missing paths; `list` on a missing
  *    path raises `FileNotFoundException` (callers distinguish the two).
  *
@@ -80,14 +81,13 @@ class LocalCheckpointFileManager(path: Path, conf: Configuration)
                 StandardCopyOption.REPLACE_EXISTING)
             } else {
               // On Linux, ATOMIC_MOVE without REPLACE_EXISTING still maps to
-              // rename(2), which silently replaces an existing destination —
-              // NIO only throws FileAlreadyExistsException on filesystems
-              // where the distinction is native. An existing target must
-              // surface as FileAlreadyExistsException (HDFSMetadataLog's
-              // concurrent-committer signal), so check explicitly first.
-              // Same benign TOCTOU window as Spark's rename-based manager.
-              if (Files.exists(dst.toPath)) throw new NioFileAlreadyExists(dst.toString)
-              Files.move(tmp.toPath, dst.toPath, StandardCopyOption.ATOMIC_MOVE)
+              // rename(2), which silently replaces an existing destination.
+              // link(2) instead fails natively when the target exists, so of
+              // two concurrent committers exactly one wins and the other gets
+              // FileAlreadyExistsException (HDFSMetadataLog's
+              // concurrent-committer signal) — no exists-then-rename window.
+              Files.createLink(dst.toPath, tmp.toPath)
+              Files.delete(tmp.toPath)
             }
           } catch {
             case e: NioFileAlreadyExists =>

@@ -7,17 +7,33 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 class HarnessSpec extends AnyFunSuite {
+  private def scalaFiles(roots: String*): Seq[Path] = roots.flatMap { root =>
+    val walk = Files.walk(Paths.get(root))
+    try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+    finally walk.close()
+  }
+
   test("sessions are built in GraftSession.scala and nowhere else") {
-    val sources = Seq("src/main/scala", "src/test/scala").flatMap { root =>
-      val walk = Files.walk(Paths.get(root))
-      try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
-      finally walk.close()
-    }
+    val sources = scalaFiles("src/main/scala", "src/test/scala")
     assert(sources.exists(_.endsWith("GraftSession.scala")))
     val needle = "SparkSession" + ".builder" // split so this file does not match
     val copies = sources.filter((p: Path) => Files.readString(p).contains(needle))
       .map(_.toString).filterNot(_.endsWith("/GraftSession.scala"))
     assert(copies.isEmpty, s"build sessions through graft.GraftSession, not in $copies")
+  }
+
+  test("Hadoop confs and parquet readers are built in ParquetIO.scala and nowhere else") {
+    // each of these parses core-default.xml again (7-9 ms a call); ParquetIO
+    // holds the one shared conf and opens parquet files with explicit options
+    val sources = scalaFiles("src/main/scala")
+    assert(sources.exists(_.toString.endsWith("/sources/ParquetIO.scala")))
+    val needles = Seq("new Configuration()", "ParquetFileReader.open(", "ParquetReader.builder(")
+    val copies = for {
+      p <- sources if !p.toString.endsWith("/sources/ParquetIO.scala")
+      text = Files.readString(p)
+      n <- needles if text.contains(n)
+    } yield s"$p: $n"
+    assert(copies.isEmpty, s"open parquet files through graft.sources.ParquetIO, not in $copies")
   }
 
   test("Bench.r4 keeps a failed query's small negative marker negative") {

@@ -685,4 +685,75 @@ class ConnectorSinkSpec extends AnyFunSuite {
     sw.commit(2L, Array.empty)
     assert(total() == 9)
   }
+
+  test("durable log: invalidate drops footer timestamp maxima with the rest") {
+    val root = java.nio.file.Files.createTempDirectory("graft-durable-ts").toString + "/log"
+    val name = DurableEventLog.logName(root, 1)
+    def writeLog(tsMicros: Seq[Long]): Unit = {
+      DurableEventLog.create(root, 1)
+      tsMicros.foreach(t => DurableEventLog.send(name, Event(s"e$t".getBytes, t), Some(0), None))
+    }
+    writeLog(Seq(1000L, 2000L, 3000L))
+    assert(DurableEventLog.seekEnqueuedTime(name, 0, 2500L) == 2)
+    // the same path, re-created with later timestamps by "another process"
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
+    writeLog(Seq(10000L, 20000L, 30000L))
+    DurableEventLog.invalidate(root) // simulates a fresh process
+    assert(DurableEventLog.seekEnqueuedTime(name, 0, 5000L) == 0,
+      "a stale footer maximum skipped the re-created log's first segment")
+  }
+
+  test("durable sink: a foreign append between epochs is never renamed over") {
+    val partitions = 2
+    EventLogRegistry.drop("w7src")
+    val src = EventLogRegistry.create("w7src", partitions)
+    val keys = Seq("k1", "k2", "k3", "k4")
+    def offer(from: Int, until: Int): Unit = (from until until).foreach { i =>
+      val key = keys(i % keys.size)
+      src.append(i % partitions, Event(s"s$i".getBytes, i.toLong,
+        properties = Map("pk" -> key)))
+    }
+    val base = java.nio.file.Files.createTempDirectory("graft-durable-f").toString
+    val root = s"$base/log"
+    offer(0, 40)
+    val q = spark.readStream.format("graft-eventlog").option("name", "w7src").load()
+      .select($"body", $"properties".getItem("pk").as("partitionKey"))
+      .writeStream.format("graft-eventlog")
+      .option("durablePath", root).option("partitions", partitions.toString)
+      .option("checkpointLocation", s"$base/ckpt")
+      .start()
+    try {
+      q.processAllAvailable()
+      // another writer under the same lease appends to a partition the next
+      // epoch writes too, after this JVM last assigned that partition's tail
+      DurableEventLog.send(DurableEventLog.logName(root, partitions),
+        Event("foreign".getBytes, 0L, partitionKey = "k1"), None, Some("k1"))
+      def segmentBytes(): Map[String, Seq[Byte]] = {
+        val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(root, "segments"))
+        try {
+          import scala.jdk.CollectionConverters._
+          walk.iterator.asScala.filter(_.getFileName.toString.startsWith("seg-"))
+            .map(f => f.toString -> java.nio.file.Files.readAllBytes(f).toSeq).toMap
+        } finally walk.close()
+      }
+      val before = segmentBytes()
+      offer(40, 80)
+      q.processAllAvailable()
+      val after = segmentBytes()
+      before.foreach { case (f, bytes) =>
+        assert(after.get(f).contains(bytes), s"segment $f was replaced")
+      }
+      assert(after.size > before.size)
+    } finally q.stop()
+    DurableEventLog.invalidate(root)
+    val rows = spark.read.format("graft-eventlog")
+      .option("durablePath", root).option("partitions", partitions.toString).load()
+      .select(col("body").cast("string"), col("partitionKey"), col("partition").cast("int"))
+      .as[(String, String, Int)].collect()
+    val expected = (0 until 80).map(i => s"s$i") :+ "foreign"
+    assert(rows.map(_._1).sorted.toSeq == expected.sorted, "every event exactly once")
+    rows.foreach { case (body, key, pid) =>
+      assert(pid == math.floorMod(key.hashCode, partitions), s"$body ($key) in partition $pid")
+    }
+  }
 }

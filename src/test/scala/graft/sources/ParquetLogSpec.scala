@@ -349,6 +349,46 @@ class ParquetLogSpec extends AnyFunSuite {
         "driver-side seek is scanning the log")
   }
 
+  test("concurrent seek and event reads leave the shared Hadoop conf untouched") {
+    val name = logName(4)
+    val cutoff = truth(4).agg(expr("percentile_approx(ts_us, 0.5)")).as[Long].head()
+    // distinct seek targets miss the seek cache, so every seek reads the file
+    val targets = (0 until 8).map(i => cutoff - i)
+    val expectedSeeks = targets.map { t =>
+      truth(4).filter($"ts_us" >= t).groupBy("pid").agg(min(expr("event_id div 4")))
+        .as[(Int, Long)].collect().toMap
+    }
+    val expectedEvents = truth(4).filter($"pid" === 1).orderBy("event_id")
+      .select($"props", $"ts_us").as[(String, Long)].collect().toSeq
+    ParquetEventLog.invalidate(path)
+    val seekDecoded0 = ParquetEventLog.seekDecodedRecords.sum()
+    val start = new java.util.concurrent.CountDownLatch(1)
+    def inThread(body: => Unit) = {
+      val t = new Thread(() => { start.await(); body })
+      t.start(); t
+    }
+    val seekResults = new java.util.concurrent.ConcurrentLinkedQueue[Map[Int, Long]]()
+    val eventResults = new java.util.concurrent.ConcurrentLinkedQueue[Seq[(String, Long)]]()
+    val threads = Seq(
+      inThread(targets.foreach { t => // the (event_id, ts) seek projection
+        seekResults.add((0 until 4).map(p => p -> ParquetEventLog.seekEnqueuedTime(name, p, t)).toMap)
+      }),
+      inThread((0 until 8).foreach { _ => // the full event projection
+        ParquetEventLog.dropCursor(path, 4)
+        eventResults.add(ParquetEventLog.receive(name, 1, 0, Long.MaxValue / 2).toVector
+          .map { case (_, e) => (new String(e.body, "UTF-8"), e.enqueuedTimeMicros) })
+      }))
+    start.countDown()
+    threads.foreach(_.join(120000))
+    import scala.jdk.CollectionConverters._
+    assert(seekResults.asScala.toSeq == expectedSeeks)
+    assert(ParquetEventLog.seekDecodedRecords.sum() > seekDecoded0, "the seeks read records")
+    assert(eventResults.size == 8)
+    eventResults.asScala.foreach(got => assert(got == expectedEvents))
+    assert(ParquetIO.conf.get(org.apache.parquet.hadoop.api.ReadSupport.PARQUET_READ_SCHEMA) == null,
+      "a reader set its projection on the shared conf")
+  }
+
   test("missing path fails planning loudly") {
     val err = intercept[Exception] {
       graft.GraftEventLog.readParquetLog(spark, "/no/such/file.parquet", 4).count()

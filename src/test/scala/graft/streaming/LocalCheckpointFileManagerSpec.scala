@@ -66,6 +66,39 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite {
     }
   }
 
+  test("two concurrent no-overwrite commits of one batch file: exactly one wins") {
+    withManager { (m, dir) =>
+      // many rounds, so an exists-then-rename window would be hit
+      for (round <- 0 until 200) {
+        val p = new Path(s"${dir.getAbsolutePath}/$round")
+        val outs = Seq("a", "b").map { who =>
+          val out = m.createAtomic(p, overwriteIfPossible = false)
+          out.write(s"$who-$round".getBytes(UTF_8))
+          who -> out
+        }
+        val barrier = new java.util.concurrent.CyclicBarrier(2)
+        val results = new java.util.concurrent.ConcurrentHashMap[String, Either[Throwable, Unit]]()
+        val threads = outs.map { case (who, out) =>
+          new Thread(() => {
+            barrier.await()
+            results.put(who, try Right(out.close()) catch { case t: Throwable => Left(t) })
+          })
+        }
+        threads.foreach(_.start()); threads.foreach(_.join())
+        val winners = Seq("a", "b").filter(results.get(_).isRight)
+        assert(winners.size == 1, s"round $round: winners $winners")
+        val loser = Seq("a", "b").filterNot(winners.contains).head
+        assert(results.get(loser) match {
+          case Left(_: FileAlreadyExistsException) => true
+          case _ => false
+        }, s"round $round: loser got ${results.get(loser)}")
+        assert(read(m, p) == s"${winners.head}-$round", s"round $round: winner's bytes")
+      }
+      assert(dir.listFiles().map(_.getName).toSet == (0 until 200).map(_.toString).toSet,
+        "no temp file is left behind")
+    }
+  }
+
   test("createAtomic(overwrite=true) replaces an existing target") {
     withManager { (m, dir) =>
       val p = new Path(s"${dir.getAbsolutePath}/0")
