@@ -1829,7 +1829,6 @@ object SparkEntry {
         // the index was this run's scratch state (the stream appended to
         // it); only the parquet OUTPUT outlives the gate, as its result
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(idxPath))
-        Dedup.forgetHashIndex(idxPath)
       }
       s.read.parquet(outDir).select(col("doc_id")).orderBy(col("doc_id"))
     }),
@@ -1896,7 +1895,6 @@ object SparkEntry {
         s.conf.set("spark.sql.shuffle.partitions", prev)
         sources.EventLogRegistry.drop(logName)
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(idxPath))
-        Dedup.forgetHashIndex(idxPath)
       }
       import s.implicits._
       val psiTotal = operators.Validation.distributionDriftFromCounts(

@@ -786,7 +786,7 @@ object CorpusOps {
     }
 
   /** Single-writer lease for the overlap-sketch lifecycle — [[graft
-    * .operators.Dedup.withIndexLease]] over a SIBLING `<path>__writer`
+    * .operators.EpochIndex.withIndexLease]] over a SIBLING `<path>__writer`
     * directory, because the sketch path itself is rewritten wholesale
     * (parquet overwrite deletes the dir, which would delete an in-dir
     * lease mid-hold). Turns a concurrent save/append — a silently LOST
@@ -794,9 +794,9 @@ object CorpusOps {
     * persisted index family. */
   private def withSketchLease[T](spark: org.apache.spark.sql.SparkSession,
       path: String, op: String)(body: => T): T = {
-    val fs = Dedup.indexFs(spark, path)
+    val fs = EpochIndex.indexFs(spark, path)
     val writerDir = s"${path}__writer"
-    try Dedup.withIndexLease(fs, writerDir, op)(body)
+    try EpochIndex.withIndexLease(fs, writerDir, op)(body)
     finally {
       // the lease machinery leaves the (now empty) sibling dir behind;
       // a NON-recursive delete removes it only when empty, so a racing
@@ -1554,125 +1554,18 @@ object CorpusOps {
   //
   // CRASH CONSISTENCY: the index spans TWO tables (terms + meta) whose
   // per-epoch contents must be read as a pair, so every mutation commits
-  // through a MANIFEST — a tiny versioned file naming the committed epoch
-  // set. Data dirs are written first (under ids no committed epoch uses),
-  // the next manifest version is written last; a crash at any earlier
-  // point leaves garbage dirs the manifest never names, and the previous
-  // manifest keeps serving the intact index (rebuilds never destroy
-  // before they build). Readers use exactly the manifest's epochs for
-  // BOTH tables — no cross-table inference. All mutations hold the
-  // single-writer index lease.
+  // through the [[EpochIndex]] manifest: data first, the manifest naming
+  // it last. Readers use exactly the manifest's epochs for BOTH tables.
   // -------------------------------------------------------------------
 
-  /** Per-path memo + drift check of the stats format tag — loading a
-    * path that is some OTHER index family (or not an index at all) must
-    * fail with a pointed message, not a schema error downstream. Only
-    * SUCCESSFUL reads are cached: a transient read failure (store
-    * throttle, a path probed before its creator finished) throws but
-    * must not poison the path for the JVM's lifetime. */
-  private val Bm25StatsFormat = "graft-bm25-stats-v1"
-  private val bm25StatsFormats =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def requireBm25Stats(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit = {
-    val stored = Option(bm25StatsFormats.get(path)).getOrElse {
-      val read =
-        try spark.read.parquet(s"$path/params").select(col("format"))
-          .head().getString(0)
-        catch {
-          case e: Exception => throw new IllegalStateException(
-            s"$path is not a BM25 stats index (params unreadable: " +
-              s"${e.getMessage}) — point at a saveBm25Stats path or build " +
-              "one first", e)
-        }
-      bm25StatsFormats.put(path, read)
-      read
-    }
-    if (stored != Bm25StatsFormat) throw new IllegalStateException(
-      s"$path is not a BM25 stats index (params format '$stored', " +
-        s"expected '$Bm25StatsFormat') — point at a saveBm25Stats path " +
-        "or build one first")
-  }
-
-  /** Forget a path's memoized format tag (for callers that delete or
-    * replace a temp index out-of-band — [[graft.operators.Dedup
-    * .forgetHashIndex]]'s twin). */
-  private[graft] def forgetBm25Stats(path: String): Unit = {
-    bm25StatsFormats.remove(path); ()
-  }
-
-  /** Committed-epoch manifests: `<path>/manifest-<version>` files with a
-    * one-line `v1:<epochs>` body. The reader takes the highest version
-    * that PARSES (a crash mid-write of version N falls back to N-1, which
-    * still names an intact index); the writer creates version max+1 and
-    * best-effort prunes all but the last two. */
-  private def listBm25Manifests(fs: org.apache.hadoop.fs.FileSystem,
-      path: String): Seq[(Int, org.apache.hadoop.fs.Path)] = {
-    val dir = new org.apache.hadoop.fs.Path(path)
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq.flatMap { st =>
-      val n = st.getPath.getName
-      if (st.isFile && n.startsWith("manifest-"))
-        n.stripPrefix("manifest-").toIntOption.map(_ -> st.getPath)
-      else None
-    }.sortBy(_._1)
-  }
-
-  private def readBm25Manifest(fs: org.apache.hadoop.fs.FileSystem,
-      path: String): Option[Set[Long]] =
-    listBm25Manifests(fs, path).reverse.view.flatMap { case (_, p) =>
-      try {
-        val body = new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(
-          new java.io.DataInputStream(fs.open(p))), "UTF-8").trim
-        if (!body.startsWith("v1:")) None
-        else {
-          val es = body.stripPrefix("v1:")
-          if (es.isEmpty) Some(Set.empty[Long])
-          else {
-            val parsed = es.split(",").toSeq.map(_.trim.toLongOption)
-            if (parsed.forall(_.isDefined)) Some(parsed.flatten.toSet) else None
-          }
-        }
-      } catch { case scala.util.control.NonFatal(_) => None }
-    }.headOption
-
-  private def commitBm25Manifest(fs: org.apache.hadoop.fs.FileSystem,
-      path: String, epochs: Set[Long]): Unit = {
-    val existing = listBm25Manifests(fs, path)
-    val v = existing.lastOption.map(_._1 + 1).getOrElse(1)
-    val p = new org.apache.hadoop.fs.Path(s"$path/manifest-$v")
-    val out = fs.create(p, false)
-    try out.write(s"v1:${epochs.toSeq.sorted.mkString(",")}".getBytes("UTF-8"))
-    finally out.close()
-    // keep the previous version as the partial-write fallback
-    existing.dropRight(1).foreach { case (_, old) =>
-      try { fs.delete(old, false); () }
-      catch { case scala.util.control.NonFatal(_) => () }
-    }
-  }
-
-  /** A fresh epoch id no existing dir or committed epoch uses — NEGATIVE
-    * ids, so user-supplied append epochs (>= 0) can never collide with a
-    * rebuild/compaction generation. */
-  private def freshBaseEpoch(fs: org.apache.hadoop.fs.FileSystem,
-      path: String): Long = {
-    val taken = statsEpochs(fs, path, "terms") ++ statsEpochs(fs, path, "meta") ++
-      readBm25Manifest(fs, path).getOrElse(Set.empty)
-    (taken + 0L).min - 1
-  }
-
-  /** Best-effort removal of epoch dirs the manifest no longer names —
-    * crashed writes and superseded generations. Never load-bearing: an
-    * unnamed dir is already invisible to readers. */
-  private def pruneBm25Epochs(fs: org.apache.hadoop.fs.FileSystem,
-      path: String, keep: Set[Long]): Unit =
-    Seq("terms", "meta").foreach { table =>
-      (statsEpochs(fs, path, table) -- keep).foreach { e =>
-        try { fs.delete(new org.apache.hadoop.fs.Path(
-          s"$path/$table/epoch=$e"), true); () }
-        catch { case scala.util.control.NonFatal(_) => () }
-      }
-    }
+  /** The BM25 stats family: `terms` (term, df) and `meta` (one row of
+    * n_docs, n_dl, total_dl); both merge by summing. */
+  private[graft] val Bm25Stats = EpochIndex.Family("graft-bm25-stats-v1",
+    "BM25 stats", "saveBm25Stats", Seq("terms", "meta"),
+    (table, df) =>
+      if (table == "terms") df.groupBy(col("term")).agg(sum(col("df")).as("df"))
+      else df.agg(sum(col("n_docs")).as("n_docs"), sum(col("n_dl")).as("n_dl"),
+        sum(col("total_dl")).as("total_dl")).coalesce(1))
 
   /** One batch's statistics: per-term document frequency (array_distinct
     * per row, ONE vocabulary-shuffle aggregate) and the (n_docs, n_dl,
@@ -1682,8 +1575,8 @@ object CorpusOps {
     * `avg(tokenCount)` — which SKIPS null-text docs — to the double's
     * precision at any epoch count (n_docs alone would divide by the
     * wrong population whenever the corpus holds null texts). */
-  private def bm25StatsOf(docs: DataFrame, idCol: String, textCol: String)
-      : (DataFrame, DataFrame) = {
+  private[graft] def bm25StatsOf(docs: DataFrame, textCol: String)(
+      m: EpochIndex.Manifest): EpochIndex.Frames = {
     val dft = docs.select(
         explode(array_distinct(TextFunctions.words(col(textCol)))).as("term"))
       .filter(col("term") =!= "")
@@ -1691,74 +1584,35 @@ object CorpusOps {
     val dl = TextFunctions.tokenCount(col(textCol)).cast("long")
     val meta = docs.agg(count(lit(1)).as("n_docs"),
       count(dl).as("n_dl"), sum(dl).as("total_dl"))
-    (dft, meta)
+    Seq("terms" -> dft, "meta" -> meta.coalesce(1))
   }
 
   /** Create (or re-create WHOLESALE) a persisted BM25 stats index from a
     * corpus snapshot. Layout: `<path>/terms/epoch=E` (term, df — written
-    * distributed, vocabulary-scale), `<path>/meta/epoch=E` (one row),
-    * `<path>/params` (format tag), `<path>/manifest-<v>` (committed
-    * epochs). The rebuild writes its data under a FRESH generation id and
-    * only then flips the manifest — a failed rebuild leaves the previous
-    * index fully intact and serving; superseded epochs are pruned after
-    * the flip. */
+    * distributed, vocabulary-scale), `<path>/meta/epoch=E` (one row) and
+    * the [[EpochIndex]] manifest. The rebuild writes its data under a
+    * FRESH generation id and only then flips the manifest — a failed
+    * rebuild leaves the previous index fully intact and serving;
+    * superseded epochs are pruned after the flip. */
   def saveBm25Stats(docs: DataFrame, idCol: String, textCol: String,
-      path: String): Unit = {
-    val spark = docs.sparkSession
-    val fs = Dedup.indexFs(spark, path)
-    Dedup.withIndexLease(fs, path, "saveBm25Stats") {
-      val e = freshBaseEpoch(fs, path)
-      val (dft, meta) = bm25StatsOf(docs, idCol, textCol)
-      dft.write.mode("overwrite").parquet(s"$path/terms/epoch=$e")
-      meta.coalesce(1).write.mode("overwrite").parquet(s"$path/meta/epoch=$e")
-      import spark.implicits._
-      Seq(Bm25StatsFormat).toDF("format")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/params")
-      commitBm25Manifest(fs, path, Set(e))
-      pruneBm25Epochs(fs, path, Set(e))
-      bm25StatsFormats.put(path, Bm25StatsFormat)
-    }
-    ()
-  }
+      path: String): Unit =
+    EpochIndex.save(docs.sparkSession, path, Bm25Stats, Map.empty)(
+      bm25StatsOf(docs, textCol))
 
   /** Fold a NEW document batch's statistics into the index as the
     * `epoch` partition — no corpus rescan, cost is one vocabulary
-    * aggregate over the batch. Epoch writes are idempotent (overwrite of
-    * that partition), so an at-least-once pipeline replaying a batch id
-    * replaces its own stats instead of double-counting; appending the
-    * SAME documents under a NEW epoch double-counts by construction
-    * (append admitted/new documents only — [[Dedup.appendToHashIndex]]'s
-    * contract). */
+    * aggregate over the batch. Epoch writes are idempotent (a replayed
+    * epoch id is uncommitted, rewritten and recommitted), so an
+    * at-least-once pipeline replaying a batch id replaces its own stats
+    * instead of double-counting; appending the SAME documents under a NEW
+    * epoch double-counts by construction (append admitted/new documents
+    * only — [[Dedup.appendToHashIndex]]'s contract). */
   def appendToBm25Stats(batch: DataFrame, idCol: String, textCol: String,
       path: String, epoch: Long): Unit = {
     require(epoch >= 0,
       s"epoch must be >= 0 (got $epoch); negative ids are rebuild generations")
-    val spark = batch.sparkSession
-    requireBm25Stats(spark, path)
-    val fs = Dedup.indexFs(spark, path)
-    Dedup.withIndexLease(fs, path, "appendToBm25Stats") {
-      val cur = readBm25Manifest(fs, path).getOrElse(throw new IllegalStateException(
-        s"BM25 stats at $path have no manifest — build with saveBm25Stats first"))
-      val (dft, meta) = bm25StatsOf(batch, idCol, textCol)
-      // data first, manifest last: a crash before the commit leaves dirs
-      // the manifest never names (invisible; the idempotent replay
-      // overwrites them), never a half-visible epoch
-      dft.write.mode("overwrite").parquet(s"$path/terms/epoch=$epoch")
-      meta.coalesce(1).write.mode("overwrite").parquet(s"$path/meta/epoch=$epoch")
-      commitBm25Manifest(fs, path, cur + epoch)
-    }
-    ()
-  }
-
-  /** Epoch partitions present under `<path>/<table>` (by directory name). */
-  private def statsEpochs(fs: org.apache.hadoop.fs.FileSystem,
-      path: String, table: String): Set[Long] = {
-    val dir = new org.apache.hadoop.fs.Path(s"$path/$table")
-    if (!fs.exists(dir)) Set.empty
-    else fs.listStatus(dir).collect {
-      case st if st.isDirectory && st.getPath.getName.startsWith("epoch=") =>
-        st.getPath.getName.stripPrefix("epoch=").toLong
-    }.toSet
+    EpochIndex.admitEpoch(batch.sparkSession, path, Bm25Stats, epoch)(
+      bm25StatsOf(batch, textCol))
   }
 
   /** Load the summed statistics: (per-term df over the COMMITTED epochs,
@@ -1774,25 +1628,10 @@ object CorpusOps {
     * [[bm25Search]]'s null-skipping avg exactly. */
   def loadBm25Stats(spark: org.apache.spark.sql.SparkSession, path: String)
       : (DataFrame, Long, Double) = {
-    requireBm25Stats(spark, path)
-    val fs = Dedup.indexFs(spark, path)
-    val committed = readBm25Manifest(fs, path).getOrElse(
-      throw new IllegalStateException(
-        s"BM25 stats at $path have no manifest — build with saveBm25Stats first"))
-    require(committed.nonEmpty, s"BM25 stats at $path hold no committed epochs")
-    Seq("terms", "meta").foreach { table =>
-      val missing = committed -- statsEpochs(fs, path, table)
-      require(missing.isEmpty,
-        s"BM25 stats at $path are damaged: committed epoch(s) " +
-          s"${missing.toSeq.sorted.mkString(",")} missing from $table/ — " +
-          "rebuild with saveBm25Stats or replay the appends")
-    }
-    val epochs = committed.toSeq.sorted.map(lit)
-    val dft = spark.read.parquet(s"$path/terms")
-      .filter(col("epoch").isin(epochs: _*)) // partition-pruned
+    val committed = EpochIndex.committed(spark, path, Bm25Stats)
+    val dft = EpochIndex.scan(spark, path, Bm25Stats, committed, "terms")
       .groupBy(col("term")).agg(sum(col("df")).as("df"))
-    val m = spark.read.parquet(s"$path/meta")
-      .filter(col("epoch").isin(epochs: _*))
+    val m = EpochIndex.scan(spark, path, Bm25Stats, committed, "meta")
       .agg(sum(col("n_docs")), sum(col("n_dl")), sum(col("total_dl"))).head()
     val nDocs = m.getLong(0)
     require(nDocs > 0, s"BM25 stats at $path cover zero documents")
@@ -1823,40 +1662,12 @@ object CorpusOps {
 
   /** Merge the committed epochs into one fresh generation — bounds the
     * per-probe scan fan-in after many appends. Crash-safe through the
-    * manifest: the merged tables land under a NEW negative epoch id
-    * first, the manifest flips to name only it, and the superseded dirs
-    * are pruned after — a crash at any point leaves either the old
-    * manifest serving the old epochs intact, or the new one serving the
-    * merge. Returns the number of epochs merged (0 = no work); values are
-    * unchanged (df and meta are sums either way). */
+    * manifest ([[EpochIndex.compact]]). Returns the number of epochs
+    * merged (0 = no work); values are unchanged (df and meta are sums
+    * either way). */
   def compactBm25Stats(spark: org.apache.spark.sql.SparkSession,
-      path: String): Int = {
-    requireBm25Stats(spark, path)
-    val fs = Dedup.indexFs(spark, path)
-    Dedup.withIndexLease(fs, path, "compactBm25Stats") {
-      val committed = readBm25Manifest(fs, path).getOrElse(
-        throw new IllegalStateException(
-          s"BM25 stats at $path have no manifest — build with saveBm25Stats first"))
-      val n = committed.size
-      if (n <= 1) { pruneBm25Epochs(fs, path, committed); 0 }
-      else {
-        val b = freshBaseEpoch(fs, path)
-        val epochs = committed.toSeq.sorted.map(lit)
-        spark.read.parquet(s"$path/terms")
-          .filter(col("epoch").isin(epochs: _*)).drop("epoch")
-          .groupBy(col("term")).agg(sum(col("df")).as("df"))
-          .write.mode("overwrite").parquet(s"$path/terms/epoch=$b")
-        spark.read.parquet(s"$path/meta")
-          .filter(col("epoch").isin(epochs: _*)).drop("epoch")
-          .agg(sum(col("n_docs")).as("n_docs"), sum(col("n_dl")).as("n_dl"),
-            sum(col("total_dl")).as("total_dl"))
-          .coalesce(1).write.mode("overwrite").parquet(s"$path/meta/epoch=$b")
-        commitBm25Manifest(fs, path, Set(b))
-        pruneBm25Epochs(fs, path, Set(b))
-        n
-      }
-    }
-  }
+      path: String): Int =
+    EpochIndex.compact(spark, path, Bm25Stats, "compactBm25Stats")
 
   /**
    * Unigram language-model quality score (the CCNet-style signal): fit a

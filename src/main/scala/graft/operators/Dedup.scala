@@ -964,6 +964,18 @@ object Dedup extends Logging {
   private def hashesOf(df: DataFrame, keyCols: Seq[Column]): DataFrame =
     df.select(contentHash(keyCols, 0).as("h0"), contentHash(keyCols, 1).as("h1"))
 
+  /** One slice's `hashes` rows, refused when the index was keyed on
+    * other columns. */
+  private[graft] def hashFrames(df: DataFrame, keyCols: Seq[Column], path: String)(
+      m: EpochIndex.Manifest): EpochIndex.Frames = {
+    requireKeyColsMatch(m, path, keyCols)
+    Seq("hashes" -> hashesOf(df, keyCols).distinct())
+  }
+
+  /** The content-hash index family: one `hashes` table, params `key_cols`. */
+  private[graft] val HashIndex = EpochIndex.Family("graft-hash-index-v1",
+    "content-hash", "saveHashIndex", Seq("hashes"))
+
   /**
    * Persist the 128-bit content-hash set of a corpus — two longs a row, no
    * content, so the stored index is ~16 bytes per corpus document — letting
@@ -971,57 +983,27 @@ object Dedup extends Logging {
    * ([[dedupAgainstHashIndex]]). This is the cross-run corner exact dedup
    * alone can't cover: a pipeline ingesting daily crawls must drop documents
    * already admitted LAST month without holding last month's corpus in the
-   * job. Layout: `hashes/epoch=<id>/` parquet — within a delta the files
-   * are flat (unlike the ANN indexes there is nothing to prune by: the
-   * anti-join always probes the whole hash set, and random 64-bit hash
-   * buckets would never be selective; AQE sizes the file count to the
-   * data), and the single `epoch` partition level exists for STREAMING
-   * admission ([[dedupStreamAgainstHashIndex]]): a replayed epoch must be
-   * able to exclude exactly its own previous (possibly partial) delta.
-   * Batch writes all land in `epoch=-1`. `params/` records the key columns
-   * for drift detection. Same 128-bit collision odds as [[exact]].
+   * job. Stored through [[EpochIndex]]: `hashes/epoch=<id>/` parquet plus a
+   * manifest naming the committed epochs and the key columns (drift
+   * detection). Within an epoch the files are flat (unlike the ANN indexes
+   * there is nothing to prune by: the anti-join always probes the whole
+   * hash set, and random 64-bit hash buckets would never be selective; AQE
+   * sizes the file count to the data). Same 128-bit collision odds as
+   * [[exact]].
    */
-  def saveHashIndex(df: DataFrame, keyCols: Seq[Column], path: String): Unit = {
-    val spark = df.sparkSession
-    withIndexLease(indexFs(spark, path), path, "saveHashIndex") {
-      hashesOf(df, keyCols).distinct()
-        .write.mode("overwrite").parquet(s"$path/hashes/epoch=-1")
-      dropStaleEpochDeltas(indexFs(spark, path), s"$path/hashes")
-      import spark.implicits._
-      val asked = keyCols.map(nameOf).mkString(",")
-      Seq(asked).toDF("key_cols")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/params")
-      hashIndexParams.put(path, asked) // refresh: the path may be re-keyed
-    }
-    ()
-  }
+  def saveHashIndex(df: DataFrame, keyCols: Seq[Column], path: String): Unit =
+    EpochIndex.save(df.sparkSession, path, HashIndex,
+      Map("key_cols" -> keyCols.map(nameOf).mkString(",")))(hashFrames(df, keyCols, path))
 
-  /** Forget a path's memoized params (for callers that delete a temp
-    * index; a leaked entry is only a few bytes but never evicts). */
-  private[graft] def forgetHashIndex(path: String): Unit = {
-    hashIndexParams.remove(path); ()
-  }
-
-  /** Load a persisted hash index: `(h0, h1, epoch)` — `epoch` is the
-    * partition-directory column (-1 for all batch-written hashes). */
+  /** Load a persisted hash index: `(h0, h1, epoch)` over the committed
+    * epochs (`epoch` < 0 for batch-written generations). */
   def loadHashIndex(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/hashes")
+    EpochIndex.scan(spark, path, HashIndex,
+      EpochIndex.committed(spark, path, HashIndex), "hashes")
 
-  /** Per-path memo of the stored key-column description: the drift check
-    * runs on EVERY admission call (each micro-batch of a stream), and
-    * re-reading the one-row params file each time costs a file listing +
-    * read job. `saveHashIndex` refreshes the entry when a path is re-keyed
-    * in-process; an external rewrite of a live path is already undefined
-    * behavior for the hash files themselves. */
-  private val hashIndexParams =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def requireKeyColsMatch(
-      spark: org.apache.spark.sql.SparkSession, path: String,
+  private def requireKeyColsMatch(m: EpochIndex.Manifest, path: String,
       keyCols: Seq[Column]): Unit = {
-    val stored = hashIndexParams.computeIfAbsent(path, _ =>
-      spark.read.parquet(s"$path/params")
-        .select(col("key_cols")).head().getString(0))
+    val stored = m.param("key_cols")
     val asked = keyCols.map(nameOf).mkString(",")
     if (stored != asked) throw new IllegalStateException(
       s"hash index at $path was built over key columns [$stored] but this " +
@@ -1052,22 +1034,21 @@ object Dedup extends Logging {
    * jobs (the batch-hash count and bloom build) before the returned plan
    * executes — even an EXPLAIN of the result triggers them.
    *
-   * `excludeEpoch` skips one epoch's delta partition from the probe —
+   * `excludeEpoch` skips one committed epoch —
    * [[dedupStreamAgainstHashIndex]] passes the CURRENT epoch so a replayed
-   * micro-batch never anti-joins against its own previous (possibly
-   * partial) admission and recomputes the identical survivor set.
+   * micro-batch never anti-joins against its own earlier admission and
+   * recomputes the identical survivor set.
    */
   def dedupAgainstHashIndex(df: DataFrame, keyCols: Seq[Column], path: String,
       fpp: Double = 0.001,
       bloomIndexBytesMin: Long = BloomIndexBytesMin,
       excludeEpoch: Option[Long] = None): DataFrame = {
     val spark = df.sparkSession
-    requireKeyColsMatch(spark, path, keyCols)
+    val m = EpochIndex.committed(spark, path, HashIndex)
+    requireKeyColsMatch(m, path, keyCols)
     val hashed = df.withColumn("__h0", contentHash(keyCols, 0))
       .withColumn("__h1", contentHash(keyCols, 1))
-    // partition pruning drops the excluded epoch's files at listing time
-    val idx = excludeEpoch.foldLeft(loadHashIndex(spark, path))(
-      (i, e) => i.filter(col("epoch") =!= lit(e)))
+    val idx = EpochIndex.scan(spark, path, HashIndex, m, "hashes", excludeEpoch)
     // the bloom's job is to keep a CORPUS-scale index out of the anti-join
     // shuffle; when the index is small enough to broadcast/exchange
     // trivially (plan stats), skip the build (force it by passing
@@ -1084,44 +1065,39 @@ object Dedup extends Logging {
       .drop("__h0", "__h1")
   }
 
-  /** Admit a batch into the index: append its distinct content hashes.
-    * Intended flow: `dedupAgainstHashIndex` → admit survivors downstream →
-    * append THOSE rows here. Appending un-deduped rows is harmless for
-    * correctness (the anti-join doesn't care about duplicate index rows)
-    * but stores dead weight. */
-  def appendToHashIndex(df: DataFrame, keyCols: Seq[Column], path: String): Unit = {
-    requireKeyColsMatch(df.sparkSession, path, keyCols)
-    withIndexLease(indexFs(df.sparkSession, path), path, "appendToHashIndex") {
-      hashesOf(df, keyCols).distinct()
-        .write.mode("append").parquet(s"$path/hashes/epoch=-1")
-    }
-  }
+  /** Admit a batch into the index: its distinct content hashes become a
+    * new committed generation. Intended flow: `dedupAgainstHashIndex` →
+    * admit survivors downstream → append THOSE rows here. Appending
+    * un-deduped rows is harmless for correctness (the anti-join doesn't
+    * care about duplicate index rows) but stores dead weight. */
+  def appendToHashIndex(df: DataFrame, keyCols: Seq[Column], path: String): Unit =
+    EpochIndex.append(df.sparkSession, path, HashIndex, "appendToHashIndex")(
+      hashFrames(df, keyCols, path))
 
   /**
    * Continuous-ingestion form of [[dedupAgainstHashIndex]]: every
    * micro-batch anti-joins the persisted index, survivors go to
-   * `writeBatch`, and (when `admit`) their hashes are written to the
-   * index's `epoch=<id>` partition BEFORE the next batch — so a text
-   * admitted in epoch N drops in epoch N+1. The cross-batch memory is the
-   * on-disk index itself, not a Spark state store: it survives restarts,
-   * is shared with batch jobs, and its size is 16 bytes per admitted
-   * document regardless of stream lifetime.
+   * `writeBatch`, and (when `admit`) their hashes are staged as the
+   * index's `epoch=<id>` and committed once both the write and the staging
+   * succeeded — so a text admitted in epoch N drops in epoch N+1, and an
+   * epoch whose write failed is never visible. The cross-batch memory is
+   * the on-disk index itself, not a Spark state store: it survives
+   * restarts, is shared with batch jobs, and its size is 16 bytes per
+   * admitted document regardless of stream lifetime.
    *
-   * Replay safety (foreachBatch is at-least-once): the anti-join EXCLUDES
-   * the current epoch's own partition, and the admission OVERWRITES it —
-   * so whether a crashed attempt admitted nothing, part, or all of its
-   * hashes, the retry probes exactly the pre-epoch index state, recomputes
-   * the identical survivor set, re-delivers it to `writeBatch`, and
-   * replaces the partial delta. `writeBatch` must still be idempotent on
-   * the epoch id (e.g. overwrite an epoch-keyed directory) because it may
-   * see the same survivors twice. Survivors are pinned with `persist` so
-   * `writeBatch` and the admission hash the SAME rows.
+   * Replay safety (foreachBatch is at-least-once): the probe EXCLUDES the
+   * current epoch, so a retry probes exactly the pre-epoch index state,
+   * recomputes the identical survivor set and re-delivers it to
+   * `writeBatch`; an already-committed epoch is uncommitted before it is
+   * staged again ([[EpochIndex.runEpoch]]). `writeBatch` must still be
+   * idempotent on the epoch id (e.g. overwrite an epoch-keyed directory)
+   * because it may see the same survivors twice. Survivors are pinned with
+   * `persist` so `writeBatch` and the admission hash the SAME rows.
    *
    * One live stream per index: epoch ids restart per checkpoint, so two
-   * streams sharing a path would overwrite each other's epoch partitions.
-   * A long-lived stream accretes one partition directory per admitting
-   * epoch; periodically rebuilding with [[saveHashIndex]] (from the
-   * admitted corpus, e.g. between runs) compacts them into `epoch=-1`.
+   * streams sharing a path would claim each other's epochs. A long-lived
+   * stream accretes one directory per admitting epoch; [[compactHashIndex]]
+   * (while no stream runs) merges them into one generation.
    * Returns the configured writer; the caller picks trigger/checkpoint and
    * starts it.
    */
@@ -1130,235 +1106,26 @@ object Dedup extends Logging {
       admit: Boolean = true)(
       writeBatch: (DataFrame, Long) => Unit)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, epochId: Long) =>
-      val fresh = dedupAgainstHashIndex(batch, keyCols, path,
-        excludeEpoch = Some(epochId)).persist()
-      try {
-        // the survivor write and the epoch admission are independent
-        // actions over the SAME persisted rows, and the replay contract
-        // above already covers every partial-completion interleaving
-        // (retry excludes + overwrites the epoch's delta) — overlap them
-        if (admit) Exec.concurrently(
-          writeBatch(fresh, epochId),
-          admitEpoch(fresh, keyCols, path, epochId))
-        else writeBatch(fresh, epochId)
-      } finally { fresh.unpersist(); () }
-    }
+    EpochIndex.foreachEpoch(stream, path, HashIndex, admit)((batch, epochId) =>
+      dedupAgainstHashIndex(batch, keyCols, path, excludeEpoch = Some(epochId)))(
+      (fresh, m) => hashFrames(fresh, keyCols, path)(m))(writeBatch)
 
-  /** [[dedupStreamAgainstHashIndex]]'s admission step: OVERWRITE epoch
-    * `epochId`'s delta partition with `df`'s hashes (package-visible so
-    * replay tests can simulate a crashed attempt's partial admission). */
+  /** [[dedupStreamAgainstHashIndex]]'s admission of ONE epoch outside a
+    * stream: stage `df`'s hashes as epoch `epochId` and commit it. */
   private[graft] def admitEpoch(df: DataFrame, keyCols: Seq[Column],
       path: String, epochId: Long): Unit =
-    hashesOf(df, keyCols).distinct()
-      .write.mode("overwrite").parquet(s"$path/hashes/epoch=$epochId")
+    EpochIndex.admitEpoch(df.sparkSession, path, HashIndex, epochId)(
+      hashFrames(df, keyCols, path))
 
   /**
-   * Merge a hash index's accreted `epoch=<id>` delta partitions into the
-   * single `epoch=-1` partition (dedup'ing hashes across epochs) — the
-   * in-place form of the "rebuild with [[saveHashIndex]]" compaction the
-   * admission doc describes, without rescanning any corpus text. Only run
-   * while no stream owns the index. Returns the number of partitions
-   * merged, 0 if already compact.
+   * Merge a hash index's committed epochs into one generation (dedup'ing
+   * hashes across epochs) without rescanning any corpus text. Only run
+   * while no stream owns the index. Returns the number of epochs merged,
+   * 0 if already compact.
    */
   def compactHashIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): Int = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    withIndexLease(fs, path, "compactHashIndex") {
-      recoverCompaction(fs, path, "hashes") // a prior crashed swap first
-      val live = new Path(s"$path/hashes")
-      val n = fs.listStatus(live)
-        .count(st => st.isDirectory && st.getPath.getName.startsWith("epoch="))
-      if (n <= 1) 0
-      else {
-        swapCompacted(fs, path, "hashes", tmp =>
-          spark.read.parquet(live.toString).drop("epoch").distinct()
-            .write.mode("overwrite").parquet(tmp))
-        n
-      }
-    }
-  }
-
-  /** How old a lease file must be before a new writer may break it: a
-    * writer that died without cleanup must not brick its index forever,
-    * but a SLOW live compaction must not get its lease stolen mid-swap. */
-  private[operators] val IndexLeaseStaleMs: Long = 30L * 60 * 1000
-
-  /** Delete every `epoch=<id>` delta partition EXCEPT the `epoch=-1` base
-    * under `dir` — a fresh save to an already-used index path must start
-    * from scratch, not silently union stale deltas left by a previous
-    * streaming run into every subsequent load/probe. Every `saveXIndex`
-    * calls this (under the writer lease) after writing its new base. */
-  private[graft] def dropStaleEpochDeltas(
-      fs: org.apache.hadoop.fs.FileSystem, dir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    if (fs.exists(p)) fs.listStatus(p).foreach { st =>
-      val n = st.getPath.getName
-      if (st.isDirectory && n.startsWith("epoch=") && n != "epoch=-1")
-        fs.delete(st.getPath, true)
-    }
-    ()
-  }
-
-  /** Best-effort single-writer lease over an index path. The compaction
-    * swap is crash-safe against a writer DYING, but two simultaneous
-    * writers (two jobs sharing an index path — append while compacting,
-    * two compactions) can interleave the checked renames into states no
-    * single-writer recovery contemplates. Every index mutation therefore
-    * takes `<path>/__lease` via create-exclusive first and fails LOUDLY
-    * (with the holder's tag in the message) if another writer holds it;
-    * a lease older than the stale threshold is treated as a dead
-    * writer's leftover and broken. While the body runs, a daemon
-    * HEARTBEAT thread re-touches the lease mtime every `staleMs / 3`, so
-    * a live writer outliving the threshold (a corpus-scale compaction
-    * can easily run past 30 min) keeps its lease fresh instead of having
-    * it silently broken — and its swap corrupted — by a concurrent
-    * writer. Best-effort by design: HDFS create-exclusive is atomic; on
-    * stores without atomic create the guard still refuses every
-    * OBSERVABLE overlap — its job is turning a silent corruption into a
-    * loud error, not distributed locking. */
-  private[graft] def withIndexLease[T](fs: org.apache.hadoop.fs.FileSystem,
-      path: String, op: String,
-      staleMs: Long = IndexLeaseStaleMs)(body: => T): T = {
-    import org.apache.hadoop.fs.Path
-    val lease = new Path(s"$path/__lease")
-    fs.mkdirs(new Path(path))
-    val holderTag = s"$op@${System.currentTimeMillis()}"
-    def tryAcquire(): Boolean =
-      try {
-        val out = fs.create(lease, false)
-        try out.write(holderTag.getBytes("UTF-8"))
-        finally out.close()
-        true
-      } catch { case _: java.io.IOException => false }
-    var acquired = tryAcquire()
-    if (!acquired) {
-      val age =
-        try System.currentTimeMillis() - fs.getFileStatus(lease).getModificationTime
-        catch {
-          // holder released between our failed create and the stat: retry
-          case _: java.io.FileNotFoundException => Long.MaxValue
-        }
-      if (age >= staleMs) {
-        fs.delete(lease, false)
-        acquired = tryAcquire()
-      }
-      if (!acquired) {
-        val holder =
-          try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(
-            new java.io.DataInputStream(fs.open(lease))), "UTF-8")
-          catch { case _: Exception => "unknown" }
-        throw new IllegalStateException(
-          s"index at $path is being written by another job (lease held by " +
-            s"$holder). Concurrent index mutations are unsupported; if that " +
-            s"writer is dead, delete $lease (stale leases are broken " +
-            s"automatically after ${staleMs / 60000} min)")
-      }
-    }
-    val beat = new Thread(() => {
-      try {
-        while (!Thread.interrupted()) {
-          // staleMs/5, not /3: the slack between the last beat and the
-          // stale cutoff must absorb scheduler/GC starvation of this
-          // thread on a saturated host — 4/5 of the window of margin
-          // keeps a live lease fresh even when beats land late
-          Thread.sleep(math.max(50L, staleMs / 5))
-          // refresh the lease's mtime by REWRITING it (same holder tag):
-          // setTimes is a silent no-op on FileSystems that don't override
-          // it (object stores — S3 mtime is immutable), which would leave
-          // the live writer unprotected exactly where the guard matters.
-          // Rewriting our own held lease is safe (a thief only touches a
-          // STALE lease, and this write makes it fresh) and updates mtime
-          // on every store. Best-effort: any failure here means the guard
-          // is already degraded — never kill the beat or fail the body.
-          try {
-            val out = fs.create(lease, true)
-            out.write(holderTag.getBytes("UTF-8")); out.close()
-          } catch { case scala.util.control.NonFatal(_) => () }
-        }
-      } catch { case _: InterruptedException => () }
-    }, s"graft-index-lease-heartbeat-$op")
-    beat.setDaemon(true)
-    beat.start()
-    try body finally {
-      // JOIN before deleting: a beat mid-rewrite would otherwise recreate
-      // the lease AFTER the delete, locking the index for the stale
-      // window against the next writer
-      beat.interrupt()
-      try beat.join(30000) catch { case _: InterruptedException => () }
-      fs.delete(lease, false)
-      ()
-    }
-  }
-
-  private[graft] def indexFs(spark: org.apache.spark.sql.SparkSession,
-      path: String): org.apache.hadoop.fs.FileSystem =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Crash-safe swap of a freshly-compacted table into `<path>/<table>` as
-    * its single `epoch=-1` partition. The live dir is never deleted before
-    * its replacement is in place: live is RENAMED aside to a backup, the
-    * compacted tmp is renamed in, and only then is the backup dropped —
-    * with every `fs.rename` boolean checked (a silently failed rename,
-    * e.g. cross-filesystem, must abort, not strand the index). A crash at
-    * any point leaves either the live table or the backup intact; the next
-    * compaction (or [[recoverCompaction]] directly) restores a missing
-    * live table from the backup before proceeding. */
-  private[operators] def swapCompacted(fs: org.apache.hadoop.fs.FileSystem,
-      path: String, table: String, writeTmp: String => Unit): Unit = {
-    import org.apache.hadoop.fs.Path
-    val live = new Path(s"$path/$table")
-    val tmp = new Path(s"$path/${table}__compacting")
-    recoverCompaction(fs, path, table)
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    writeTmp(tmp.toString)
-    val backup = new Path(s"$path/${table}__precompact")
-    if (!fs.rename(live, backup))
-      throw new java.io.IOException(
-        s"compaction of $live: swap-out rename to $backup failed; index untouched")
-    fs.mkdirs(live)
-    val in = new Path(live, "epoch=-1")
-    if (!fs.rename(tmp, in)) {
-      // roll back: the backup is still the complete pre-compaction index —
-      // and the rollback rename is itself checked, so the error never
-      // claims a restore that did not happen
-      fs.delete(live, true)
-      val restored = fs.rename(backup, live)
-      throw new java.io.IOException(
-        s"compaction of $live: swap-in rename of $tmp failed; " +
-          (if (restored) "index restored from backup"
-           else s"ROLLBACK RENAME ALSO FAILED — index is at $backup; " +
-             "the next compaction (recoverCompaction) will restore it"))
-    }
-    fs.delete(backup, true)
-    ()
-  }
-
-  /** Restore `<path>/<table>` from a crashed [[swapCompacted]]: a leftover
-    * `__precompact` backup with no live table — or only the EMPTY shell
-    * `mkdirs` creates between swap-out and swap-in — means the swap never
-    * completed: rename the backup back. A live table with content means
-    * the swap finished (a valid index dir always holds at least one
-    * `epoch=` child), so the backup is stale and dropped. */
-  private[operators] def recoverCompaction(fs: org.apache.hadoop.fs.FileSystem,
-      path: String, table: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val live = new Path(s"$path/$table")
-    val backup = new Path(s"$path/${table}__precompact")
-    if (fs.exists(backup)) {
-      val liveHasData = fs.exists(live) && fs.listStatus(live).nonEmpty
-      if (liveHasData) fs.delete(backup, true)
-      else {
-        if (fs.exists(live)) fs.delete(live, true) // the empty mkdirs shell
-        if (!fs.rename(backup, live))
-          throw new java.io.IOException(
-            s"recovery rename of $backup to $live failed")
-      }
-    }
-    ()
-  }
+      path: String): Int =
+    EpochIndex.compact(spark, path, HashIndex, "compactHashIndex")
 
   // -------------------------------------------------------------------
   // Persisted MinHash index — the NEAR-DUP half of the incremental-dedup
@@ -1369,8 +1136,19 @@ object Dedup extends Logging {
 
   private final case class MinHashIndexParams(
       k: Int, numHashes: Int, bands: Int, seed: Long)
-  private val minHashIndexParams =
-    new ConcurrentHashMap[String, MinHashIndexParams]()
+
+  private def minHashParams(m: EpochIndex.Manifest): MinHashIndexParams =
+    MinHashIndexParams(m.param("k").toInt, m.param("num_hashes").toInt,
+      m.param("bands").toInt, m.param("seed").toLong)
+
+  /** The MinHash index family: `bands` and `shingles`; compaction keeps
+    * one shingle row per document — a doc admitted into more than one
+    * epoch (double append, or a crashed stream re-admitted under a new
+    * epoch id) must not keep duplicate rows that would inflate
+    * [[minHashIndexMatches]] counts forever. */
+  private[graft] val MinHashIndex = EpochIndex.Family("graft-minhash-index-v1",
+    "MinHash", "saveMinHashIndex", Seq("bands", "shingles"),
+    (table, df) => if (table == "shingles") df.dropDuplicates("doc_id") else df.distinct())
 
   private def shingleBase(df: DataFrame, idCol: String, textCol: String,
       k: Int, idAs: String): DataFrame =
@@ -1392,12 +1170,20 @@ object Dedup extends Logging {
   private def hashedShingles(base: DataFrame, idAs: String): DataFrame =
     base.select(col(idAs), transform(col("sh"), s => fnv1a64(s)).as("hs"))
 
+  /** One slice's `bands` and `shingles` rows, from one shared base, cut
+    * with the manifest's params. */
+  private[graft] def minHashFrames(docs: DataFrame, idCol: String, textCol: String)(
+      m: EpochIndex.Manifest): EpochIndex.Frames = {
+    val p = minHashParams(m)
+    val base = Exec.lazyShare(shingleBase(docs, idCol, textCol, p.k, "doc_id"))
+    Seq("bands" -> bandRows(base, "doc_id", p.numHashes, p.bands, p.seed),
+      "shingles" -> hashedShingles(base, "doc_id"))
+  }
+
   /**
    * Persist a MinHash band index of a corpus for INCREMENTAL NEAR-DUP dedup
-   * ([[dedupAgainstMinHashIndex]]). Two tables, both narrow, both
-   * epoch-partitioned exactly like [[saveHashIndex]] (batch writes land in
-   * `epoch=-1`; streaming admission owns `epoch=<id>` so a replayed
-   * micro-batch can exclude its own partial delta):
+   * ([[dedupAgainstMinHashIndex]]). Two tables, both narrow, stored
+   * through [[EpochIndex]] like [[saveHashIndex]]:
    *  - `bands/`: (doc_id, band, bucket) — the candidate-generation rows, a
    *    few dozen bytes × `bands` per document;
    *  - `shingles/`: (doc_id, hs: array<long>) — 64-bit FNV hashes of each
@@ -1405,42 +1191,17 @@ object Dedup extends Logging {
    *    exact-Jaccard verification (Jaccard over the hash sets equals
    *    Jaccard over the shingle sets up to vanishing 64-bit collisions;
    *    storing hashes instead of text keeps the index content-free).
-   * `params/` records (k, numHashes, bands, seed); a probe with different
-   * parameters is impossible to match and fails loudly.
+   * The manifest records (k, numHashes, bands, seed); every probe and
+   * append cuts with the stored values.
    */
   def saveMinHashIndex(docs: DataFrame, idCol: String, textCol: String,
       path: String, k: Int = 3, numHashes: Int = 64, bands: Int = 16,
       seed: Long = 42L): Unit = {
     require(numHashes % bands == 0, s"bands $bands must divide numHashes $numHashes")
-    val spark = docs.sparkSession
-    withIndexLease(indexFs(spark, path), path, "saveMinHashIndex") {
-      val base = Exec.lazyShare(shingleBase(docs, idCol, textCol, k, "doc_id"))
-      // independent outputs from one shared base — overlap the two writes
-      Exec.concurrently(
-        bandRows(base, "doc_id", numHashes, bands, seed)
-          .write.mode("overwrite").parquet(s"$path/bands/epoch=-1"),
-        hashedShingles(base, "doc_id")
-          .write.mode("overwrite").parquet(s"$path/shingles/epoch=-1"))
-      dropStaleEpochDeltas(indexFs(spark, path), s"$path/bands")
-      dropStaleEpochDeltas(indexFs(spark, path), s"$path/shingles")
-      import spark.implicits._
-      Seq((k, numHashes, bands, seed)).toDF("k", "num_hashes", "bands", "seed")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/params")
-      minHashIndexParams.put(path, MinHashIndexParams(k, numHashes, bands, seed))
-    }
-    ()
-  }
-
-  private def minHashParamsOf(spark: org.apache.spark.sql.SparkSession,
-      path: String): MinHashIndexParams =
-    minHashIndexParams.computeIfAbsent(path, _ => {
-      val r = spark.read.parquet(s"$path/params").head()
-      MinHashIndexParams(r.getAs[Int]("k"), r.getAs[Int]("num_hashes"),
-        r.getAs[Int]("bands"), r.getAs[Long]("seed"))
-    })
-
-  private[graft] def forgetMinHashIndex(path: String): Unit = {
-    minHashIndexParams.remove(path); ()
+    EpochIndex.save(docs.sparkSession, path, MinHashIndex,
+      Map("k" -> k.toString, "num_hashes" -> numHashes.toString,
+        "bands" -> bands.toString, "seed" -> seed.toString))(
+      minHashFrames(docs, idCol, textCol))
   }
 
   /**
@@ -1452,7 +1213,7 @@ object Dedup extends Logging {
    *  - the BATCH bands (capped by `maxBatchBucket` with counted drops, tag
    *    `"minHashIndex"`) broadcast against the index's band scan — the
    *    corpus-scale band table feeds the candidate join without an
-   *    exchange, and the probe prunes `excludeEpoch`'s files at listing;
+   *    exchange, and the probe never lists `excludeEpoch`'s files;
    *  - the candidate set joined with the batch's own shingle hashes
    *    broadcasts against the index's shingle scan — the corpus-scale
    *    verification payload never shuffles either.
@@ -1488,15 +1249,14 @@ object Dedup extends Logging {
       excludeEpoch: Option[Long] = None): DataFrame = {
     val spark = batch.sparkSession
     requireBroadcastSizedBatch(batch)
-    val p = minHashParamsOf(spark, path)
+    val m = EpochIndex.committed(spark, path, MinHashIndex)
+    val p = minHashParams(m)
     val base = Exec.lazyShare(shingleBase(batch, idCol, textCol, p.k, "doc_id"))
     val bBand = dropHotKeys(
       bandRows(base, "doc_id", p.numHashes, p.bands, p.seed),
       Seq("band", "bucket"), maxBatchBucket, "minHashIndex")
-    def epochScan(table: String): DataFrame = {
-      val df = spark.read.parquet(s"$path/$table")
-      excludeEpoch.foldLeft(df)((d, e) => d.filter(col("epoch") =!= lit(e)))
-    }
+    def epochScan(table: String): DataFrame =
+      EpochIndex.scan(spark, path, MinHashIndex, m, table, excludeEpoch)
     val iBand = epochScan("bands").select(
       col("doc_id").as("idx_id"), col("band"), col("bucket"))
     val cand = iBand.join(broadcast(bBand), Seq("band", "bucket"))
@@ -1528,61 +1288,41 @@ object Dedup extends Logging {
     batch.join(broadcast(matches), batch(idCol) === col("__dup_id"), "left_anti")
   }
 
-  /** Admit a batch into the MinHash index: append its band rows and shingle
-    * hashes to the `epoch=-1` partition. Intended flow mirrors
-    * [[appendToHashIndex]]: dedup → admit survivors downstream → append
-    * THOSE rows here. */
+  /** Admit a batch into the MinHash index: its band rows and shingle
+    * hashes become a new committed generation, cut with the stored params.
+    * Intended flow mirrors [[appendToHashIndex]]: dedup → admit survivors
+    * downstream → append THOSE rows here. */
   def appendToMinHashIndex(batch: DataFrame, idCol: String, textCol: String,
-      path: String): Unit = {
-    val p = minHashParamsOf(batch.sparkSession, path)
-    withIndexLease(indexFs(batch.sparkSession, path), path, "appendToMinHashIndex") {
-      val base = Exec.lazyShare(shingleBase(batch, idCol, textCol, p.k, "doc_id"))
-      Exec.concurrently(
-        bandRows(base, "doc_id", p.numHashes, p.bands, p.seed)
-          .write.mode("append").parquet(s"$path/bands/epoch=-1"),
-        hashedShingles(base, "doc_id")
-          .write.mode("append").parquet(s"$path/shingles/epoch=-1"))
-    }
-  }
+      path: String): Unit =
+    EpochIndex.append(batch.sparkSession, path, MinHashIndex, "appendToMinHashIndex")(
+      minHashFrames(batch, idCol, textCol))
 
   /**
    * Continuous-ingestion form of [[dedupAgainstMinHashIndex]], with the
    * same replay contract as [[dedupStreamAgainstHashIndex]]: every
-   * micro-batch probes the index EXCLUDING its own epoch's delta,
-   * survivors go to `writeBatch` (which must be idempotent on the epoch
-   * id), and admission OVERWRITES the epoch's partitions — so an
-   * at-least-once retry recomputes the identical survivor set. One live
-   * stream per index path.
+   * micro-batch probes the index EXCLUDING its own epoch, survivors go to
+   * `writeBatch` (which must be idempotent on the epoch id) while their
+   * bands and shingles are staged, and the epoch commits only after both
+   * succeeded — so an at-least-once retry recomputes the identical
+   * survivor set, and a failed epoch admits nothing. One live stream per
+   * index path.
    */
   def dedupStreamAgainstMinHashIndex(
       stream: DataFrame, idCol: String, textCol: String, path: String,
       threshold: Double = 0.5, admit: Boolean = true)(
       writeBatch: (DataFrame, Long) => Unit)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, epochId: Long) =>
-      val fresh = dedupAgainstMinHashIndex(batch, idCol, textCol, path,
-        threshold, excludeEpoch = Some(epochId)).persist()
-      try {
-        // overlap write + admission ([[dedupStreamAgainstHashIndex]]'s
-        // rationale): independent actions, replay-contract-covered
-        if (admit) Exec.concurrently(
-          writeBatch(fresh, epochId),
-          admitMinHashEpoch(fresh, idCol, textCol, path, epochId))
-        else writeBatch(fresh, epochId)
-      } finally { fresh.unpersist(); () }
-    }
+    EpochIndex.foreachEpoch(stream, path, MinHashIndex, admit)((batch, epochId) =>
+      dedupAgainstMinHashIndex(batch, idCol, textCol, path, threshold,
+        excludeEpoch = Some(epochId)))(
+      (fresh, m) => minHashFrames(fresh, idCol, textCol)(m))(writeBatch)
 
+  /** [[dedupStreamAgainstMinHashIndex]]'s admission of ONE epoch outside a
+    * stream: stage `df`'s bands and shingles as epoch `epochId`, commit. */
   private[graft] def admitMinHashEpoch(df: DataFrame, idCol: String,
-      textCol: String, path: String, epochId: Long): Unit = {
-    val p = minHashParamsOf(df.sparkSession, path)
-    val base = Exec.lazyShare(shingleBase(df, idCol, textCol, p.k, "doc_id"))
-    // independent outputs from one shared base — overlap the two writes
-    Exec.concurrently(
-      bandRows(base, "doc_id", p.numHashes, p.bands, p.seed)
-        .write.mode("overwrite").parquet(s"$path/bands/epoch=$epochId"),
-      hashedShingles(base, "doc_id")
-        .write.mode("overwrite").parquet(s"$path/shingles/epoch=$epochId"))
-  }
+      textCol: String, path: String, epochId: Long): Unit =
+    EpochIndex.admitEpoch(df.sparkSession, path, MinHashIndex, epochId)(
+      minHashFrames(df, idCol, textCol))
 
   /**
    * Fail loudly when the persisted MinHash index no longer matches the
@@ -1595,13 +1335,14 @@ object Dedup extends Logging {
   def validateMinHashIndex(docs: DataFrame, idCol: String, textCol: String,
       path: String): Unit = {
     val spark = docs.sparkSession
-    val p = minHashParamsOf(spark, path)
+    val m = EpochIndex.committed(spark, path, MinHashIndex)
+    val p = minHashParams(m)
     def fp(df: DataFrame, c: String): (Long, Long) = {
       val r = df.agg(count(lit(1)),
         coalesce(bit_xor(xxhash64(col(c))), lit(0L))).head()
       (r.getLong(0), r.getLong(1))
     }
-    val (ic, ih) = fp(spark.read.parquet(s"$path/shingles"), "doc_id")
+    val (ic, ih) = fp(EpochIndex.scan(spark, path, MinHashIndex, m, "shingles"), "doc_id")
     val (cc, ch) = fp(shingleBase(docs, idCol, textCol, p.k, "doc_id"), "doc_id")
     if (ic != cc || ih != ch) throw new IllegalStateException(
       s"MinHash index at $path is stale: it covers $ic documents " +
@@ -1611,44 +1352,15 @@ object Dedup extends Logging {
   }
 
   /**
-   * Merge a long-lived stream's accreted `epoch=<id>` delta partitions
-   * (and any appends) into the single `epoch=-1` partition — undoing
-   * admission erosion without recomputing a single signature. Only run
-   * while no stream owns the index (the swap is not atomic against a
-   * concurrent epoch write). Returns the number of partitions merged, 0 if
-   * the index was already compact.
+   * Merge a long-lived stream's committed epochs (and any appended
+   * generations) into one generation — undoing admission erosion without
+   * recomputing a single signature. Only run while no stream owns the
+   * index. Returns the number of epochs merged, 0 if the index was
+   * already compact.
    */
   def compactMinHashIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): Int = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    withIndexLease(fs, path, "compactMinHashIndex") {
-      // restore either table from a prior crashed swap before counting epochs
-      Seq("bands", "shingles").foreach(recoverCompaction(fs, path, _))
-      def epochDirs(table: String): Array[Path] =
-        fs.listStatus(new Path(s"$path/$table"))
-          .filter(st => st.isDirectory && st.getPath.getName.startsWith("epoch="))
-          .map(_.getPath)
-      val n = epochDirs("bands").length
-      if (n <= 1 && epochDirs("shingles").length <= 1) 0
-      else {
-        // bands: full-row distinct; shingles: one row per doc — a doc
-        // admitted into more than one epoch (double append, or a crashed
-        // stream re-admitted under a new epoch id) must not keep duplicate
-        // rows that would inflate minHashIndexMatches counts forever
-        Seq("bands", "shingles").foreach { table =>
-          swapCompacted(fs, path, table, { tmp =>
-            val merged = spark.read.parquet(s"$path/$table").drop("epoch")
-            val deduped =
-              if (table == "shingles") merged.dropDuplicates("doc_id")
-              else merged.distinct()
-            deduped.write.mode("overwrite").parquet(tmp)
-          })
-        }
-        n
-      }
-    }
-  }
+      path: String): Int =
+    EpochIndex.compact(spark, path, MinHashIndex, "compactMinHashIndex")
 
   /**
    * DuckDB twin of [[dedupAgainstMinHashIndex]]'s survivor set over

@@ -280,77 +280,52 @@ object Fuzzy {
   // Persisted segment index — the restart-surviving form of [[fuzzyFit]]:
   // a streaming linkage job (or a fleet of batch jobs) probes a catalog
   // fitted ONCE and saved, instead of re-segmenting the catalog on every
-  // driver start. Same storage conventions as [[Dedup.saveHashIndex]]:
-  // epoch-partitioned tables (batch writes land in `epoch=-1`; streaming
-  // admission owns `epoch=<id>` so a replayed epoch can overwrite exactly
-  // its own delta), `params/` for probe-compatibility validation, every
-  // mutation under the single-writer lease, compaction crash-safe via the
-  // checked rename swap. Reference precedent: checkpointed source
-  // recovery (EventHubsSource.scala:118-175) — fitted state must outlive
-  // the driver.
+  // driver start. Stored through [[EpochIndex]] like
+  // [[Dedup.saveHashIndex]]: three epoch-partitioned tables, the manifest
+  // records (maxDist, maxSegmentDf) for probe compatibility, every mutation
+  // under the single-writer lease, manifest-flip compaction. Reference
+  // precedent: checkpointed source recovery
+  // (EventHubsSource.scala:118-175) — fitted state must outlive the driver.
   // -------------------------------------------------------------------
 
-  private val fuzzyIndexParams =
-    new java.util.concurrent.ConcurrentHashMap[String, (Int, Int)]()
+  /** The fuzzy segment index family: `segments` + `shorts` (the two
+    * candidate lookup frames) and `ids` (the key -> id expansion). */
+  private[graft] val FuzzyIndex = EpochIndex.Family("graft-fuzzy-index-v1",
+    "fuzzy segment", "saveFuzzyIndex", Seq("segments", "shorts", "ids"))
 
-  private def fuzzyParamsOf(spark: org.apache.spark.sql.SparkSession,
-      path: String): (Int, Int) =
-    fuzzyIndexParams.computeIfAbsent(path, _ => {
-      val r = spark.read.parquet(s"$path/params").head()
-      (r.getAs[Int]("max_dist"), r.getAs[Int]("max_segment_df"))
-    })
+  private def fuzzyParams(m: EpochIndex.Manifest): (Int, Int) =
+    (m.param("max_dist").toInt, m.param("max_segment_df").toInt)
 
-  private[graft] def forgetFuzzyIndex(path: String): Unit = {
-    fuzzyIndexParams.remove(path); ()
-  }
-
-  /** One catalog slice's three index tables, written under `epochDir`.
-    * The `maxSegmentDf` hot-segment guard applies PER WRITE (each write
-    * sees only its own slice's distinct keys): a boilerplate segment can
-    * exceed the cap only across appends, where the candidate cost it
-    * guards against is already split across delta files. Ids are written
-    * distinct so a double-saved row cannot duplicate output pairs. */
-  private def writeIndexTables(catalog: DataFrame, idCol: String,
-      keyCol: String, maxDist: Int, maxSegmentDf: Int, path: String,
-      epochDir: String, mode: String): Unit = {
+  /** One catalog slice's three index tables. The `maxSegmentDf`
+    * hot-segment guard applies PER WRITE (each write sees only its own
+    * slice's distinct keys): a boilerplate segment can exceed the cap only
+    * across appends, where the candidate cost it guards against is already
+    * split across epoch files. Ids are written distinct so a double-saved
+    * row cannot duplicate output pairs. The distinct keys are shared by
+    * the segment and short-key frames, whose writes run side by side (the
+    * first reader materializes the share under block locking). */
+  private[graft] def fuzzyFrames(catalog: DataFrame, idCol: String,
+      keyCol: String)(m: EpochIndex.Manifest): EpochIndex.Frames = {
+    val (maxDist, maxSegmentDf) = fuzzyParams(m)
     val ids = catalog
       .select(col(idCol).as("__lid"), col(keyCol).as("__lkey"))
       .filter(col("__lid").isNotNull && col("__lkey").isNotNull)
       .distinct()
     val keys = Exec.lazyShare(ids.select(col("__lkey")).distinct())
-    try {
-      val (segIdx, shortIdx) = indexFrames(keys, maxDist, maxSegmentDf)
-      // three independent tables of one slice — overlap the writes (the
-      // first shared-`keys` reader materializes the cache under block
-      // locking; the others read it)
-      Exec.concurrently(Seq(
-        () => segIdx.write.mode(mode).parquet(s"$path/segments/$epochDir"),
-        () => shortIdx.write.mode(mode).parquet(s"$path/shorts/$epochDir"),
-        () => ids.write.mode(mode).parquet(s"$path/ids/$epochDir")))
-    } finally { keys.unpersist(); () }
+    val (segIdx, shortIdx) = indexFrames(keys, maxDist, maxSegmentDf)
+    Seq("segments" -> segIdx, "shorts" -> shortIdx, "ids" -> ids)
   }
 
   /** Persist the catalog's fitted segment index — [[fuzzyFit]] that
-    * survives the driver: `segments/` + `shorts/` (the two candidate
-    * lookup frames) and `ids/` (the key -> id expansion), all in
-    * `epoch=-1`; `params/` records (maxDist, maxSegmentDf) so a probe
-    * through a reloaded index always verifies at the distance the index
-    * was cut for. */
+    * survives the driver; the manifest records (maxDist, maxSegmentDf) so
+    * a probe through a reloaded index always verifies at the distance the
+    * index was cut for. */
   def saveFuzzyIndex(catalog: DataFrame, idCol: String, keyCol: String,
       maxDist: Int, path: String, maxSegmentDf: Int = Int.MaxValue): Unit = {
     require(maxDist >= 1, s"maxDist must be >= 1, got $maxDist")
-    val spark = catalog.sparkSession
-    Dedup.withIndexLease(Dedup.indexFs(spark, path), path, "saveFuzzyIndex") {
-      writeIndexTables(catalog, idCol, keyCol, maxDist, maxSegmentDf, path,
-        "epoch=-1", "overwrite")
-      Seq("segments", "shorts", "ids").foreach(t =>
-        Dedup.dropStaleEpochDeltas(Dedup.indexFs(spark, path), s"$path/$t"))
-      import spark.implicits._
-      Seq((maxDist, maxSegmentDf)).toDF("max_dist", "max_segment_df")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/params")
-      fuzzyIndexParams.put(path, (maxDist, maxSegmentDf))
-    }
-    ()
+    EpochIndex.save(catalog.sparkSession, path, FuzzyIndex,
+      Map("max_dist" -> maxDist.toString, "max_segment_df" -> maxSegmentDf.toString))(
+      fuzzyFrames(catalog, idCol, keyCol))
   }
 
   /** Load a persisted index into a [[FuzzyFitted]] — the same probe state
@@ -359,77 +334,44 @@ object Fuzzy {
     * [[FuzzyFitted.release]] when done (the frames are lazily shared). */
   def loadFuzzyIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): FuzzyFitted = {
-    val (maxDist, _) = fuzzyParamsOf(spark, path)
-    def t(name: String) = spark.read.parquet(s"$path/$name").drop("epoch")
+    val m = EpochIndex.committed(spark, path, FuzzyIndex)
+    def t(name: String) = EpochIndex.scan(spark, path, FuzzyIndex, m, name).drop("epoch")
     // ids dedup ACROSS writes (each write is distinct only within its own
     // slice): a key re-admitted by append/epoch-replay must not duplicate
     // output pairs. Segment/short duplicates are already harmless — the
     // candidate set dedups before the verify. One narrow 2-column
     // shuffle, paid once per load, shared across every probe.
     FuzzyFitted(Exec.lazyShare(t("segments")), Exec.lazyShare(t("shorts")),
-      Exec.lazyShare(t("ids").distinct()), maxDist)
+      Exec.lazyShare(t("ids").distinct()), fuzzyParams(m)._1)
   }
 
-  /** Admit a catalog delta: index ONLY the new slice's distinct keys
-    * (appended to `epoch=-1`) — never re-reads the existing index. A key
+  /** Admit a catalog delta: index ONLY the new slice's distinct keys (a
+    * new committed generation) — never re-reads the existing index. A key
     * already indexed gets duplicate segment rows (harmless: candidates
     * dedup before the verify) and its ids union; [[compactFuzzyIndex]]
     * collapses the storage. Probing a loaded index after an append equals
     * probing a fresh [[saveFuzzyIndex]] of the whole catalog, up to the
-    * per-write `maxSegmentDf` note on [[writeIndexTables]]. */
+    * per-write `maxSegmentDf` note on [[fuzzyFrames]]. */
   def appendToFuzzyIndex(catalog: DataFrame, idCol: String, keyCol: String,
-      path: String): Unit = {
-    val spark = catalog.sparkSession
-    val (maxDist, maxSegmentDf) = fuzzyParamsOf(spark, path)
-    Dedup.withIndexLease(Dedup.indexFs(spark, path), path,
-        "appendToFuzzyIndex") {
-      writeIndexTables(catalog, idCol, keyCol, maxDist, maxSegmentDf, path,
-        "epoch=-1", "append")
-    }
-  }
+      path: String): Unit =
+    EpochIndex.append(catalog.sparkSession, path, FuzzyIndex, "appendToFuzzyIndex")(
+      fuzzyFrames(catalog, idCol, keyCol))
 
-  /** Streaming admission ([[Dedup.admitEpoch]]'s contract): OVERWRITE
-    * epoch `epochId`'s delta partitions with this slice's index rows, so
-    * an at-least-once replay replaces its own possibly-partial delta
-    * instead of double-appending it. */
+  /** Admission of ONE catalog epoch: stage this slice's index rows as
+    * epoch `epochId` and commit it; a replay of a committed epoch replaces
+    * it instead of double-appending. */
   private[graft] def admitFuzzyEpoch(catalog: DataFrame, idCol: String,
-      keyCol: String, path: String, epochId: Long): Unit = {
-    val spark = catalog.sparkSession
-    val (maxDist, maxSegmentDf) = fuzzyParamsOf(spark, path)
-    writeIndexTables(catalog, idCol, keyCol, maxDist, maxSegmentDf, path,
-      s"epoch=$epochId", "overwrite")
-  }
+      keyCol: String, path: String, epochId: Long): Unit =
+    EpochIndex.admitEpoch(catalog.sparkSession, path, FuzzyIndex, epochId)(
+      fuzzyFrames(catalog, idCol, keyCol))
 
-  /** Merge accreted `epoch=<id>` deltas (and append erosion) into the
-    * single `epoch=-1` partition per table — full-row distinct, so
-    * double-admitted keys/ids collapse to one copy. Crash-safe via
-    * [[Dedup.swapCompacted]]; only run while no stream owns the index.
-    * Returns the number of epoch partitions merged (max across tables),
+  /** Merge the committed epochs into one generation per table — full-row
+    * distinct, so double-admitted keys/ids collapse to one copy; only run
+    * while no stream owns the index. Returns the number of epochs merged,
     * 0 if already compact. */
   def compactFuzzyIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): Int = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val tables = Seq("segments", "shorts", "ids")
-    Dedup.withIndexLease(fs, path, "compactFuzzyIndex") {
-      tables.foreach(Dedup.recoverCompaction(fs, path, _))
-      def epochCount(table: String): Int =
-        fs.listStatus(new Path(s"$path/$table"))
-          .count(st => st.isDirectory && st.getPath.getName.startsWith("epoch="))
-      val n = tables.map(epochCount).max
-      if (n <= 1) 0
-      else {
-        tables.foreach { table =>
-          Dedup.swapCompacted(fs, path, table, { tmp =>
-            spark.read.parquet(s"$path/$table").drop("epoch").distinct()
-              .write.mode("overwrite").parquet(tmp)
-          })
-        }
-        n
-      }
-    }
-  }
+      path: String): Int =
+    EpochIndex.compact(spark, path, FuzzyIndex, "compactFuzzyIndex")
 
   /** [[graft.streaming.StreamOps.fuzzyLinkStream]] through a PERSISTED
     * index: the fitted catalog state is loaded (not refit) — a driver

@@ -316,64 +316,47 @@ object Multimodal {
   // The stored index is (media_id, phash) — 16 bytes a row, no content;
   // banding is computed AT PROBE TIME from the stored hash (cheap bit
   // ops on the scan), so the on-disk layout stays minimal. Same storage
-  // conventions: epoch partitions (batch -> epoch=-1, streaming
-  // admission overwrites its own epoch), params validation, writer
-  // lease, crash-safe compaction.
+  // conventions: stored through [[EpochIndex]] (one `hashes` table, the
+  // manifest records `max_hamming`), writer lease, manifest-flip
+  // compaction.
   // -------------------------------------------------------------------
 
-  private val phashIndexParams =
-    new java.util.concurrent.ConcurrentHashMap[String, Int]()
+  /** The perceptual-hash index family: one `hashes` table of
+    * (media_id, phash), params `max_hamming`. */
+  private[graft] val PhashIndex = EpochIndex.Family("graft-phash-index-v1",
+    "perceptual-hash", "savePhashIndex", Seq("hashes"))
 
-  private def phashParamsOf(spark: SparkSession, path: String): Int =
-    phashIndexParams.computeIfAbsent(path, _ =>
-      spark.read.parquet(s"$path/params").head().getAs[Int]("max_hamming"))
-
-  private[graft] def forgetPhashIndex(path: String): Unit = {
-    phashIndexParams.remove(path); ()
-  }
+  private[graft] def phashFrames(media: Dataset[MediaRow], codec: MediaCodec)(
+      m: EpochIndex.Manifest): EpochIndex.Frames =
+    Seq("hashes" -> perceptualHash(media, codec))
 
   /** Persist the corpus's perceptual hashes for incremental dedup
-    * ([[dedupAgainstPhashIndex]]). `params/` records `maxHamming` — the
+    * ([[dedupAgainstPhashIndex]]). The manifest records `maxHamming` — the
     * distance the index promises to answer; probes always band at the
     * stored distance so candidate generation stays pigeonhole-complete. */
   def savePhashIndex(media: Dataset[MediaRow], path: String,
       maxHamming: Int = 4, codec: MediaCodec = StubCodec): Unit = {
     require(maxHamming >= 0 && maxHamming < 32,
       s"maxHamming $maxHamming out of range")
-    val spark = media.sparkSession
-    Dedup.withIndexLease(Dedup.indexFs(spark, path), path, "savePhashIndex") {
-      perceptualHash(media, codec)
-        .write.mode("overwrite").parquet(s"$path/hashes/epoch=-1")
-      Dedup.dropStaleEpochDeltas(Dedup.indexFs(spark, path), s"$path/hashes")
-      import spark.implicits._
-      Seq(maxHamming).toDF("max_hamming")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/params")
-      phashIndexParams.put(path, maxHamming)
-    }
-    ()
+    EpochIndex.save(media.sparkSession, path, PhashIndex,
+      Map("max_hamming" -> maxHamming.toString))(phashFrames(media, codec))
   }
 
-  /** Admit a media delta: append its hashes to `epoch=-1` under the
-    * lease. Double-appended ids are collapsed by [[compactPhashIndex]]
-    * and are harmless to probes (duplicate index rows only duplicate a
-    * candidate, which the verify dedups per batch doc). */
+  /** Admit a media delta: its hashes become a new committed generation.
+    * Double-appended ids are collapsed by [[compactPhashIndex]] and are
+    * harmless to probes (duplicate index rows only duplicate a candidate,
+    * which the verify dedups per batch doc). */
   def appendToPhashIndex(media: Dataset[MediaRow], path: String,
-      codec: MediaCodec = StubCodec): Unit = {
-    val spark = media.sparkSession
-    phashParamsOf(spark, path) // params must exist (fail loudly otherwise)
-    Dedup.withIndexLease(Dedup.indexFs(spark, path), path,
-        "appendToPhashIndex") {
-      perceptualHash(media, codec)
-        .write.mode("append").parquet(s"$path/hashes/epoch=-1")
-    }
-  }
+      codec: MediaCodec = StubCodec): Unit =
+    EpochIndex.append(media.sparkSession, path, PhashIndex, "appendToPhashIndex")(
+      phashFrames(media, codec))
 
-  /** Streaming admission ([[Dedup.admitEpoch]]'s contract): OVERWRITE
-    * epoch `epochId`'s delta with this slice's hashes. */
+  /** [[dedupStreamAgainstPhashIndex]]'s admission of ONE epoch outside a
+    * stream: stage this slice's hashes as epoch `epochId`, commit. */
   private[graft] def admitPhashEpoch(media: Dataset[MediaRow], path: String,
       epochId: Long, codec: MediaCodec = StubCodec): Unit =
-    perceptualHash(media, codec)
-      .write.mode("overwrite").parquet(s"$path/hashes/epoch=$epochId")
+    EpochIndex.admitEpoch(media.sparkSession, path, PhashIndex, epochId)(
+      phashFrames(media, codec))
 
   /** Per-batch-media matches against the persisted index:
     * (media_id, n_index_matched, min_hamming) for every batch row with at
@@ -382,21 +365,20 @@ object Multimodal {
     * bands broadcast against the index scan (the corpus-scale index never
     * shuffles; its banding is `maxHamming + 1` cheap bit-ops per scanned
     * row), the candidate verify is one popcount per candidate, and
-    * `excludeEpoch` prunes a replaying epoch's own delta at listing time.
+    * `excludeEpoch` leaves a replaying epoch's own admission unread.
     * Batch-INTERNAL near-dups both survive (the index only knows past
     * batches); compose with [[perceptualDedupPairs]] for within-batch. */
   def phashIndexMatches(batch: Dataset[MediaRow], path: String,
       codec: MediaCodec = StubCodec,
       excludeEpoch: Option[Long] = None): DataFrame = {
     val spark = batch.sparkSession
-    val maxHamming = phashParamsOf(spark, path)
+    val m = EpochIndex.committed(spark, path, PhashIndex)
+    val maxHamming = m.param("max_hamming").toInt
     val bHash = perceptualHash(batch, codec)
     val bBand = bHash.select(col("media_id"),
         posexplode(array(Dedup.hammingChunks(col("phash"), maxHamming): _*)))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "chunk")
-    val idx0 = spark.read.parquet(s"$path/hashes")
-    val idx = excludeEpoch.foldLeft(idx0)(
-      (i, e) => i.filter(col("epoch") =!= lit(e)))
+    val idx = EpochIndex.scan(spark, path, PhashIndex, m, "hashes", excludeEpoch)
     val iBand = idx.select(col("media_id").as("idx_id"),
         col("phash").as("idx_phash"),
         posexplode(array(Dedup.hammingChunks(col("phash"), maxHamming): _*)))
@@ -430,50 +412,24 @@ object Multimodal {
 
   /** Continuous-ingestion form, with [[Dedup.dedupStreamAgainstHashIndex]]'s
     * replay contract verbatim: every micro-batch probes the index
-    * EXCLUDING its own epoch's delta, survivors go to `writeBatch`
-    * (idempotent on the epoch id), and admission OVERWRITES the epoch's
-    * partition — an at-least-once retry recomputes the identical survivor
-    * set. One live stream per index path. */
+    * EXCLUDING its own epoch, survivors go to `writeBatch` (idempotent on
+    * the epoch id) while their hashes are staged, and the epoch commits
+    * only after both succeeded — an at-least-once retry recomputes the
+    * identical survivor set. One live stream per index path. */
   def dedupStreamAgainstPhashIndex(stream: DataFrame, path: String,
       codec: MediaCodec = StubCodec, admit: Boolean = true)(
       writeBatch: (Dataset[MediaRow], Long) => Unit)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, epochId: Long) =>
+    EpochIndex.foreachEpoch(stream, path, PhashIndex, admit)((batch, epochId) => {
       import batch.sparkSession.implicits._
-      val fresh = dedupAgainstPhashIndex(batch.as[MediaRow], path, codec,
-        excludeEpoch = Some(epochId)).persist()
-      try {
-        // overlap write + admission ([[Dedup.dedupStreamAgainstHashIndex]]'s
-        // rationale): independent actions, replay-contract-covered
-        if (admit) Exec.concurrently(
-          writeBatch(fresh, epochId),
-          admitPhashEpoch(fresh, path, epochId, codec))
-        else writeBatch(fresh, epochId)
-      } finally { fresh.unpersist(); () }
-    }
+      dedupAgainstPhashIndex(batch.as[MediaRow], path, codec, excludeEpoch = Some(epochId))
+    })((fresh, m) => phashFrames(fresh, codec)(m))(writeBatch)
 
-  /** Merge accreted epoch deltas into `epoch=-1`, dropping duplicate
-    * (media_id, phash) rows — crash-safe via [[Dedup.swapCompacted]];
-    * only run while no stream owns the index. Returns partitions merged,
-    * 0 if already compact. */
-  def compactPhashIndex(spark: SparkSession, path: String): Int = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    Dedup.withIndexLease(fs, path, "compactPhashIndex") {
-      Dedup.recoverCompaction(fs, path, "hashes")
-      val n = fs.listStatus(new Path(s"$path/hashes"))
-        .count(st => st.isDirectory && st.getPath.getName.startsWith("epoch="))
-      if (n <= 1) 0
-      else {
-        Dedup.swapCompacted(fs, path, "hashes", { tmp =>
-          spark.read.parquet(s"$path/hashes").drop("epoch").distinct()
-            .write.mode("overwrite").parquet(tmp)
-        })
-        n
-      }
-    }
-  }
+  /** Merge the committed epochs into one generation, dropping duplicate
+    * (media_id, phash) rows; only run while no stream owns the index.
+    * Returns epochs merged, 0 if already compact. */
+  def compactPhashIndex(spark: SparkSession, path: String): Int =
+    EpochIndex.compact(spark, path, PhashIndex, "compactPhashIndex")
 
   /** Build a MediaRow table from the documents corpus (text bytes standing in
     * for media payloads — deterministic, keeps the pipeline testable). */

@@ -338,9 +338,9 @@ object Similarity extends org.apache.spark.internal.Logging {
   def saveLshIndex(index: DataFrame, numBits: Int, seed: Long, path: String,
       int8: Boolean = false): Unit = {
     val spark = index.sparkSession
-    // single-writer lease (Dedup.withIndexLease contract): concurrent
+    // single-writer lease (EpochIndex.withIndexLease contract): concurrent
     // save/append/compact on one index path fail loudly, not corrupt
-    Dedup.withIndexLease(Dedup.indexFs(spark, path), path, "saveLshIndex") {
+    EpochIndex.withIndexLease(EpochIndex.indexFs(spark, path), path, "saveLshIndex") {
       // cluster each bucket into one task before partitionBy: otherwise every
       // input partition emits a file per bucket it touches (N x 2^bits small
       // files), and probe-time file listing/opens dominate the scan it saved
@@ -409,13 +409,15 @@ object Similarity extends org.apache.spark.internal.Logging {
   def appendToLshIndex(
       newVecs: DataFrame, idCol: String, vecCol: String, path: String): Unit = {
     val spark = newVecs.sparkSession
-    val params = spark.read.parquet(s"$path/params")
-    val p = params.select(col("num_bits"), col("seed")).head()
-    // deltas must keep the index's storage form: appending raw doubles to an
-    // int8 index would mix schemas inside the bucket files
-    val int8 = params.columns.contains("int8") &&
-      params.select(col("int8")).head().getBoolean(0)
-    Dedup.withIndexLease(Dedup.indexFs(spark, path), path, "appendToLshIndex") {
+    EpochIndex.withIndexLease(EpochIndex.indexFs(spark, path), path, "appendToLshIndex") {
+      // params are read under the lease, so a concurrent rebuild cannot
+      // hand this append the planes of the index it replaced
+      val params = spark.read.parquet(s"$path/params")
+      val p = params.select(col("num_bits"), col("seed")).head()
+      // deltas must keep the index's storage form: appending raw doubles to an
+      // int8 index would mix schemas inside the bucket files
+      val int8 = params.columns.contains("int8") &&
+        params.select(col("int8")).head().getBoolean(0)
       storageForm(lshIndex(newVecs, idCol, vecCol, p.getInt(0), p.getLong(1)), int8)
         .repartition(col("bucket"))
         .write.mode("append").partitionBy("bucket").parquet(s"$path/buckets")
@@ -480,7 +482,7 @@ object Similarity extends org.apache.spark.internal.Logging {
       index: DataFrame, cents: Array[(Int, Array[Double])], path: String,
       int8: Boolean = false): Unit = {
     val spark = index.sparkSession
-    Dedup.withIndexLease(Dedup.indexFs(spark, path), path, "saveIvfIndex") {
+    EpochIndex.withIndexLease(EpochIndex.indexFs(spark, path), path, "saveIvfIndex") {
       // one file per cell (see saveLshIndex): probe-time listing cost stays
       // proportional to probed cells, not input partitioning
       ivfStorageForm(index, int8).repartition(col("cell"))
@@ -584,14 +586,15 @@ object Similarity extends org.apache.spark.internal.Logging {
   def appendToIvfIndex(
       newVecs: DataFrame, idCol: String, vecCol: String, path: String): Unit = {
     val spark = newVecs.sparkSession
-    val cents = spark.read.parquet(s"$path/centroids")
-      .select(col("cell"), col("centroid"))
-      .collect()
-      .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
-      .sortBy(_._1)
-    // schema-detect the persisted storage form so deltas match it
-    val int8 = spark.read.parquet(s"$path/assignments").columns.contains("q")
-    Dedup.withIndexLease(Dedup.indexFs(spark, path), path, "appendToIvfIndex") {
+    EpochIndex.withIndexLease(EpochIndex.indexFs(spark, path), path, "appendToIvfIndex") {
+      // read under the lease (appendToLshIndex's rationale)
+      val cents = spark.read.parquet(s"$path/centroids")
+        .select(col("cell"), col("centroid"))
+        .collect()
+        .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
+        .sortBy(_._1)
+      // schema-detect the persisted storage form so deltas match it
+      val int8 = spark.read.parquet(s"$path/assignments").columns.contains("q")
       ivfStorageForm(
           newVecs.select(col(idCol).as("vec_id"), col(vecCol).as("v"))
             .withColumn("cell", best_centroid(col("v"), cents.map(_._2))), int8)
@@ -620,7 +623,7 @@ object Similarity extends org.apache.spark.internal.Logging {
    */
   def compactLshIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       maxFilesPerBucket: Int = 1): Int =
-    Dedup.withIndexLease(Dedup.indexFs(spark, path), path, "compactLshIndex") {
+    EpochIndex.withIndexLease(EpochIndex.indexFs(spark, path), path, "compactLshIndex") {
       compactPartitionedTable(spark, s"$path/buckets", "bucket", maxFilesPerBucket)
     }
 
@@ -628,7 +631,7 @@ object Similarity extends org.apache.spark.internal.Logging {
     * `assignments/`; `centroids/` (the cell geometry) is untouched. */
   def compactIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       maxFilesPerCell: Int = 1): Int =
-    Dedup.withIndexLease(Dedup.indexFs(spark, path), path, "compactIvfIndex") {
+    EpochIndex.withIndexLease(EpochIndex.indexFs(spark, path), path, "compactIvfIndex") {
       compactPartitionedTable(spark, s"$path/assignments", "cell", maxFilesPerCell)
     }
 

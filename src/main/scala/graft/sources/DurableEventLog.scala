@@ -302,7 +302,7 @@ object DurableEventLog extends EventLogClient with Logging {
     require(target >= 0 && target < partitions,
       s"partition id $target out of range [0, $partitions)")
     val fs = ParquetIO.fs(path)
-    graft.operators.Dedup.withIndexLease(fs, path, "durableSend") {
+    graft.operators.EpochIndex.withIndexLease(fs, path, "durableSend") {
       val dir = segDirOf(fs, path, target)
       fs.mkdirs(dir)
       writeSegment(segFile(dir, listedNextSegId(fs, path, target)), Seq(event))
@@ -401,7 +401,7 @@ object DurableEventLog extends EventLogClient with Logging {
   private[sources] def publishStaged(path: String, queryId: String, epochId: Long,
       taskDirsInOrder: Seq[String]): Long = {
     val fs = ParquetIO.fs(path)
-    graft.operators.Dedup.withIndexLease(fs, path, "durablePublish") {
+    graft.operators.EpochIndex.withIndexLease(fs, path, "durablePublish") {
       val epochDir = stagingDir(path, queryId, epochId)
       if (epochCommitted(path, queryId, epochId)) {
         fs.delete(epochDir, true)

@@ -36,6 +36,22 @@ class HarnessSpec extends AnyFunSuite {
     assert(copies.isEmpty, s"open parquet files through graft.sources.ParquetIO, not in $copies")
   }
 
+  test("index manifests, leases and epoch directories are built in EpochIndex.scala alone") {
+    // one commit protocol for the persisted indexes: no family writes its
+    // own manifest, takes its own lease or names its own epoch directory
+    val sources = scalaFiles("src/main/scala/graft/operators")
+    assert(sources.exists(_.toString.endsWith("/operators/EpochIndex.scala")))
+    val needles = Seq("manifest-", "__lease", "epoch=")
+    val copies = for {
+      p <- sources if !p.toString.endsWith("/operators/EpochIndex.scala")
+      (line, i) <- Files.readAllLines(p).asScala.zipWithIndex
+      code = line.trim
+      if !Seq("*", "//", "/*").exists(code.startsWith)
+      n <- needles if code.contains(n)
+    } yield s"$p:${i + 1}: $n"
+    assert(copies.isEmpty, s"go through graft.operators.EpochIndex, not $copies")
+  }
+
   test("Bench.r4 keeps a failed query's small negative marker negative") {
     assert(Bench.r4(-0.00003) == -0.0001)
     assert(Bench.r4(-1.23456) == -1.2346)

@@ -162,7 +162,6 @@ class PlanSpec extends AnyFunSuite {
       assert(p.contains("TakeOrderedAndProject"), p)
       assert(!p.contains("SortMergeJoin"), p)
     } finally {
-      operators.CorpusOps.forgetBm25Stats(path)
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base)); ()
     }
   }

@@ -626,7 +626,6 @@ class DedupSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     val s2 = Dedup.dedupAgainstMinHashIndex(batch2, "doc_id", "text", path)
     assert(s2.select($"doc_id").as[Long].collect().toSet == Set(21L))
-    Dedup.forgetMinHashIndex(path)
   }
 
   test("minhash index: streaming admission with replay-safe epoch exclusion") {
@@ -648,7 +647,6 @@ class DedupSpec extends AnyFunSuite {
     // un-excluded probe self-collides; the next epoch sees the admission
     assert(probe(exclude = None).isEmpty)
     assert(probe(exclude = Some(8L)).isEmpty)
-    Dedup.forgetMinHashIndex(path)
   }
 
   test("re-saving an index path drops stale epoch deltas (hash + minhash families)") {
@@ -662,21 +660,24 @@ class DedupSpec extends AnyFunSuite {
     assert(Dedup.dedupAgainstHashIndex(probe, Seq($"text"), path)
         .select($"doc_id").as[Long].collect().toSet == Set(60L),
       "stale epoch delta survived a fresh saveHashIndex")
-    assert(Dedup.loadHashIndex(spark, path)
-      .select($"epoch").distinct().as[Long].collect().toSeq == Seq(-1L))
-    // minhash family: same contract
+    // one committed generation after a re-save
+    val gens = Dedup.loadHashIndex(spark, path)
+      .select($"epoch").distinct().as[Long].collect().toSeq
+    assert(gens.length == 1 && gens.head < 0, s"committed epochs after re-save: $gens")
+    // minhash family: same contract, and nothing else left on disk
     val p2 = java.nio.file.Files.createTempDirectory("mh-idx-resave").toString
     Dedup.saveMinHashIndex(docs, "doc_id", "text", p2)
     Dedup.admitMinHashEpoch(stale, "doc_id", "text", p2, 3L)
     Dedup.saveMinHashIndex(docs, "doc_id", "text", p2)
     val fs = new org.apache.hadoop.fs.Path(p2)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Seq("bands", "shingles").foreach { t =>
-      val kids = fs.listStatus(new org.apache.hadoop.fs.Path(s"$p2/$t"))
+    val kidsOf = Seq("bands", "shingles").map { t =>
+      fs.listStatus(new org.apache.hadoop.fs.Path(s"$p2/$t"))
         .filter(_.isDirectory).map(_.getPath.getName).toSet
-      assert(kids.filter(_.startsWith("epoch=")) == Set("epoch=-1"),
-        s"$t kept stale deltas: $kids")
+        .filter(_.startsWith("epoch="))
     }
+    assert(kidsOf.forall(_.size == 1) && kidsOf.distinct.size == 1,
+      s"re-save kept stale deltas: $kidsOf")
   }
 
   test("hash index: epoch compaction merges deltas without changing probes") {
@@ -730,11 +731,10 @@ class DedupSpec extends AnyFunSuite {
     // broken automatically instead of bricking the index
     val out2 = fs.create(lease, false)
     out2.write("deadWriter@crash".getBytes("UTF-8")); out2.close()
-    val old = System.currentTimeMillis() - Dedup.IndexLeaseStaleMs - 60000
+    val old = System.currentTimeMillis() - EpochIndex.IndexLeaseStaleMs - 60000
     fs.setTimes(lease, old, old)
     assert(Dedup.compactHashIndex(spark, path) >= 0) // acquires by breaking
     assert(!fs.exists(lease))
-    Dedup.forgetHashIndex(path)
   }
 
   test("index lease heartbeat: a body outliving the stale window keeps its lease") {
@@ -751,16 +751,16 @@ class DedupSpec extends AnyFunSuite {
     // test host the beat thread can be scheduler-starved for hundreds of
     // ms — the window must dwarf plausible starvation or the test flakes
     // on exactly the contention it is supposed to survive
-    Dedup.withIndexLease(fs, path, "slowCompaction", staleMs = 2000L) {
+    EpochIndex.withIndexLease(fs, path, "slowCompaction", staleMs = 2000L) {
       Thread.sleep(6000L) // 3x the stale window
       val e = intercept[IllegalStateException](
-        Dedup.withIndexLease(fs, path, "thief", staleMs = 2000L) {
+        EpochIndex.withIndexLease(fs, path, "thief", staleMs = 2000L) {
           fail("a live heartbeating lease was stolen")
         })
       assert(e.getMessage.contains("slowCompaction"), e.getMessage)
     }
     // released: the next writer acquires immediately
-    Dedup.withIndexLease(fs, path, "next") { () }
+    EpochIndex.withIndexLease(fs, path, "next") { () }
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$path/__lease")))
   }
 
@@ -777,7 +777,6 @@ class DedupSpec extends AnyFunSuite {
     spark.conf.set(Dedup.MinHashBatchGuardConfKey, "0")
     try assert(Dedup.minHashIndexMatches(docs, "doc_id", "text", path).columns.length == 3)
     finally spark.conf.unset(Dedup.MinHashBatchGuardConfKey)
-    Dedup.forgetMinHashIndex(path)
   }
 
   test("minhash index probe agrees with decontaminateNearDup on the same params") {
@@ -799,7 +798,6 @@ class DedupSpec extends AnyFunSuite {
     assert(viaIndex == viaLive,
       s"index-only=${viaIndex -- viaLive} live-only=${viaLive -- viaIndex}")
     assert(viaIndex.nonEmpty, "paraphrases must be caught at all")
-    Dedup.forgetMinHashIndex(path)
   }
 
   test("minhash index: drift detection and epoch compaction") {
@@ -825,7 +823,6 @@ class DedupSpec extends AnyFunSuite {
     assert(survivors().isEmpty, "compaction must not change probe results")
     assert(Dedup.compactMinHashIndex(spark, path) == 0, "already compact")
     Dedup.validateMinHashIndex(grown, "doc_id", "text", path) // now current
-    Dedup.forgetMinHashIndex(path)
   }
 
   test("minhash compaction dedups double-admitted docs and survives a crashed swap") {
@@ -838,31 +835,44 @@ class DedupSpec extends AnyFunSuite {
     Dedup.admitMinHashEpoch(again, "doc_id", "text", path, 7L)
     Dedup.admitMinHashEpoch(again, "doc_id", "text", path, 8L)
     assert(Dedup.compactMinHashIndex(spark, path) == 3)
-    val nDocRows = spark.read.parquet(s"$path/shingles")
-      .filter($"doc_id" === 1L).count()
+    def shingleRows(id: Long) = spark.read.parquet(s"$path/shingles")
+      .filter($"doc_id" === id).count()
+    val nDocRows = shingleRows(1L)
     assert(nDocRows == 1, s"double-admitted doc kept $nDocRows shingle rows")
-    // crashed swap: live table renamed aside, process died before swap-in.
-    // The next compaction must RESTORE from the backup, not fail or lose
-    // the index (the old delete-then-rename left nothing to restore).
+    // crashed swap: the merged generation is fully written but the process
+    // dies before the manifest flip. Built from the files of a real run:
+    // the pre-compaction index plus the generation a compaction wrote.
+    import org.apache.commons.io.FileUtils
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def p(s: String) = new org.apache.hadoop.fs.Path(s"$path/$s")
-    assert(fs.rename(p("shingles"), p("shingles__precompact")))
-    Dedup.admitMinHashEpoch(again, "doc_id", "text", path, 9L) // recreates dir
-    fs.delete(p("shingles/epoch=9"), true); fs.delete(p("shingles"), true)
-    assert(Dedup.compactMinHashIndex(spark, path) >= 1)
-    assert(spark.read.parquet(s"$path/shingles").filter($"doc_id" === 1L).count() == 1,
-      "recovery from __precompact backup lost the shingles table")
-    // the narrower crash window: swap-out done AND the empty live shell
-    // recreated by mkdirs, but the compacted data never renamed in. The
-    // empty shell must NOT be mistaken for a completed swap.
-    Dedup.admitMinHashEpoch(again, "doc_id", "text", path, 10L)
-    assert(fs.rename(p("shingles"), p("shingles__precompact")))
-    assert(fs.mkdirs(p("shingles")))
-    assert(Dedup.compactMinHashIndex(spark, path) >= 1)
-    assert(spark.read.parquet(s"$path/shingles").filter($"doc_id" === 1L).count() == 1,
-      "empty mkdirs shell was mistaken for a completed swap — index lost")
-    Dedup.forgetMinHashIndex(path)
+    def epochDirs(t: String) = fs.listStatus(new org.apache.hadoop.fs.Path(s"$path/$t"))
+      .map(_.getPath.getName).filter(_.startsWith("epoch=")).toSet
+    Dedup.admitMinHashEpoch(again, "doc_id", "text", path, 9L)
+    val probe = Seq((300L, docs.filter($"doc_id" === 1L).select($"text").as[String].head()))
+      .toDF("doc_id", "text")
+    def survivors() = Dedup.dedupAgainstMinHashIndex(probe, "doc_id", "text", path)
+      .select($"doc_id").as[Long].collect().toSet
+    assert(survivors().isEmpty)
+    val committedBefore = EpochIndex.committed(spark, path, Dedup.MinHashIndex).epochs
+    val bak = java.nio.file.Files.createTempDirectory("mh-idx-crash-bak").toFile
+    FileUtils.copyDirectory(new java.io.File(path), bak)
+    assert(Dedup.compactMinHashIndex(spark, path) == 2)
+    val merged = epochDirs("shingles").head
+    Seq("bands", "shingles").foreach(t => FileUtils.copyDirectory(
+      new java.io.File(s"$path/$t/$merged"), new java.io.File(bak, s"$t/$merged")))
+    FileUtils.deleteDirectory(new java.io.File(path))
+    FileUtils.moveDirectory(bak, new java.io.File(path))
+    // the previous index keeps serving; the merged generation is an orphan
+    assert(EpochIndex.committed(spark, path, Dedup.MinHashIndex).epochs == committedBefore)
+    assert(epochDirs("shingles").contains(merged))
+    assert(survivors().isEmpty, "the previous index must keep serving after a crashed flip")
+    // the next compaction merges the committed epochs and prunes the orphan
+    assert(Dedup.compactMinHashIndex(spark, path) == 2)
+    assert(survivors().isEmpty)
+    assert(shingleRows(1L) == 1, "recovery lost or duplicated the shingles table")
+    Seq("bands", "shingles").foreach(t =>
+      assert(epochDirs(t).size == 1 && !epochDirs(t).contains(merged),
+        s"$t kept the orphan generation: ${epochDirs(t)}"))
   }
 
   test("dedupParagraphsWithinDoc keeps first occurrences, zero shuffle") {
@@ -2044,8 +2054,9 @@ class MultimodalSpec extends AnyFunSuite {
     // excluding its own epoch, the replaying batch sees the pre-epoch index
     assert(Multimodal.dedupAgainstPhashIndex(fresh, path,
       excludeEpoch = Some(7L)).count() == 1)
-    // compaction merges epochs, probes unchanged
-    assert(Multimodal.compactPhashIndex(spark, path) == 2)
+    // compaction merges epochs (saved + appended generations and epoch 7),
+    // probes unchanged
+    assert(Multimodal.compactPhashIndex(spark, path) == 3)
     assert(Multimodal.dedupAgainstPhashIndex(fresh, path).count() == 0)
     assert(Multimodal.compactPhashIndex(spark, path) == 0)
     // writer lease: a held lease refuses mutation
@@ -2057,7 +2068,6 @@ class MultimodalSpec extends AnyFunSuite {
     intercept[IllegalStateException](Multimodal.appendToPhashIndex(fresh, path))
     fs.delete(lease, false)
     media.unpersist()
-    Multimodal.forgetPhashIndex(path)
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
   }
 
@@ -2076,7 +2086,6 @@ class MultimodalSpec extends AnyFunSuite {
     val probe = Seq(row(10L, "stale streamed payload " * 12)).toDS()
     assert(Multimodal.phashIndexMatches(probe, path).collect().isEmpty,
       "stale epoch delta survived a fresh savePhashIndex")
-    Multimodal.forgetPhashIndex(path)
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
   }
 
@@ -2109,7 +2118,6 @@ class MultimodalSpec extends AnyFunSuite {
     q.processAllAvailable()
     q.stop()
     assert(got.toSet == Set(3L, 5L), s"got ${got.toSet}")
-    Multimodal.forgetPhashIndex(path)
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
   }
 }

@@ -1180,7 +1180,6 @@ class CorpusOpsSpec extends AnyFunSuite {
       CorpusOps.appendToBm25Stats(docs.limit(1), "doc_id", "text", path, epoch = 2))
     assert(c.getMessage.contains("saveBm25Stats@other"), c.getMessage)
     fs.delete(lease, false)
-    CorpusOps.forgetBm25Stats(path)
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
     ()
   }
@@ -1240,7 +1239,6 @@ class CorpusOpsSpec extends AnyFunSuite {
     assert(key(CorpusOps.bm25SearchWithStats(withNulls, "doc_id", "text", q, path2, k = 10)) ==
       key(CorpusOps.bm25Search(withNulls, "doc_id", "text", q, k = 10)),
       "null-text docs broke the exact-reproduction contract")
-    CorpusOps.forgetBm25Stats(path); CorpusOps.forgetBm25Stats(path2)
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
     ()
   }

@@ -216,7 +216,6 @@ class FuzzySpec extends AnyFunSuite {
     }
     assert(bag.size == bag.distinct.size && bag.toSet == live,
       s"double append duplicated pairs: $bag")
-    Fuzzy.forgetFuzzyIndex(p1); Fuzzy.forgetFuzzyIndex(p2)
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
   }
 
@@ -236,7 +235,6 @@ class FuzzySpec extends AnyFunSuite {
         "id", "key").as[(Long, Long, Int)].collect().toSet
       finally fitted.release()
     assert(hits.isEmpty, s"stale delta survived a fresh saveFuzzyIndex: $hits")
-    Fuzzy.forgetFuzzyIndex(path)
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
   }
 
@@ -265,7 +263,6 @@ class FuzzySpec extends AnyFunSuite {
     assert(Fuzzy.compactFuzzyIndex(spark, path) == 2)
     assert(probeIdx(path, probe) == after1)
     assert(Fuzzy.compactFuzzyIndex(spark, path) == 0)
-    Fuzzy.forgetFuzzyIndex(path)
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
   }
 
@@ -287,13 +284,12 @@ class FuzzySpec extends AnyFunSuite {
     // the failed writer must not have mutated the index
     assert(probeIdx(path, Seq(10L -> "miitten")).isEmpty)
     // a dead writer's stale lease is broken automatically
-    val old = System.currentTimeMillis() - Dedup.IndexLeaseStaleMs - 60000
+    val old = System.currentTimeMillis() - EpochIndex.IndexLeaseStaleMs - 60000
     fs.setTimes(lease, old, old)
     Fuzzy.appendToFuzzyIndex(Seq(2L -> "mitten").toDF("id", "key"),
       "id", "key", path)
     assert(probeIdx(path, Seq(10L -> "miitten")) == Set((2L, 10L, 1)))
     assert(!fs.exists(lease), "winner must release the lease")
-    Fuzzy.forgetFuzzyIndex(path)
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
   }
 
@@ -323,7 +319,6 @@ class FuzzySpec extends AnyFunSuite {
         "id", "key", "id", "key", maxDist = 1)
       .as[(Long, Long, Int)].collect().toSet
     assert(got.toSet == batch, s"stream ${got.toSet} != batch $batch")
-    Fuzzy.forgetFuzzyIndex(path)
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
   }
 }

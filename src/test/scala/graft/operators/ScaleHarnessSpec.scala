@@ -361,7 +361,6 @@ class ScaleHarnessSpec extends AnyFunSuite {
         .as[(Long, Long, Double)].collect().toSeq == direct)
     } finally {
       docs.unpersist()
-      CorpusOps.forgetBm25Stats(path)
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base)); ()
     }
   }

@@ -123,7 +123,6 @@ class ValidationSpec extends AnyFunSuite {
         Seq("alpha"), path, k = 5).collect().toSeq ==
       CorpusOps.bm25Search(docs, "doc_id", "text", Seq("alpha"), k = 5)
         .collect().toSeq)
-    CorpusOps.forgetBm25Stats(path)
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
     ()
   }

@@ -883,7 +883,6 @@ class StreamOpsSpec extends AnyFunSuite {
           .cast("double").as("n_tok")), 0L)
     assert(tracker.counts == fresh.counts,
       "replayed epoch double-merged into the drift tracker")
-    Dedup.forgetHashIndex(idxPath)
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
     ()
   }
