@@ -1232,7 +1232,9 @@ object Dedup extends Logging {
         spark.sessionState.conf.autoBroadcastJoinThreshold, 10L << 20)) * 8)
     if (cap <= 0) return
     val est = batch.queryExecution.optimizedPlan.stats.sizeInBytes
-    require(est <= cap,
+    // spark.sql.defaultSizeInBytes is Spark's "no statistics" estimate (a
+    // MemoryStream micro-batch reports it): unknown, not corpus-sized
+    require(est <= cap || est == BigInt(spark.sessionState.conf.defaultSizeInBytes),
       s"minHashIndexMatches broadcasts the BATCH side by contract (its bands " +
         s"probe the index scan, its candidate set probes the shingle scan), " +
         s"but the batch's plan-size estimate ($est bytes) exceeds the guard " +

@@ -70,8 +70,9 @@ private[graft] object EpochIndex {
     * a live writer outliving the threshold (a corpus-scale compaction
     * can easily run past 30 min) keeps its lease fresh instead of having
     * it silently broken — and its swap corrupted — by a concurrent
-    * writer. Best-effort by design: HDFS create-exclusive is atomic; on
-    * stores without atomic create the guard still refuses every
+    * writer. Best-effort by design: create-exclusive is atomic on HDFS
+    * and on local paths through [[indexFs]] (`CREATE_NEW`); on stores
+    * without atomic create the guard still refuses every
     * OBSERVABLE overlap — its job is turning a silent corruption into a
     * loud error, not distributed locking. */
   private[graft] def withIndexLease[T](fs: org.apache.hadoop.fs.FileSystem,
@@ -91,14 +92,14 @@ private[graft] object EpochIndex {
     var acquired = tryAcquire()
     if (!acquired) {
       val age =
-        try System.currentTimeMillis() - fs.getFileStatus(lease).getModificationTime
-        catch {
-          // holder released between our failed create and the stat: retry
-          case _: java.io.FileNotFoundException => Long.MaxValue
-        }
-      if (age >= staleMs) {
-        fs.delete(lease, false)
-        acquired = tryAcquire()
+        try Some(System.currentTimeMillis() - fs.getFileStatus(lease).getModificationTime)
+        catch { case _: java.io.FileNotFoundException => None }
+      acquired = age match {
+        // the holder released between our failed create and the stat: try
+        // once more, without deleting — a third writer may hold it by now
+        case None => tryAcquire()
+        case Some(a) if a >= staleMs => fs.delete(lease, false); tryAcquire()
+        case _ => false
       }
       if (!acquired) {
         val holder =
@@ -148,10 +149,10 @@ private[graft] object EpochIndex {
     }
   }
 
-  private[graft] def indexFs(spark: org.apache.spark.sql.SparkSession,
-      path: String): org.apache.hadoop.fs.FileSystem =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  /** The FileSystem of an index path under the session's Hadoop conf: the
+    * fork-free local one for local paths ([[graft.sources.ParquetIO.fs]]). */
+  private[graft] def indexFs(spark: SparkSession, path: String): FileSystem =
+    graft.sources.ParquetIO.fs(new Path(path), spark.sparkContext.hadoopConfiguration)
 
   // ---- manifests ----
 

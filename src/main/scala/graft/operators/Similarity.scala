@@ -647,7 +647,7 @@ object Similarity extends org.apache.spark.internal.Logging {
     import org.apache.hadoop.fs.Path
     require(maxFiles >= 1, s"maxFiles must be >= 1, got $maxFiles")
     val root = new Path(table)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = EpochIndex.indexFs(spark, table)
     def dataFiles(dir: Path) = fs.listStatus(dir).filter(st => st.isFile &&
       !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith("."))
     val overAll = fs.listStatus(root)

@@ -25,7 +25,7 @@ import types._
  * Layout under the `durablePath` root:
  * {{{
  *   _meta/partitions                 one-line text: the partition count
- *   __lease                          single-writer lease (Dedup's machinery)
+ *   __lease                          single-writer lease (EpochIndex.withIndexLease)
  *   staging/<queryId>/<epoch>/t<taskPartition>-<taskId>/p<pid>.parquet
  *   commits/<queryId>-<epoch>        empty marker: epoch published
  *   segments/p=<pid>/seg-<000000000000N>.parquet
@@ -53,15 +53,18 @@ import types._
  * read contract of [[ParquetEventLog]].
  *
  * Commit cost: every file goes through [[ParquetIO]] — one shared,
- * read-only Hadoop conf, and parquet readers given explicit options —
- * because a fresh `Configuration` costs 7-9 ms, and with one per staged
- * file, footer and reader the driver commit of a 16-file epoch took
- * 300-400 ms. The commit then does work in proportion to THIS epoch's files:
- * each partition's next segment id comes from a per-(path, partition)
- * tail cache, checked only against the existence of `seg-<next>` (an
- * existing one means another writer appended: re-list), and each renamed
- * file's footer row count carries over to its segment name, so nothing
- * re-lists or re-opens the log's older segments.
+ * read-only Hadoop conf, parquet readers given explicit options, and for
+ * local paths a FileSystem that sets file modes without forking `chmod` —
+ * because a fresh `Configuration` costs 7-9 ms (with one per staged file,
+ * footer and reader the driver commit of a 16-file epoch took 300-400 ms),
+ * and Hadoop's local FileSystem forks once per file and directory it
+ * creates, about 40 times per epoch. The commit then does work in
+ * proportion to THIS epoch's files: each partition's next segment id
+ * comes from a per-(path, partition) tail cache, checked only against the
+ * existence of `seg-<next>` (an existing one means another writer
+ * appended: re-list), and each renamed file's footer row count carries
+ * over to its segment name, so nothing re-lists or re-opens the log's
+ * older segments.
  */
 object DurableEventLog extends EventLogClient with Logging {
 
@@ -150,7 +153,7 @@ object DurableEventLog extends EventLogClient with Logging {
   def invalidate(path: String): Unit = {
     metaCache.remove(path)
     val root = ParquetIO.fs(path).makeQualified(new Path(path)).toString + "/"
-    footers.keySet().removeIf(_.startsWith(root))
+    footers.synchronized(footers.keySet().removeIf(_.startsWith(root)))
     segTail.keySet().removeIf(_._1 == path)
     ()
   }
@@ -162,12 +165,31 @@ object DurableEventLog extends EventLogClient with Logging {
     * — never a silently wrong skip). */
   private final case class Footer(rows: Long, tsMax: Long)
 
-  /** Footer summaries by qualified file path (immutable once written —
-    * segments are never rewritten — so a process-wide cache is exact). */
-  private val footers = new ConcurrentHashMap[String, Footer]()
+  /** Most footer summaries [[footers]] keeps: a few MB, and several times
+    * the segments one benchmark run leaves. Past it a long-lived JVM evicts
+    * the least recently used entry instead of keeping one per segment it
+    * ever saw. */
+  private[sources] val FooterCacheCap = 8192
 
-  private def footerOf(f: Path): Footer =
-    footers.computeIfAbsent(f.toString, _ => readFooter(f))
+  /** Footer summaries by qualified file path, least recently used first
+    * (immutable once written — segments are never rewritten — so a cached
+    * entry is exact). Guarded by its own lock; footers are read outside it. */
+  private val footers = new java.util.LinkedHashMap[String, Footer](256, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[String, Footer]): Boolean =
+      size > FooterCacheCap
+  }
+
+  private def cacheFooter(key: String, footer: Footer): Unit =
+    footers.synchronized { footers.put(key, footer); () }
+
+  private[sources] def footerCacheSize: Int = footers.synchronized(footers.size)
+
+  private def footerOf(f: Path): Footer = {
+    val key = f.toString
+    val hit = footers.synchronized(footers.get(key))
+    if (hit != null) hit
+    else { val read = readFooter(f); cacheFooter(key, read); read }
+  }
 
   private def readFooter(f: Path): Footer = {
     val r = ParquetIO.openFooter(f)
@@ -433,7 +455,7 @@ object DurableEventLog extends EventLogClient with Logging {
               if (!fs.rename(f, dest)) throw new IllegalStateException(
                 s"staged-write commit for $path epoch $epochId: rename " +
                   s"$f -> $dest failed")
-              footers.put(dest.toString, footer) // the footer moves with the file
+              cacheFooter(dest.toString, footer) // the footer moves with the file
               nextSeg.put(pid, next + 1)
             }
         }

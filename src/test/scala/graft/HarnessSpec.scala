@@ -36,6 +36,20 @@ class HarnessSpec extends AnyFunSuite {
     assert(copies.isEmpty, s"open parquet files through graft.sources.ParquetIO, not in $copies")
   }
 
+  test("FileSystems are looked up in ParquetIO.scala and nowhere else") {
+    // ParquetIO.fs hands out the fork-free local FileSystem for local paths;
+    // a lookup of its own would get Hadoop's, which forks `chmod` per create
+    val sources = scalaFiles("src/main/scala")
+    assert(sources.exists(_.toString.endsWith("/sources/ParquetIO.scala")))
+    val needles = Seq("getFileSystem(", "FileSystem.get(")
+    val copies = for {
+      p <- sources if !p.toString.endsWith("/sources/ParquetIO.scala")
+      text = Files.readString(p)
+      n <- needles if text.contains(n)
+    } yield s"$p: $n"
+    assert(copies.isEmpty, s"get FileSystems from ParquetIO.fs or EpochIndex.indexFs, not in $copies")
+  }
+
   test("index manifests, leases and epoch directories are built in EpochIndex.scala alone") {
     // one commit protocol for the persisted indexes: no family writes its
     // own manifest, takes its own lease or names its own epoch directory

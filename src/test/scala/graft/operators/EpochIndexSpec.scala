@@ -210,16 +210,13 @@ class EpochIndexSpec extends AnyFunSuite {
       "minhash" -> (s => Dedup.dedupStreamAgainstMinHashIndex(s, "doc_id", "text", mhPath)(failing(1L)))
     ).foreach { case (name, start) =>
       val input = MemoryStream[(Long, String)]
-      // a memory stream's batches carry no size estimate; the MinHash
-      // probe's broadcast guard would refuse them
-      spark.conf.set(Dedup.MinHashBatchGuardConfKey, "0")
       val q = start(input.toDF().toDF("doc_id", "text")).start()
       try {
         input.addData(batches(0): _*)
         q.processAllAvailable()
         input.addData(batches(1): _*)
         intercept[Exception](q.processAllAvailable())
-      } finally { q.stop(); spark.conf.unset(Dedup.MinHashBatchGuardConfKey) }
+      } finally q.stop()
       val failed = df(batches(1).take(2)) // 20, 21: new texts, never output
       val kept = (name match {
         case "hash" => Dedup.dedupAgainstHashIndex(failed, Seq($"text"), hashPath)
