@@ -35,15 +35,13 @@ object Dedup extends Logging {
     * means concurrent queries sharing an operator tag cannot clobber each
     * other's counts — `lastDropStats` reports whichever invocation was
     * registered last, with numbers that belong to it. */
-  private final class DropHandle(tag: String, cap: Int, hot: DataFrame) {
+  private final class DropHandle(tag: String, cap: Int,
+      sc: org.apache.spark.SparkContext, counts: () => (Long, Long)) {
     /** The invocation's session is gone — stats can never be computed. */
-    def dead: Boolean =
-      hot.sparkSession.sparkContext.isStopped
+    def dead: Boolean = sc.isStopped
 
     lazy val stats: DropStats = {
-      val Seq(nHot, rowsHot) = hot
-        .agg(count(lit(1)), coalesce(sum(col("__df")), lit(0L)))
-        .collect().head.toSeq.map(v => v.asInstanceOf[Long])
+      val (nHot, rowsHot) = counts()
       if (nHot > 0) logWarning(
         s"[$tag] dropped $nHot hot buckets ($rowsHot index rows) over cap=$cap — " +
           "pairs within those buckets are NOT reported; raise the cap or widen " +
@@ -187,13 +185,31 @@ object Dedup extends Logging {
     // this KB-scale aggregation instead of reading a materialized table.
     val hot = hot0.mapPartitions(rows => HotKeyAlarm.wrap(tag, cap, rows))(
         org.apache.spark.sql.Encoders.row(hot0.schema))
-    dropStats.put(tag, new DropHandle(tag, cap, hot))
+    dropStats.put(tag, new DropHandle(tag, cap, hot.sparkSession.sparkContext, () => {
+      val Seq(nHot, rowsHot) = hot
+        .agg(count(lit(1)), coalesce(sum(col("__df")), lit(0L)))
+        .collect().head.toSeq.map(v => v.asInstanceOf[Long])
+      (nHot, rowsHot)
+    }))
     // explicit broadcast: the alarm's object boundary hides the hot table's
     // size from Catalyst (default estimate = huge), which would silently
     // flip this anti-join to a full shuffle of the INDEX. The hot set is
     // metadata-scale by construction (distinct keys with df > cap — the
     // stop-phrase tail), so broadcasting it is the designed plan shape.
     index.join(broadcast(hot.select(keyCols.map(col): _*)), keyCols, "left_anti")
+  }
+
+  /** [[dropHotKeys]]'s record for a guard that ran on the driver: the
+    * hot-key counts `keyCounts` over `cap` become the invocation's
+    * [[DropStats]] under `tag0` (scoped like every other drop). */
+  private def recordDrops(sc: org.apache.spark.SparkContext, tag0: String, cap: Int,
+      keyCounts: Iterable[Long]): Unit = {
+    val tag = scopedTag(tag0)
+    val hot = keyCounts.filter(_ > cap)
+    if (hot.nonEmpty) logWarning(s"[$tag] dropping ${hot.size} hot keys over cap=$cap " +
+      "— pairs within them are NOT reported")
+    dropStats.put(tag, new DropHandle(tag, cap, sc, () => (hot.size.toLong, hot.sum)))
+    ()
   }
 
   /**
@@ -1156,19 +1172,37 @@ object Dedup extends Logging {
         array_distinct(TextFunctions.wordShingles(col(textCol), k)).as("sh"))
       .filter(size(col("sh")) > 0)
 
-  private def bandRows(base: DataFrame, idAs: String,
-      numHashes: Int, bands: Int, seed: Long): DataFrame = {
-    val rows = numHashes / bands
-    val sigs = base.select(col(idAs),
-      minhash_signature(col("sh"), numHashes, seed).as("sig"))
-    val bandBuckets = (0 until bands).map(b =>
-      hash(slice(col("sig"), b * rows + 1, rows)))
-    sigs.select(col(idAs), posexplode(array(bandBuckets: _*)))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
+  // The MinHash index's math, shared by the lazy probe, the frames and the
+  // stream epoch: a document's signature over its distinct shingles, the
+  // bucket of each band of it, the 64-bit hashes of its shingles, and the
+  // Jaccard similarity of two hash sets.
+
+  private def signature(sh: Column, p: MinHashIndexParams): Column =
+    minhash_signature(sh, p.numHashes, p.seed)
+
+  /** One `array<int>` of the band buckets of a signature column: band `b`
+    * hashes signature rows `b * rows + 1 ..` (`rows = numHashes / bands`). */
+  private def bandBuckets(sig: Column, p: MinHashIndexParams): Column = {
+    val rows = p.numHashes / p.bands
+    array((0 until p.bands).map(b => hash(slice(sig, b * rows + 1, rows))): _*)
   }
 
+  private def shingleHashes(sh: Column): Column = transform(sh, s => fnv1a64(s))
+
+  private def jaccard(a: Column, b: Column): Column =
+    size(array_intersect(a, b)).cast("double") / size(array_union(a, b)).cast("double")
+
+  /** (`idAs`, band, bucket) rows of a band-bucket array column. */
+  private def bandTable(df: DataFrame, idAs: String, buckets: Column): DataFrame =
+    df.select(col(idAs), posexplode(buckets))
+      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
+
+  private def bandRows(base: DataFrame, idAs: String, p: MinHashIndexParams): DataFrame =
+    bandTable(base.select(col(idAs), signature(col("sh"), p).as("sig")),
+      idAs, bandBuckets(col("sig"), p))
+
   private def hashedShingles(base: DataFrame, idAs: String): DataFrame =
-    base.select(col(idAs), transform(col("sh"), s => fnv1a64(s)).as("hs"))
+    base.select(col(idAs), shingleHashes(col("sh")).as("hs"))
 
   /** One slice's `bands` and `shingles` rows, from one shared base, cut
     * with the manifest's params. */
@@ -1176,7 +1210,7 @@ object Dedup extends Logging {
       m: EpochIndex.Manifest): EpochIndex.Frames = {
     val p = minHashParams(m)
     val base = Exec.lazyShare(shingleBase(docs, idCol, textCol, p.k, "doc_id"))
-    Seq("bands" -> bandRows(base, "doc_id", p.numHashes, p.bands, p.seed),
+    Seq("bands" -> bandRows(base, "doc_id", p),
       "shingles" -> hashedShingles(base, "doc_id"))
   }
 
@@ -1254,8 +1288,7 @@ object Dedup extends Logging {
     val m = EpochIndex.committed(spark, path, MinHashIndex)
     val p = minHashParams(m)
     val base = Exec.lazyShare(shingleBase(batch, idCol, textCol, p.k, "doc_id"))
-    val bBand = dropHotKeys(
-      bandRows(base, "doc_id", p.numHashes, p.bands, p.seed),
+    val bBand = dropHotKeys(bandRows(base, "doc_id", p),
       Seq("band", "bucket"), maxBatchBucket, "minHashIndex")
     def epochScan(table: String): DataFrame =
       EpochIndex.scan(spark, path, MinHashIndex, m, table, excludeEpoch)
@@ -1267,9 +1300,7 @@ object Dedup extends Logging {
       col("doc_id").as("idx_id"), col("hs").as("idx_hs"))
     iSh.join(broadcast(cand.join(hashedShingles(base, "doc_id"), Seq("doc_id"))),
         Seq("idx_id"))
-      .withColumn("jaccard",
-        size(array_intersect(col("hs"), col("idx_hs"))).cast("double") /
-          size(array_union(col("hs"), col("idx_hs"))).cast("double"))
+      .withColumn("jaccard", jaccard(col("hs"), col("idx_hs")))
       .filter(col("jaccard") >= threshold)
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_index_matched"),
@@ -1307,17 +1338,118 @@ object Dedup extends Logging {
    * bands and shingles are staged, and the epoch commits only after both
    * succeeded — so an at-least-once retry recomputes the identical
    * survivor set, and a failed epoch admits nothing. One live stream per
-   * index path.
+   * index path. Each epoch runs [[minHashEpoch]]: the same survivors and
+   * index rows as the lazy probe, in six Spark jobs when `writeBatch` is
+   * one write.
    */
   def dedupStreamAgainstMinHashIndex(
       stream: DataFrame, idCol: String, textCol: String, path: String,
       threshold: Double = 0.5, admit: Boolean = true)(
       writeBatch: (DataFrame, Long) => Unit)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    EpochIndex.foreachEpoch(stream, path, MinHashIndex, admit)((batch, epochId) =>
-      dedupAgainstMinHashIndex(batch, idCol, textCol, path, threshold,
-        excludeEpoch = Some(epochId)))(
-      (fresh, m) => minHashFrames(fresh, idCol, textCol)(m))(writeBatch)
+    EpochIndex.foreachProbed(stream, path, MinHashIndex, admit)((batch, epochId) =>
+      minHashEpoch(batch, idCol, textCol, path, threshold, maxBatchBucket = 1000, epochId))(
+      writeBatch)
+
+  // columns the stream epoch adds to its persisted batch
+  private val EpochSh = "__graft_mh_sh"
+  private val EpochSig = "__graft_mh_sig"
+  private val EpochHs = "__graft_mh_hs"
+  private val EpochBuckets = "__graft_mh_buckets"
+
+  /**
+   * [[dedupStreamAgainstMinHashIndex]]'s probe of one epoch: the survivors
+   * of [[dedupAgainstMinHashIndex]]`(batch, excludeEpoch = Some(epochId))`,
+   * the frames [[minHashFrames]] cuts from them, and the same scoped
+   * `"minHashIndex"` drop stat, from one pass over the batch and a few
+   * small jobs instead of one lazy plan:
+   *  1. the batch is persisted once together with each document's distinct
+   *     shingle hashes and band buckets, and only those come to the driver
+   *     (the lazy probe broadcasts the same rows: the batch-sized contract
+   *     of [[requireBroadcastSizedBatch]]). The `maxBatchBucket` cap
+   *     applies here;
+   *  2. one job reads the index's band rows under the batch's buckets;
+   *  3. one job reads the candidates' shingle hashes (none without
+   *     candidates), and the Jaccard check runs on the driver over a local
+   *     relation, through the lazy probe's own expression;
+   *  4. survivors are the persisted rows of no matched document, with the
+   *     batch's own columns; the frames come from the same rows.
+   * `release` unpersists the batch.
+   */
+  private[graft] def minHashEpoch(batch: DataFrame, idCol: String, textCol: String,
+      path: String, threshold: Double, maxBatchBucket: Int,
+      epochId: Long): EpochIndex.Probed[DataFrame] = {
+    val spark = batch.sparkSession
+    requireBroadcastSizedBatch(batch)
+    val m = EpochIndex.committed(spark, path, MinHashIndex)
+    val p = minHashParams(m)
+    def epochScan(table: String): DataFrame =
+      EpochIndex.scan(spark, path, MinHashIndex, m, table, Some(epochId))
+    val iBand = epochScan("bands")
+    val iSh = epochScan("shingles")
+    val withSh = batch.select(col("*"),
+      array_distinct(TextFunctions.wordShingles(col(textCol), p.k)).as(EpochSh))
+    val withSig = withSh.select(col("*"), shingleHashes(col(EpochSh)).as(EpochHs),
+      signature(col(EpochSh), p).as(EpochSig))
+    val persisted = withSig.select(col("*"), bandBuckets(col(EpochSig), p).as(EpochBuckets))
+      .drop(EpochSh, EpochSig)
+    persisted.persist()
+    try {
+      val eligible = persisted.filter(size(col(EpochHs)) > 0)
+      val docs = eligible.select(col(idCol), col(EpochHs), col(EpochBuckets)).collect().toSeq
+      // (band, bucket) -> the batch documents in it; a null id counts
+      // toward its bucket's size but never matches (as in the lazy joins)
+      val byKey = docs.flatMap(r =>
+        r.getSeq[Int](2).zipWithIndex.map { case (b, band) => (band, b) -> r.get(0) })
+        .groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
+      recordDrops(spark.sparkContext, "minHashIndex", maxBatchBucket,
+        byKey.values.map(_.size.toLong))
+      val live = byKey.filter(_._2.size <= maxBatchBucket)
+      // batch id -> its candidate index ids
+      val cand: Map[Any, Set[Any]] =
+        if (live.isEmpty) Map.empty
+        else iBand.filter(col("bucket").isin(live.keys.map(_._2).toSeq.distinct: _*))
+          .select(col("doc_id"), col("band"), col("bucket")).collect().toSeq
+          .filterNot(_.isNullAt(0))
+          .flatMap(r => live.getOrElse((r.getInt(1), r.getInt(2)), Nil)
+            .filter(_ != null).map(_ -> r.get(0)))
+          .groupBy(_._1).map { case (d, v) => d -> v.map(_._2).toSet }
+      val matched: Set[Any] =
+        if (cand.isEmpty) Set.empty
+        else {
+          val idxHs = iSh.filter(col("doc_id").isin(cand.values.flatten.toSeq.distinct: _*))
+            .select(col("doc_id"), col("hs")).collect().toSeq
+            .groupBy(_.get(0)).map { case (i, rs) => i -> rs.map(_.getSeq[Long](1)) }
+          val pairs = for {
+            r <- docs; i <- cand.getOrElse(r.get(0), Set.empty).toSeq
+            ihs <- idxHs.getOrElse(i, Nil)
+          } yield (r.get(0), r.getSeq[Long](1), ihs)
+          val verified = spark.createDataFrame(
+              java.util.Arrays.asList(pairs.zipWithIndex.map { case ((_, hs, ihs), n) =>
+                org.apache.spark.sql.Row(n, hs, ihs) }: _*),
+              new org.apache.spark.sql.types.StructType().add("n", "int")
+                .add("hs", "array<bigint>").add("idx_hs", "array<bigint>"))
+            .filter(jaccard(col("hs"), col("idx_hs")) >= threshold)
+            .select(col("n")).collect().map(_.getInt(0))
+          verified.map(n => pairs(n)._1).toSet
+        }
+      val survivors =
+        if (matched.isEmpty) persisted
+        else persisted.filter(!coalesce(col(idCol).isin(matched.toSeq: _*), lit(false)))
+      // one file per table: a batch-sized epoch gains nothing from more
+      // writers, and every later probe opens each file of every epoch
+      val indexed = survivors.filter(size(col(EpochHs)) > 0).coalesce(1)
+      val frames: EpochIndex.Frames = Seq(
+        "bands" -> bandTable(indexed.select(col(idCol).as("doc_id"), col(EpochBuckets)),
+          "doc_id", col(EpochBuckets)),
+        "shingles" -> indexed.select(col(idCol).as("doc_id"), col(EpochHs).as("hs")))
+      val fresh = survivors.drop(EpochHs, EpochBuckets)
+      EpochIndex.Probed(fresh,
+        // params changed since the probe: cut from the survivors again
+        m2 => if (minHashParams(m2) == p) frames else minHashFrames(fresh, idCol, textCol)(m2),
+        () => { persisted.unpersist(); () })
+    } catch { case e: Throwable => persisted.unpersist(); throw e }
+  }
 
   /** [[dedupStreamAgainstMinHashIndex]]'s admission of ONE epoch outside a
     * stream: stage `df`'s bands and shingles as epoch `epochId`, commit. */

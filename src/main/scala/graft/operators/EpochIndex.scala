@@ -16,7 +16,9 @@ import org.apache.spark.sql.streaming.DataStreamWriter
  *    Negative ids are generations written by save, batch append and
  *    compaction; ids >= 0 belong to stream epochs (and BM25's epoch-keyed
  *    appends);
- *  - `manifest-<v>`: the committed epochs, the family tag and its params.
+ *  - `manifest-<v>`: the committed epochs, the family tag, its params and
+ *    the schema of each table (`schema.<table>`, recorded when the table
+ *    is first staged, so a scan needs no footer-reading inference job).
  *    Readers take the highest version that parses; the writer keeps the
  *    previous version as the fallback for a torn write;
  *  - `__lease`: the single-writer lease ([[withIndexLease]]).
@@ -279,6 +281,20 @@ private[graft] object EpochIndex {
       () => df.write.mode("overwrite").parquet(epochDir(path, t, epoch))
     })
 
+  /** `m` with the schema of each staged table it does not hold yet: a
+    * table's first staged epoch fixes the schema [[scan]] reads with. */
+  private def withSchemas(m: Manifest, frames: Frames): Manifest =
+    m.copy(params = frames.map { case (t, df) => schemaParam(t) -> df.schema.json }.toMap ++
+      m.params)
+
+  private def schemaParam(table: String): String = s"schema.$table"
+
+  /** [[stage]], then the manifest to commit. */
+  private def staged(path: String, epoch: Long, frames: Frames, m: Manifest): Manifest = {
+    stage(path, epoch, frames)
+    withSchemas(m, frames)
+  }
+
   /** Rows of the committed epochs of one table, minus `excludeEpoch`, with
     * the `epoch` column. Only the named directories are listed, so
     * uncommitted writes are never read; a committed epoch missing from
@@ -293,7 +309,12 @@ private[graft] object EpochIndex {
       s"${family.name} index at $path is damaged: committed epoch(s) " +
         s"${missing.toSeq.sorted.mkString(",")} missing from $table/ — rebuild " +
         s"with ${family.saveFn} or replay the epochs")
-    spark.read.option("basePath", s"$path/$table")
+    // a manifest written before tables carried their schema falls back to
+    // inference, which costs one footer-reading job per scan
+    val reader = m.params.get(schemaParam(table)).fold(spark.read)(json =>
+      spark.read.schema(org.apache.spark.sql.types.DataType.fromJson(json)
+        .asInstanceOf[org.apache.spark.sql.types.StructType]))
+    reader.option("basePath", s"$path/$table")
       .parquet(epochs.map(epochDir(path, table, _)): _*)
   }
 
@@ -310,8 +331,7 @@ private[graft] object EpochIndex {
     withIndexLease(fs, path, family.saveFn) {
       val g = freshGeneration(fs, path, family)
       val m = Manifest(family.tag, Set(g), params)
-      stage(path, g, frames(m))
-      commit(fs, path, m)
+      commit(fs, path, staged(path, g, frames(m), m))
       prune(fs, path, family, Set(g))
     }
   }
@@ -324,31 +344,35 @@ private[graft] object EpochIndex {
     withIndexLease(fs, path, op) {
       val m = committed(spark, path, family)
       val g = freshGeneration(fs, path, family)
-      stage(path, g, frames(m))
-      commit(fs, path, m.copy(epochs = m.epochs + g))
+      commit(fs, path, staged(path, g, frames(m), m.copy(epochs = m.epochs + g)))
     }
   }
 
   /** Stage and commit one epoch under the lease. An epoch the manifest
     * already names is uncommitted first, so a replay never rewrites a
-    * visible directory; `work` gets the params and runs between the
-    * (un)commits. */
+    * visible directory; `work` gets the params, runs between the
+    * (un)commits and returns them with the staged tables' schemas. */
   private def commitEpoch(spark: SparkSession, path: String, family: Family,
-      epochId: Long)(work: Manifest => Unit): Unit = {
+      epochId: Long)(work: Manifest => Manifest): Unit = {
     val fs = indexFs(spark, path)
     withIndexLease(fs, path, s"${family.name} epoch $epochId") {
       val m0 = committed(spark, path, family)
       val m = m0.copy(epochs = m0.epochs - epochId)
       if (m0.epochs(epochId)) commit(fs, path, m)
-      work(m)
-      commit(fs, path, m.copy(epochs = m.epochs + epochId))
+      commit(fs, path, work(m).copy(epochs = m.epochs + epochId))
     }
   }
 
   /** One epoch's admission outside a stream: stage its frames, commit. */
   def admitEpoch(spark: SparkSession, path: String, family: Family,
       epochId: Long)(frames: Manifest => Frames): Unit =
-    commitEpoch(spark, path, family, epochId)(m => stage(path, epochId, frames(m)))
+    commitEpoch(spark, path, family, epochId)(m => staged(path, epochId, frames(m), m))
+
+  /** What a stream epoch's probe hands on: the survivors `writeBatch`
+    * sees, the index frames of those survivors (cut with the params read
+    * under the lease), and the release of whatever the probe keeps cached,
+    * run when the epoch ends however it ends. */
+  final case class Probed[D](fresh: D, frames: Manifest => Frames, release: () => Unit)
 
   /** One stream epoch: probe the index with this epoch excluded, then run
     * `writeBatch` and stage the survivors' tables side by side, and commit
@@ -356,29 +380,49 @@ private[graft] object EpochIndex {
     * the same committed state and recomputes the same survivors; an epoch
     * that failed anywhere before its commit is invisible, so abandoning
     * its checkpoint suppresses nothing that never reached the output. */
-  private[graft] def runEpoch[D <: Dataset[_]](batch: DataFrame, epochId: Long,
-      path: String, family: Family, admit: Boolean)(probe: (DataFrame, Long) => D)(
-      frames: (D, Manifest) => Frames)(writeBatch: (D, Long) => Unit): Unit = {
-    val fresh = probe(batch, epochId)
-    fresh.persist()
+  private[graft] def runProbed[D](batch: DataFrame, epochId: Long, path: String,
+      family: Family, admit: Boolean)(probe: (DataFrame, Long) => Probed[D])(
+      writeBatch: (D, Long) => Unit): Unit = {
+    val p = probe(batch, epochId)
     try {
-      if (!admit) writeBatch(fresh, epochId)
+      if (!admit) writeBatch(p.fresh, epochId)
       else commitEpoch(batch.sparkSession, path, family, epochId) { m =>
-        Exec.concurrently(writeBatch(fresh, epochId),
-          stage(path, epochId, frames(fresh, m)))
+        val frames = p.frames(m)
+        Exec.concurrently(writeBatch(p.fresh, epochId), stage(path, epochId, frames))
+        withSchemas(m, frames)
       }
-    } finally { fresh.unpersist(); () }
+    } finally p.release()
   }
 
-  /** [[runEpoch]] as a stream's `foreachBatch` body. One live stream per
+  /** [[runProbed]] for a lazy probe: its survivors are persisted, so
+    * `writeBatch` and the staged frames read the same rows. */
+  private[graft] def runEpoch[D <: Dataset[_]](batch: DataFrame, epochId: Long,
+      path: String, family: Family, admit: Boolean)(probe: (DataFrame, Long) => D)(
+      frames: (D, Manifest) => Frames)(writeBatch: (D, Long) => Unit): Unit =
+    runProbed(batch, epochId, path, family, admit)(persistedProbe(probe, frames))(writeBatch)
+
+  private def persistedProbe[D <: Dataset[_]](probe: (DataFrame, Long) => D,
+      frames: (D, Manifest) => Frames)(batch: DataFrame, epochId: Long): Probed[D] = {
+    val fresh = probe(batch, epochId)
+    fresh.persist()
+    Probed(fresh, m => frames(fresh, m), () => { fresh.unpersist(); () })
+  }
+
+  /** [[runProbed]] as a stream's `foreachBatch` body. One live stream per
     * index path: epoch ids restart with each checkpoint. */
+  def foreachProbed[D](stream: DataFrame, path: String, family: Family,
+      admit: Boolean)(probe: (DataFrame, Long) => Probed[D])(
+      writeBatch: (D, Long) => Unit): DataStreamWriter[Row] =
+    stream.writeStream.foreachBatch { (batch: DataFrame, epochId: Long) =>
+      runProbed(batch, epochId, path, family, admit)(probe)(writeBatch)
+    }
+
+  /** [[foreachProbed]] for a lazy probe ([[runEpoch]]). */
   def foreachEpoch[D <: Dataset[_]](stream: DataFrame, path: String,
       family: Family, admit: Boolean)(probe: (DataFrame, Long) => D)(
       frames: (D, Manifest) => Frames)(writeBatch: (D, Long) => Unit)
       : DataStreamWriter[Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, epochId: Long) =>
-      runEpoch(batch, epochId, path, family, admit)(probe)(frames)(writeBatch)
-    }
+    foreachProbed(stream, path, family, admit)(persistedProbe(probe, frames))(writeBatch)
 
   /** Merge the committed epochs into one fresh generation (each table by
     * the family's merge rule), flip the manifest to it, prune the rest.
@@ -394,9 +438,9 @@ private[graft] object EpochIndex {
       if (n <= 1) { prune(fs, path, family, m.epochs); 0 }
       else {
         val g = freshGeneration(fs, path, family)
-        stage(path, g, family.tables.map(t =>
-          t -> family.merge(t, scan(spark, path, family, m, t).drop("epoch"))))
-        commit(fs, path, m.copy(epochs = Set(g)))
+        commit(fs, path, staged(path, g, family.tables.map(t =>
+          t -> family.merge(t, scan(spark, path, family, m, t).drop("epoch"))),
+          m.copy(epochs = Set(g))))
         prune(fs, path, family, Set(g))
         n
       }

@@ -45,7 +45,8 @@ class EpochIndexSpec extends AnyFunSuite {
       save: String => Unit,
       probe: (DataFrame, String, Option[Long]) => DataFrame,
       frames: (DataFrame, String) => EpochIndex.Manifest => EpochIndex.Frames,
-      dedups: Boolean = true)
+      dedups: Boolean = true,
+      epoch: Option[(DataFrame, String, Long) => EpochIndex.Probed[DataFrame]] = None)
 
   /** Rows of the committed stream epochs (>= 0) of one table. */
   private def streamRows(f: EpochIndex.Family, path: String, table: String): Option[DataFrame] = {
@@ -87,6 +88,12 @@ class EpochIndexSpec extends AnyFunSuite {
       p => Dedup.saveMinHashIndex(df(corpus), "doc_id", "text", p),
       (b, p, ex) => Dedup.dedupAgainstMinHashIndex(b, "doc_id", "text", p, excludeEpoch = ex),
       (d, _) => Dedup.minHashFrames(d, "doc_id", "text")),
+    // the stream form's eager epoch body, which brings its own frames
+    "MinHash stream epoch" -> Fam(Dedup.MinHashIndex,
+      p => Dedup.saveMinHashIndex(df(corpus), "doc_id", "text", p),
+      (b, p, ex) => Dedup.dedupAgainstMinHashIndex(b, "doc_id", "text", p, excludeEpoch = ex),
+      (d, _) => Dedup.minHashFrames(d, "doc_id", "text"),
+      epoch = Some((b, p, id) => Dedup.minHashEpoch(b, "doc_id", "text", p, 0.5, 1000, id))),
     "phash" -> Fam(Multimodal.PhashIndex,
       p => Multimodal.savePhashIndex(media(df(corpus)), p),
       (b, p, ex) => Multimodal.dedupAgainstPhashIndex(media(b), p, excludeEpoch = ex)
@@ -122,23 +129,34 @@ class EpochIndexSpec extends AnyFunSuite {
     val path = s"$base/idx"
     val out = s"$base/out"
     FileUtils.copyDirectory(new java.io.File(saved), new java.io.File(path))
-    def attempt(e: Int, at: Option[String]): Unit =
-      EpochIndex.runEpoch(df(batches(e)), e.toLong, path, f.family, admit = true)(
-        (b, id) => {
-          if (at.contains("probe")) throw new Injected("probe")
-          f.probe(b, path, Some(id)).select($"doc_id", $"text")
-        })(
-        (fresh, m) => {
-          val fr = f.frames(fresh, path)(m)
-          if (!at.contains("stage")) fr
-          else fr.init :+ (fr.last._1 ->
-            fr.last._2.filter(assert_true(lit(false), lit("injected at stage")).isNull))
-        })(
-        (fresh, id) => {
-          if (at.contains("write-before")) throw new Injected("write-before")
-          fresh.write.mode("overwrite").parquet(s"$out/epoch=$id")
-          if (at.contains("write-after")) throw new Injected("write-after")
-        })
+    def attempt(e: Int, at: Option[String]): Unit = {
+      def injectProbe(): Unit = if (at.contains("probe")) throw new Injected("probe")
+      def injectStage(fr: EpochIndex.Frames): EpochIndex.Frames =
+        if (!at.contains("stage")) fr
+        else fr.init :+ (fr.last._1 ->
+          fr.last._2.filter(assert_true(lit(false), lit("injected at stage")).isNull))
+      def write(fresh: DataFrame, id: Long): Unit = {
+        if (at.contains("write-before")) throw new Injected("write-before")
+        fresh.write.mode("overwrite").parquet(s"$out/epoch=$id")
+        if (at.contains("write-after")) throw new Injected("write-after")
+      }
+      f.epoch match {
+        case None =>
+          EpochIndex.runEpoch(df(batches(e)), e.toLong, path, f.family, admit = true)(
+            (b, id) => {
+              injectProbe()
+              f.probe(b, path, Some(id)).select($"doc_id", $"text")
+            })(
+            (fresh, m) => injectStage(f.frames(fresh, path)(m)))(write)
+        case Some(body) =>
+          EpochIndex.runProbed(df(batches(e)), e.toLong, path, f.family, admit = true)(
+            (b, id) => {
+              injectProbe()
+              val p = body(b, path, id)
+              p.copy(frames = m => injectStage(p.frames(m)))
+            })(write)
+      }
+    }
     val lastEpoch = if (fault.isEmpty || replay) 2 else 1
     for (e <- 0 to lastEpoch) fault.filter(_ => e == 1) match {
       case None => attempt(e, None)
