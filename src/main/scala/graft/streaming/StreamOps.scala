@@ -1,10 +1,13 @@
 package graft.streaming
 
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream,
+  DataOutputStream}
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, ForeachWriter, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.util.sketch.CountMinSketch
 
 import graft.sources.{Event, EventLogRegistry, InMemoryEventLog}
 
@@ -98,26 +101,21 @@ object StreamOps {
    * Cumulative data-quality profile of a STREAM — [[graft.operators
    * .Validation.checkConstraints]] per micro-batch, summed across epochs
    * into bounded driver state (one (count, violations, min offender) per
-   * rule, whatever the stream's lifetime). Replay-safe the way
-   * [[HeavyHitterTracker]] is: an epoch at or below the merged floor is
-   * skipped, so foreachBatch's at-least-once replays never double-count.
-   * Scoped to ONE query: build a fresh tracker (or reset()) per stream.
+   * rule, whatever the stream's lifetime). Replay-safe and checkpointed
+   * through [[EpochFolded]]; the checkpoint's identity is the rule names,
+   * so a tracker with other rules (name, order or count) refuses it instead
+   * of attributing counts to the wrong rules.
    */
   final class ConstraintTracker private[streaming] (ruleNames: Seq[String])
-      extends Serializable {
-    private var lastEpoch: Long = Long.MinValue
+      extends EpochFolded(0x67435452) { // "gCTR"
     private val nRows = new Array[Long](ruleNames.size)
     private val nViolations = new Array[Long](ruleNames.size)
     private val firstViolation = new Array[String](ruleNames.size)
 
-    /** Merge one epoch's profile; returns false (state untouched) for a
-      * replayed epoch at or below the merged floor. */
     private[streaming] def update(
         profile: Seq[(String, Long, Long, Option[String])],
         epochId: Long): Boolean =
-      synchronized {
-        if (epochId <= lastEpoch) return false // replayed epoch: merged
-        lastEpoch = epochId
+      fold(epochId) { () =>
         profile.foreach { case (rule, n, v, off) =>
           val i = ruleNames.indexOf(rule)
           nRows(i) += n; nViolations(i) += v
@@ -126,7 +124,6 @@ object StreamOps {
               firstViolation(i) = o
           }
         }
-        true
       }
 
     /** UTF-8 BYTE order, matching Spark's string min exactly — Java's
@@ -150,68 +147,34 @@ object StreamOps {
         Option(firstViolation(i)))).toSeq
     }
 
-    /** Clear all state (required before reuse across queries — epoch
-      * floors do not transfer between streams). */
-    def reset(): Unit = synchronized {
-      lastEpoch = Long.MinValue
-      ruleNames.indices.foreach { i =>
-        nRows(i) = 0; nViolations(i) = 0; firstViolation(i) = null
-      }
-    }
-
-    /** Checkpoint the cumulative profile + epoch floor. The header carries
-      * the rule names: restoring into a tracker whose rules differ (name,
-      * order, or count) throws instead of silently attributing counts to
-      * the wrong rules — [[HeavyHitterTracker.toBytes]]'s contract. */
-    def toBytes: Array[Byte] = synchronized {
-      val bos = new java.io.ByteArrayOutputStream()
-      val out = new java.io.DataOutputStream(bos)
-      out.writeInt(ConstraintMagic)
+    protected def writeConfig(out: DataOutputStream): Unit = {
       out.writeInt(ruleNames.size)
       ruleNames.foreach(out.writeUTF)
-      out.writeLong(lastEpoch)
+    }
+
+    protected def writeState(out: DataOutputStream): Unit =
       ruleNames.indices.foreach { i =>
         out.writeLong(nRows(i)); out.writeLong(nViolations(i))
         out.writeBoolean(firstViolation(i) != null)
         if (firstViolation(i) != null) out.writeUTF(firstViolation(i))
       }
-      out.flush()
-      bos.toByteArray
+
+    protected def readState(in: DataInputStream): () => Unit = {
+      val parsed = ruleNames.map { _ =>
+        (in.readLong(), in.readLong(),
+          if (in.readBoolean()) in.readUTF() else null)
+      }
+      () => parsed.zipWithIndex.foreach { case ((n, v, off), i) =>
+        nRows(i) = n; nViolations(i) = v; firstViolation(i) = off
+      }
     }
 
-    /** Restore state serialized by [[toBytes]]; throws on a foreign blob
-      * or a rule-set mismatch. */
-    def restore(bytes: Array[Byte]): Unit = synchronized {
-      require(bytes.length >= 8,
-        s"not a ConstraintTracker checkpoint (${bytes.length} bytes)")
-      val in = new java.io.DataInputStream(new java.io.ByteArrayInputStream(bytes))
-      val magic = in.readInt()
-      require(magic == ConstraintMagic,
-        s"not a ConstraintTracker checkpoint (magic 0x${magic.toHexString})")
-      val stored = Seq.fill(in.readInt())(in.readUTF())
-      require(stored == ruleNames,
-        s"checkpoint was written by a tracker with rules $stored but this " +
-          s"tracker has $ruleNames — counts would attribute to the wrong " +
-          "rules; rebuild the tracker with the checkpoint's rule set")
-      // parse the WHOLE blob into locals before mutating: a truncated
-      // checkpoint that passes the header checks must throw with the
-      // tracker unchanged, never half-restored (a caller catching the
-      // error and continuing would double-count or mis-skip epochs)
-      val epoch = in.readLong()
-      val parsed = ruleNames.indices.map { _ =>
-        val n = in.readLong(); val v = in.readLong()
-        (n, v, if (in.readBoolean()) in.readUTF() else null)
-      }
-      lastEpoch = epoch
-      ruleNames.indices.foreach { i =>
-        nRows(i) = parsed(i)._1; nViolations(i) = parsed(i)._2
-        firstViolation(i) = parsed(i)._3
-      }
+    protected def clearState(): Unit = {
+      java.util.Arrays.fill(nRows, 0L)
+      java.util.Arrays.fill(nViolations, 0L)
+      java.util.Arrays.fill(firstViolation.asInstanceOf[Array[AnyRef]], null)
     }
   }
-
-  /** [[ConstraintTracker.toBytes]] header magic ("gCTR"). */
-  private val ConstraintMagic: Int = 0x67435452
 
   /** foreachBatch sink monitoring a stream's constraint profile: each
     * micro-batch runs ONE [[graft.operators.Validation.checkConstraints]]
@@ -275,24 +238,21 @@ object StreamOps {
    * histogram aggregate (<= B rows collected) to bounded driver state.
    * Counts are exact integers, so cumulative totals over ANY trigger
    * slicing equal the batch histogram — the PSI after the last epoch is
-   * the batch PSI. Replay-safe via the same epoch floor as
-   * [[ConstraintTracker]]; scoped to ONE query (reset() before reuse).
+   * the batch PSI. Replay-safe and checkpointed through [[EpochFolded]];
+   * the checkpoint's identity is (lo, hi, buckets, alpha) and the
+   * reference histogram.
    */
   final class DriftTracker private[streaming] (
       val lo: Double, val hi: Double, val buckets: Int, val alpha: Double,
-      private val refCounts: Array[Long]) extends Serializable {
-    private var lastEpoch: Long = Long.MinValue
+      private val refCounts: Array[Long])
+      extends EpochFolded(0x67444654, "histogram") { // "gDFT"
     private val curCounts = new Array[Long](buckets)
 
-    /** Merge one epoch's histogram; returns false (state untouched) for a
-      * replayed epoch at or below the merged floor. */
     private[streaming] def update(batchCounts: Seq[(Int, Long)],
-        epochId: Long): Boolean = synchronized {
-      if (epochId <= lastEpoch) return false // replayed epoch: merged
-      lastEpoch = epochId
-      batchCounts.foreach { case (b, n) => curCounts(b) += n }
-      true
-    }
+        epochId: Long): Boolean =
+      fold(epochId) { () =>
+        batchCounts.foreach { case (b, n) => curCounts(b) += n }
+      }
 
     /** Per-bucket cumulative (bucket, n_ref, n_cur). */
     def counts: Seq[(Int, Long, Long)] = synchronized {
@@ -303,72 +263,55 @@ object StreamOps {
       * [[graft.operators.Validation.psiTotal]]'s formula on the
       * cumulative counts. */
     def psiTotal: Double = synchronized {
-      val tr = refCounts.sum.toDouble + alpha * buckets
-      val tc = curCounts.sum.toDouble + alpha * buckets
-      (0 until buckets).map { b =>
-        val p = (refCounts(b) + alpha) / tr
-        val q = (curCounts(b) + alpha) / tc
-        (q - p) * math.log(q / p)
-      }.sum
+      val c = counts
+      psiTerms(c.map(_._2), c.map(_._3), alpha).sum
     }
 
-    /** Clear the STREAM side + epoch floor (the fitted reference stays —
-      * it is the monitor's identity). Required before reuse across
-      * queries: epoch floors do not transfer between streams. */
-    def reset(): Unit = synchronized {
-      lastEpoch = Long.MinValue
-      java.util.Arrays.fill(curCounts, 0L)
-    }
-
-    /** Checkpoint the cumulative state + epoch floor. The header carries
-      * the full monitor identity — (lo, hi, buckets, alpha) AND the
-      * reference histogram — so restoring into a differently-fitted
-      * monitor throws instead of silently producing garbage PSI
-      * ([[ConstraintTracker.toBytes]]'s contract). */
-    def toBytes: Array[Byte] = synchronized {
-      val bos = new java.io.ByteArrayOutputStream()
-      val out = new java.io.DataOutputStream(bos)
-      out.writeInt(DriftMagic)
+    protected def writeConfig(out: DataOutputStream): Unit = {
       out.writeDouble(lo); out.writeDouble(hi)
       out.writeInt(buckets); out.writeDouble(alpha)
-      refCounts.foreach(out.writeLong)
-      out.writeLong(lastEpoch)
-      curCounts.foreach(out.writeLong)
-      out.flush()
-      bos.toByteArray
     }
 
-    /** Restore state serialized by [[toBytes]]; throws on a foreign blob
-      * or a monitor-identity mismatch, with the tracker unchanged. */
-    def restore(bytes: Array[Byte]): Unit = synchronized {
-      require(bytes.length >= 8,
-        s"not a DriftTracker checkpoint (${bytes.length} bytes)")
-      val in = new java.io.DataInputStream(new java.io.ByteArrayInputStream(bytes))
-      val magic = in.readInt()
-      require(magic == DriftMagic,
-        s"not a DriftTracker checkpoint (magic 0x${magic.toHexString})")
-      val (sLo, sHi) = (in.readDouble(), in.readDouble())
-      val (sB, sA) = (in.readInt(), in.readDouble())
-      require(sLo == lo && sHi == hi && sB == buckets && sA == alpha,
-        s"checkpoint was written by a differently-configured monitor " +
-          s"([$sLo, $sHi) x $sB, alpha=$sA vs [$lo, $hi) x $buckets, " +
-          s"alpha=$alpha) — cumulative counts would bin differently")
-      val sRef = Array.fill(buckets)(in.readLong())
-      require(java.util.Arrays.equals(sRef, refCounts),
-        "checkpoint was written against a DIFFERENT reference histogram — " +
-          "PSI against this monitor's reference would be garbage; refit " +
-          "from the checkpoint's reference snapshot")
-      // parse the whole blob before mutating (truncated checkpoint must
-      // leave the tracker unchanged)
-      val epoch = in.readLong()
+    override protected def writeReference(out: DataOutputStream): Unit =
+      refCounts.foreach(out.writeLong)
+
+    protected def writeState(out: DataOutputStream): Unit =
+      curCounts.foreach(out.writeLong)
+
+    protected def readState(in: DataInputStream): () => Unit = {
       val cur = Array.fill(buckets)(in.readLong())
-      lastEpoch = epoch
-      System.arraycopy(cur, 0, curCounts, 0, buckets)
+      () => System.arraycopy(cur, 0, curCounts, 0, buckets)
+    }
+
+    protected def clearState(): Unit = java.util.Arrays.fill(curCounts, 0L)
+  }
+
+  /** Per-cell PSI terms of a reference and a current count vector, each
+    * side smoothed by `alpha` per cell and normalized by its own smoothed
+    * total. Summed in cell order they are the batch PSI of
+    * [[graft.operators.Validation]]. */
+  private def psiTerms(ref: Seq[Long], cur: Seq[Long],
+      alpha: Double): Seq[Double] = {
+    val tr = ref.sum + alpha * ref.size
+    val tc = cur.sum + alpha * cur.size
+    ref.zip(cur).map { case (nr, nc) =>
+      val p = (nr + alpha) / tr
+      val q = (nc + alpha) / tc
+      (q - p) * math.log(q / p)
     }
   }
 
-  /** [[DriftTracker.toBytes]] header magic ("gDFT"). */
-  private val DriftMagic: Int = 0x67444654
+  /** The three cells with the largest PSI terms, for a hard gate's message;
+    * `cells` is ONE snapshot of (cell, n_ref, n_cur), so every cell is
+    * priced against the same totals. */
+  private def worstCells(cells: Seq[(String, Long, Long)],
+      alpha: Double): String =
+    cells.zip(psiTerms(cells.map(_._2), cells.map(_._3), alpha))
+      .sortBy(-_._2).take(3)
+      .map { case ((cell, nr, nc), psi) =>
+        f"$cell ref=$nr cur=$nc psi=$psi%.4f"
+      }
+      .mkString("; ")
 
   /** Fit the drift monitor's reference histogram ONCE from a reference
     * snapshot — one map-side-combined aggregate, <= `buckets` rows
@@ -382,14 +325,23 @@ object StreamOps {
     require(buckets > 0, s"buckets must be positive, got $buckets")
     require(alpha > 0, s"alpha must be positive (smoothing), got $alpha")
     val refCounts = new Array[Long](buckets)
-    ref.filter(graft.operators.Validation.driftValueOk(col(valueCol)))
+    histogram(ref, valueCol, lo, hi, buckets)
+      .foreach { case (b, n) => refCounts(b) = n }
+    new DriftTracker(lo, hi, buckets, alpha, refCounts)
+  }
+
+  /** One snapshot's (bucket, n) histogram, <= B rows collected — shared
+    * by [[driftFit]] and [[driftSink]] so the two sides can never bin
+    * differently. */
+  private def histogram(df: DataFrame, valueCol: String, lo: Double,
+      hi: Double, buckets: Int): Seq[(Int, Long)] =
+    df.filter(graft.operators.Validation.driftValueOk(col(valueCol)))
       .select(graft.operators.Validation
         .driftBucket(col(valueCol), lo, hi, buckets).as("b"))
       .groupBy(col("b")).agg(count(lit(1)).as("n"))
       .collect()
-      .foreach(r => refCounts(r.getInt(0)) = r.getLong(1))
-    new DriftTracker(lo, hi, buckets, alpha, refCounts)
-  }
+      .map(r => (r.getInt(0), r.getLong(1)))
+      .toSeq
 
   /** foreachBatch sink folding each micro-batch's histogram (ONE
     * aggregate, <= B rows) into `tracker`'s cumulative stream side.
@@ -407,40 +359,18 @@ object StreamOps {
       maxPsi: Double = Double.PositiveInfinity)
       : (DataFrame, Long) => Unit =
     (batch: DataFrame, epochId: Long) => {
-      val counts = batch
-        .filter(graft.operators.Validation.driftValueOk(col(valueCol)))
-        .select(graft.operators.Validation.driftBucket(
-          col(valueCol), tracker.lo, tracker.hi, tracker.buckets).as("b"))
-        .groupBy(col("b")).agg(count(lit(1)).as("n"))
-        .collect()
-        .map(r => (r.getInt(0), r.getLong(1)))
-        .toSeq
-      tracker.update(counts, epochId)
+      tracker.update(histogram(batch, valueCol, tracker.lo, tracker.hi,
+        tracker.buckets), epochId)
       val psi = tracker.psiTotal
       if (psi > maxPsi) {
         val w = (tracker.hi - tracker.lo) / tracker.buckets
-        // ONE consistent snapshot + hoisted totals: three separate
-        // synchronized reads inside the per-bucket map could interleave
-        // with a concurrent merge and price each bucket against different
-        // totals (and recomputing the sums per bucket is O(B^2))
-        val snap = tracker.counts
-        val tr = snap.map(_._2).sum + tracker.alpha * tracker.buckets
-        val tc = snap.map(_._3).sum + tracker.alpha * tracker.buckets
-        val worst = snap
-          .map { case (b, nr, nc) =>
-            val p = (nr + tracker.alpha) / tr
-            val q = (nc + tracker.alpha) / tc
-            (b, nr, nc, (q - p) * math.log(q / p))
-          }
-          .sortBy(-_._4).take(3)
-          .map { case (b, nr, nc, psiB) =>
-            f"[${tracker.lo + b * w}%.4g, ${tracker.lo + (b + 1) * w}%.4g) " +
-              f"ref=$nr cur=$nc psi=$psiB%.4f"
-          }
+        val worst = worstCells(tracker.counts.map { case (b, nr, nc) =>
+          (f"[${tracker.lo + b * w}%.4g, ${tracker.lo + (b + 1) * w}%.4g)",
+            nr, nc)
+        }, tracker.alpha)
         throw new IllegalStateException(
           f"stream drift gate tripped at epoch $epochId: cumulative PSI " +
-            f"$psi%.4f > $maxPsi on '$valueCol'; worst " +
-            s"buckets: ${worst.mkString("; ")}")
+            f"$psi%.4f > $maxPsi on '$valueCol'; worst buckets: $worst")
       }
     }
 
@@ -465,47 +395,40 @@ object StreamOps {
    * the `__other__` display string, so a real category named `__other__`
    * in the top set neither merges with nor double-counts against the
    * fold row — [[graft.operators.Validation.categoricalDrift]]'s exact
-   * contract. Replay-safe via the same epoch floor as [[DriftTracker]]
-   * (merge skipped, hard gate still re-evaluated); scoped to ONE query
-   * (reset() before reuse).
+   * contract. Replay-safe and checkpointed through [[EpochFolded]]; the
+   * checkpoint's identity is (topK, alpha), the fitted top set and its
+   * reference counts.
    */
   final class CatDriftTracker private[streaming] (
       val topK: Int, val alpha: Double,
       private val topCatsArr: Array[String],
       private val refCounts: Array[Long],
-      private val refOther: Long) extends Serializable {
-    private var lastEpoch: Long = Long.MinValue
+      private val refOther: Long)
+      extends EpochFolded(0x67434454, "mix") { // "gCDT"
     private val curCounts = new Array[Long](topCatsArr.length)
     private var curOther: Long = 0L
 
     /** The fitted top categories, rank order (ref count desc, name asc). */
     def topCats: Seq[String] = topCatsArr.toSeq
 
-    /** Merge one epoch's classified counts (None = the folded tail);
-      * returns false (state untouched) for a replayed epoch at or below
-      * the merged floor. */
+    /** Merge one epoch's classified counts (None = the folded tail). A
+      * category outside the fitted top set (sink and tracker disagree on
+      * the fit) throws before anything merges. */
     private[streaming] def update(batch: Seq[(Option[String], Long)],
-        epochId: Long): Boolean = synchronized {
-      if (epochId <= lastEpoch) return false // replayed epoch: merged
-      // Resolve (and validate) the WHOLE batch before any mutation: a
-      // sink/tracker fit mismatch must throw with state AND the epoch
-      // floor untouched, so a replay of this epoch is not merge-skipped
-      // against half-merged counts — the same pre-mutation discipline as
-      // the maxGroups admission check.
-      val resolved = batch.map {
-        case (Some(cat), n) =>
-          val i = topCatsArr.indexOf(cat)
-          require(i >= 0, s"classified category '$cat' is not in the fitted " +
-            "top set — sink and tracker disagree on the fit")
-          (i, n)
-        case (None, n) => (-1, n)
+        epochId: Long): Boolean =
+      fold(epochId) {
+        val resolved = batch.map {
+          case (Some(cat), n) =>
+            val i = topCatsArr.indexOf(cat)
+            require(i >= 0, s"classified category '$cat' is not in the " +
+              "fitted top set — sink and tracker disagree on the fit")
+            (i, n)
+          case (None, n) => (-1, n)
+        }
+        () => resolved.foreach { case (i, n) =>
+          if (i >= 0) curCounts(i) += n else curOther += n
+        }
       }
-      lastEpoch = epochId
-      resolved.foreach { case (i, n) =>
-        if (i >= 0) curCounts(i) += n else curOther += n
-      }
-      true
-    }
 
     /** Cumulative rows in [[graft.operators.Validation
       * .categoricalDriftFromCounts]]'s frame shape
@@ -522,83 +445,40 @@ object StreamOps {
       * formula on the cumulative counts (smoothing denominator over the
       * emitted rows, top + fold). */
     def psiTotal: Double = synchronized {
-      val rows = topCatsArr.length + 1
-      val tr = refCounts.sum + refOther + alpha * rows
-      val tc = curCounts.sum + curOther + alpha * rows
-      def term(nr: Long, nc: Long): Double = {
-        val p = (nr + alpha) / tr; val q = (nc + alpha) / tc
-        (q - p) * math.log(q / p)
-      }
-      topCatsArr.indices.map(i => term(refCounts(i), curCounts(i))).sum +
-        term(refOther, curOther)
+      val c = counts
+      psiTerms(c.map(_._3), c.map(_._4), alpha).sum
     }
 
-    /** Clear the stream side + epoch floor (the fitted reference mix
-      * stays). Required before reuse across queries. */
-    def reset(): Unit = synchronized {
-      lastEpoch = Long.MinValue
-      java.util.Arrays.fill(curCounts, 0L)
-      curOther = 0L
-    }
-
-    /** Checkpoint cumulative state + epoch floor; the header carries the
-      * full monitor identity (topK, alpha, the fitted top set and its
-      * reference counts) so restoring into a differently-fitted monitor
-      * throws instead of silently mis-attributing counts
-      * ([[DriftTracker.toBytes]]'s contract). */
-    def toBytes: Array[Byte] = synchronized {
-      val bos = new java.io.ByteArrayOutputStream()
-      val out = new java.io.DataOutputStream(bos)
-      out.writeInt(CatDriftMagic)
+    protected def writeConfig(out: DataOutputStream): Unit = {
       out.writeInt(topK); out.writeDouble(alpha)
+    }
+
+    override protected def writeReference(out: DataOutputStream): Unit = {
       out.writeInt(topCatsArr.length)
       topCatsArr.foreach(out.writeUTF)
       refCounts.foreach(out.writeLong)
       out.writeLong(refOther)
-      out.writeLong(lastEpoch)
+    }
+
+    protected def writeState(out: DataOutputStream): Unit = {
       curCounts.foreach(out.writeLong)
       out.writeLong(curOther)
-      out.flush()
-      bos.toByteArray
     }
 
-    /** Restore state serialized by [[toBytes]]; throws on a foreign blob
-      * or monitor-identity mismatch, with the tracker unchanged. */
-    def restore(bytes: Array[Byte]): Unit = synchronized {
-      require(bytes.length >= 8,
-        s"not a CatDriftTracker checkpoint (${bytes.length} bytes)")
-      val in = new java.io.DataInputStream(
-        new java.io.ByteArrayInputStream(bytes))
-      val magic = in.readInt()
-      require(magic == CatDriftMagic,
-        s"not a CatDriftTracker checkpoint (magic 0x${magic.toHexString})")
-      val (sK, sA) = (in.readInt(), in.readDouble())
-      require(sK == topK && sA == alpha,
-        s"checkpoint was written by a differently-configured monitor " +
-          s"(topK=$sK, alpha=$sA vs topK=$topK, alpha=$alpha)")
-      val sCats = Array.fill(in.readInt())(in.readUTF())
-      val sRef = Array.fill(sCats.length)(in.readLong())
-      val sOther = in.readLong()
-      require(java.util.Arrays.equals(
-          sCats.asInstanceOf[Array[AnyRef]],
-          topCatsArr.asInstanceOf[Array[AnyRef]]) &&
-          java.util.Arrays.equals(sRef, refCounts) && sOther == refOther,
-        "checkpoint was written against a DIFFERENT reference mix — " +
-          "cumulative counts would attribute to the wrong categories; " +
-          "refit from the checkpoint's reference snapshot")
-      // parse the whole blob before mutating (truncated checkpoint must
-      // leave the tracker unchanged)
-      val epoch = in.readLong()
-      val cur = Array.fill(topCatsArr.length)(in.readLong())
-      val curOth = in.readLong()
-      lastEpoch = epoch
-      System.arraycopy(cur, 0, curCounts, 0, cur.length)
-      curOther = curOth
+    protected def readState(in: DataInputStream): () => Unit = {
+      val cur = Array.fill(curCounts.length)(in.readLong())
+      val other = in.readLong()
+      () => {
+        System.arraycopy(cur, 0, curCounts, 0, cur.length)
+        curOther = other
+      }
+    }
+
+    protected def clearState(): Unit = {
+      java.util.Arrays.fill(curCounts, 0L)
+      curOther = 0L
     }
   }
-
-  /** [[CatDriftTracker.toBytes]] header magic ("gCDT"). */
-  private val CatDriftMagic: Int = 0x67434454
 
   /** Fit the categorical monitor's reference mix ONCE: category counts
     * reduce map-side, the top-K cut is a distributed TakeOrdered (count
@@ -652,23 +532,13 @@ object StreamOps {
       tracker.update(counts, epochId)
       val psi = tracker.psiTotal
       if (psi > maxPsi) {
-        val snap = tracker.counts
-        val rows = snap.length
-        val tr = snap.map(_._3).sum + tracker.alpha * rows
-        val tc = snap.map(_._4).sum + tracker.alpha * rows
-        val worst = snap.map { case (cat, _, nr, nc) =>
-            val p = (nr + tracker.alpha) / tr
-            val q = (nc + tracker.alpha) / tc
-            (cat, nr, nc, (q - p) * math.log(q / p))
-          }
-          .sortBy(-_._4).take(3)
-          .map { case (cat, nr, nc, psiC) =>
-            f"'$cat' ref=$nr cur=$nc psi=$psiC%.4f"
-          }
+        val worst = worstCells(tracker.counts.map { case (cat, _, nr, nc) =>
+          (s"'$cat'", nr, nc)
+        }, tracker.alpha)
         throw new IllegalStateException(
           f"stream categorical drift gate tripped at epoch $epochId: " +
             f"cumulative PSI $psi%.4f > $maxPsi on '$catCol'; worst " +
-            s"categories: ${worst.mkString("; ")}")
+            s"categories: $worst")
       }
     }
   }
@@ -686,43 +556,34 @@ object StreamOps {
    * side is all-zero — exactly the "new feed showed up" alarm), capped by
    * `maxGroups` with a LOUD error, never silent truncation. Counts are
    * exact integers, so the cumulative monitor over ANY trigger slicing
-   * equals the batch profile. Replay-safe via the standard epoch floor
-   * (merge skipped, hard gate still re-evaluated); scoped to ONE query.
+   * equals the batch profile. Replay-safe and checkpointed through
+   * [[EpochFolded]]; the checkpoint's identity is (lo, hi, buckets, alpha,
+   * maxGroups) and the reference histograms.
    */
   final class GroupDriftTracker private[streaming] (
       val lo: Double, val hi: Double, val buckets: Int, val alpha: Double,
       val maxGroups: Int,
-      private val refCounts: Map[String, Array[Long]]) extends Serializable {
-    private var lastEpoch: Long = Long.MinValue
+      private val refCounts: Map[String, Array[Long]])
+      extends EpochFolded(0x67474454, "profile") { // "gGDT"
     private val curCounts =
       scala.collection.mutable.HashMap.empty[String, Array[Long]]
 
-    /** Merge one epoch's (group, bucket, n) rows; returns false (state
-      * untouched) for a replayed epoch at or below the merged floor.
-      * A bucket of -1 is ADMISSION-ONLY: the group's rows all carried
-      * NULL/NaN values this epoch, so the group enters the monitor (the
-      * batch operator's group-not-null admission) but no histogram cell
-      * moves. Throws (BEFORE mutating) if admitting the epoch's new
-      * groups would exceed `maxGroups` — a group column drifting to
-      * id-like cardinality must fail loudly, not accrete unbounded
-      * state. */
+    /** Merge one epoch's (group, bucket, n) rows. A bucket of -1 is
+      * ADMISSION-ONLY: the group's rows all carried NULL/NaN values this
+      * epoch, so the group enters the monitor (the batch operator's
+      * group-not-null admission) but no histogram cell moves. Throws
+      * BEFORE mutating if the epoch's new groups would exceed
+      * `maxGroups`. */
     private[streaming] def update(batch: Seq[(String, Int, Long)],
-        epochId: Long): Boolean = synchronized {
-      if (epochId <= lastEpoch) return false // replayed epoch: merged
-      val incoming = batch.map(_._1).distinct
-        .filterNot(g => refCounts.contains(g) || curCounts.contains(g))
-      val after = refCounts.keySet.union(curCounts.keySet).size + incoming.size
-      require(after <= maxGroups,
-        s"epoch $epochId would grow the monitor to $after groups " +
-          s"(> maxGroups $maxGroups) — the group column has id-like " +
-          "cardinality; segment on a coarser column or raise maxGroups")
-      lastEpoch = epochId
-      batch.foreach { case (g, b, n) =>
-        val arr = curCounts.getOrElseUpdate(g, new Array[Long](buckets))
-        if (b >= 0) arr(b) += n
+        epochId: Long): Boolean =
+      fold(epochId) {
+        requireAdmits(refCounts.keySet ++ curCounts.keySet, batch.map(_._1),
+          maxGroups, "group", s"epoch $epochId")
+        () => batch.foreach { case (g, b, n) =>
+          val arr = curCounts.getOrElseUpdate(g, new Array[Long](buckets))
+          if (b >= 0) arr(b) += n
+        }
       }
-      true
-    }
 
     /** Cumulative dense rows (group, bucket, n_ref, n_cur) over the UNION
       * of reference and stream groups — [[graft.operators.Validation
@@ -741,80 +602,28 @@ object StreamOps {
       * are comparable regardless of size). */
     def psiByGroup: Map[String, Double] = synchronized {
       counts.groupBy(_._1).map { case (g, rows) =>
-        val tr = rows.map(_._3).sum + alpha * buckets
-        val tc = rows.map(_._4).sum + alpha * buckets
-        g -> rows.map { case (_, _, nr, nc) =>
-          val p = (nr + alpha) / tr; val q = (nc + alpha) / tc
-          (q - p) * math.log(q / p)
-        }.sum
+        g -> psiTerms(rows.map(_._3), rows.map(_._4), alpha).sum
       }
     }
 
-    /** Clear the stream side + epoch floor (the fitted reference stays). */
-    def reset(): Unit = synchronized {
-      lastEpoch = Long.MinValue
-      curCounts.clear()
-    }
-
-    /** Checkpoint cumulative state + epoch floor; header carries the full
-      * monitor identity including the reference histograms
-      * ([[DriftTracker.toBytes]]'s contract). */
-    def toBytes: Array[Byte] = synchronized {
-      val bos = new java.io.ByteArrayOutputStream()
-      val out = new java.io.DataOutputStream(bos)
-      out.writeInt(GroupDriftMagic)
+    protected def writeConfig(out: DataOutputStream): Unit = {
       out.writeDouble(lo); out.writeDouble(hi)
       out.writeInt(buckets); out.writeDouble(alpha); out.writeInt(maxGroups)
-      def writeMap(m: collection.Map[String, Array[Long]]): Unit = {
-        out.writeInt(m.size)
-        m.toSeq.sortBy(_._1).foreach { case (g, arr) =>
-          out.writeUTF(g); arr.foreach(out.writeLong)
-        }
-      }
-      writeMap(refCounts)
-      out.writeLong(lastEpoch)
-      writeMap(curCounts)
-      out.flush()
-      bos.toByteArray
     }
 
-    /** Restore state serialized by [[toBytes]]; throws on a foreign blob
-      * or monitor-identity mismatch, with the tracker unchanged. */
-    def restore(bytes: Array[Byte]): Unit = synchronized {
-      require(bytes.length >= 8,
-        s"not a GroupDriftTracker checkpoint (${bytes.length} bytes)")
-      val in = new java.io.DataInputStream(
-        new java.io.ByteArrayInputStream(bytes))
-      val magic = in.readInt()
-      require(magic == GroupDriftMagic,
-        s"not a GroupDriftTracker checkpoint (magic 0x${magic.toHexString})")
-      val (sLo, sHi) = (in.readDouble(), in.readDouble())
-      val (sB, sA, sG) = (in.readInt(), in.readDouble(), in.readInt())
-      require(sLo == lo && sHi == hi && sB == buckets && sA == alpha &&
-          sG == maxGroups,
-        s"checkpoint was written by a differently-configured monitor " +
-          s"([$sLo, $sHi) x $sB, alpha=$sA, maxGroups=$sG vs " +
-          s"[$lo, $hi) x $buckets, alpha=$alpha, maxGroups=$maxGroups)")
-      def readMap(): Map[String, Array[Long]] =
-        (1 to in.readInt()).map { _ =>
-          (in.readUTF(), Array.fill(buckets)(in.readLong()))
-        }.toMap
-      val sRef = readMap()
-      require(sRef.keySet == refCounts.keySet && sRef.forall {
-          case (g, arr) => java.util.Arrays.equals(arr, refCounts(g)) },
-        "checkpoint was written against a DIFFERENT reference profile — " +
-          "refit from the checkpoint's reference snapshot")
-      // parse the whole blob before mutating
-      val epoch = in.readLong()
-      val sCur = readMap()
-      lastEpoch = epoch
-      curCounts.clear()
-      sCur.foreach { case (g, arr) => curCounts.put(g, arr) }
+    override protected def writeReference(out: DataOutputStream): Unit =
+      writeMap(out, refCounts)(_.foreach(out.writeLong))
+
+    protected def writeState(out: DataOutputStream): Unit =
+      writeMap(out, curCounts)(_.foreach(out.writeLong))
+
+    protected def readState(in: DataInputStream): () => Unit = {
+      val cur = readMap(in)(Array.fill(buckets)(in.readLong()))
+      () => { curCounts.clear(); curCounts ++= cur }
     }
+
+    protected def clearState(): Unit = curCounts.clear()
   }
-
-  /** [[GroupDriftTracker.toBytes]] header magic ("gGDT"). */
-  private val GroupDriftMagic: Int = 0x67474454
 
   /** Fit the per-group monitor's reference histograms ONCE — one
     * map-side-combined (group, bucket) aggregate, <= groups x B rows
@@ -829,27 +638,14 @@ object StreamOps {
     require(buckets > 0, s"buckets must be positive, got $buckets")
     require(alpha > 0, s"alpha must be positive (smoothing), got $alpha")
     require(maxGroups > 0, s"maxGroups must be positive, got $maxGroups")
-    // group admission matches the batch operator's grps(): group-not-null
-    // rows only — a group whose rows ALL carry NULL/NaN values is still
-    // ADMITTED (all-zero histogram), it just contributes no counts. The
-    // NULL bucket carries that admission through the same single
-    // aggregate (<= groups x (B+1) rows).
-    val rows = ref
-      .filter(col(groupCol).isNotNull)
-      .select(col(groupCol).cast("string").as("g"),
-        when(graft.operators.Validation.driftValueOk(col(valueCol)),
-          graft.operators.Validation
-            .driftBucket(col(valueCol), lo, hi, buckets)).as("b"))
-      .groupBy(col("g"), col("b")).agg(count(lit(1)).as("n"))
-      .collect()
-    val refMap = rows.groupBy(_.getString(0)).map { case (g, rs) =>
-      val arr = new Array[Long](buckets)
-      rs.foreach(r => if (!r.isNullAt(1)) arr(r.getInt(1)) = r.getLong(2))
-      g -> arr
-    }
-    require(refMap.size <= maxGroups,
-      s"reference snapshot has ${refMap.size} groups (> maxGroups " +
-        s"$maxGroups) — segment on a coarser column or raise maxGroups")
+    val refMap = groupHistogram(ref, groupCol, valueCol, lo, hi, buckets)
+      .groupBy(_._1).map { case (g, rs) =>
+        val arr = new Array[Long](buckets)
+        rs.foreach { case (_, b, n) => if (b >= 0) arr(b) = n }
+        g -> arr
+      }
+    requireAdmits(Set.empty, refMap.keys.toSeq, maxGroups, "group",
+      "the reference snapshot")
     new GroupDriftTracker(lo, hi, buckets, alpha, maxGroups, refMap)
   }
 
@@ -867,31 +663,58 @@ object StreamOps {
       valueCol: String, maxPsi: Double = Double.PositiveInfinity)
       : (DataFrame, Long) => Unit =
     (batch: DataFrame, epochId: Long) => {
-      // group-not-null admission (the batch operator's grps()): rows with
-      // NULL/NaN values land in the NULL bucket, carried to the tracker
-      // as bucket -1 = admit-the-group-without-counts.
-      val counts = batch
-        .filter(col(groupCol).isNotNull)
-        .select(col(groupCol).cast("string").as("g"),
-          when(graft.operators.Validation.driftValueOk(col(valueCol)),
-            graft.operators.Validation.driftBucket(
-              col(valueCol), tracker.lo, tracker.hi, tracker.buckets))
-            .as("b"))
-        .groupBy(col("g"), col("b")).agg(count(lit(1)).as("n"))
-        .collect()
-        .map(r => (r.getString(0), if (r.isNullAt(1)) -1 else r.getInt(1),
-          r.getLong(2)))
-        .toSeq
-      tracker.update(counts, epochId)
-      val failing = tracker.psiByGroup.filter(_._2 > maxPsi).toSeq
-        .sortBy(-_._2)
-      if (failing.nonEmpty)
-        throw new IllegalStateException(
-          s"stream per-group drift gate tripped at epoch $epochId on " +
-            s"'$valueCol' (maxPsi $maxPsi): " +
-            failing.map { case (g, p) => f"group '$g' PSI $p%.4f" }
-              .mkString("; "))
+      tracker.update(groupHistogram(batch, groupCol, valueCol, tracker.lo,
+        tracker.hi, tracker.buckets), epochId)
+      requireGroupsUnder(tracker.psiByGroup, maxPsi,
+        s"drift gate tripped at epoch $epochId on '$valueCol'")
     }
+
+  /** One snapshot's (group, bucket, n) rows, <= groups x (B+1) collected —
+    * shared by [[groupDriftFit]] and [[groupDriftSink]]. Admission is the
+    * batch operator's grps(): group-not-null rows only, so a group whose
+    * rows ALL carry NULL/NaN values is still admitted (all-zero
+    * histogram); those rows come back as bucket -1, admission without
+    * counts, from the same single aggregate. */
+  private def groupHistogram(df: DataFrame, groupCol: String,
+      valueCol: String, lo: Double, hi: Double,
+      buckets: Int): Seq[(String, Int, Long)] =
+    df.filter(col(groupCol).isNotNull)
+      .select(col(groupCol).cast("string").as("g"),
+        when(graft.operators.Validation.driftValueOk(col(valueCol)),
+          graft.operators.Validation
+            .driftBucket(col(valueCol), lo, hi, buckets)).as("b"))
+      .groupBy(col("g"), col("b")).agg(count(lit(1)).as("n"))
+      .collect()
+      .map(r => (r.getString(0), if (r.isNullAt(1)) -1 else r.getInt(1),
+        r.getLong(2)))
+      .toSeq
+
+  /** A per-group hard gate: throws naming every group whose PSI exceeds
+    * `maxPsi`, worst first ([[graft.operators.Validation
+    * .requireGroupDriftBelow]]'s report shape). */
+  private def requireGroupsUnder(psiByGroup: Map[String, Double],
+      maxPsi: Double, tripped: String): Unit = {
+    val failing = psiByGroup.filter(_._2 > maxPsi).toSeq.sortBy(-_._2)
+    if (failing.nonEmpty)
+      throw new IllegalStateException(
+        s"stream per-group $tripped (maxPsi $maxPsi): " +
+          failing.map { case (g, p) => f"group '$g' PSI $p%.4f" }
+            .mkString("; "))
+  }
+
+  /** Throws unless admitting `keys` keeps a monitor at or under `cap`
+    * distinct keys: a key column drifting to id-like cardinality must fail
+    * loudly, not accrete unbounded state. `what` names the key ("group",
+    * "label"); `source` names what would admit them. */
+  private def requireAdmits(known: Set[String], keys: Seq[String], cap: Int,
+      what: String, source: String): Unit = {
+    val after = known.size + keys.distinct.count(k => !known(k))
+    val capName = s"max${what.capitalize}s"
+    require(after <= cap,
+      s"$source would grow the monitor to $after ${what}s (> $capName " +
+        s"$cap) — the $what column has id-like cardinality; segment on a " +
+        s"coarser column or raise $capName")
+  }
 
   /**
    * Cumulative PER-GROUP CATEGORICAL drift monitor — the streaming twin
@@ -908,14 +731,15 @@ object StreamOps {
    * set (everything folds to `__other__`, n_ref = 0 — the batch
    * operator's cur-only-group semantics exactly), capped by `maxGroups`
    * with a LOUD pre-mutation error. Exact integer counts, so any trigger
-   * slicing converges to the batch profile. Replay-safe epoch floor
-   * (merge skipped, hard gate re-evaluated); scoped to ONE query.
+   * slicing converges to the batch profile. Replay-safe and checkpointed
+   * through [[EpochFolded]]; the checkpoint's identity is (topK, alpha,
+   * maxGroups) and the fitted per-group top sets and tails.
    */
   final class GroupCatDriftTracker private[streaming] (
       val topK: Int, val alpha: Double, val maxGroups: Int,
       private val refTop: Map[String, Seq[(String, Long)]],
-      private val refOther: Map[String, Long]) extends Serializable {
-    private var lastEpoch: Long = Long.MinValue
+      private val refOther: Map[String, Long])
+      extends EpochFolded(0x67474354, "mix") { // "gGCT"
     // group -> per-top-category cumulative counts (index-aligned with
     // refTop(group)) and the group's fold-row count
     private val curTop =
@@ -928,40 +752,29 @@ object StreamOps {
       refTop.map { case (g, ts) => g -> ts.map(_._1) }
 
     /** Merge one epoch's classified (group, Option(category), n) counts
-      * (None = the folded tail); returns false for a replayed epoch.
-      * Throws BEFORE mutating if new groups would exceed `maxGroups`. */
+      * (None = the folded tail). Throws BEFORE mutating if new groups
+      * would exceed `maxGroups`, or if a category is outside its group's
+      * fitted top set (sink and tracker disagree on the fit). */
     private[streaming] def update(batch: Seq[(String, Option[String], Long)],
-        epochId: Long): Boolean = synchronized {
-      if (epochId <= lastEpoch) return false // replayed epoch: merged
-      val known = refTop.keySet ++ refOther.keySet ++ curTop.keySet ++
-        curOther.keySet
-      val incoming = batch.map(_._1).distinct.filterNot(known)
-      require(known.size + incoming.size <= maxGroups,
-        s"epoch $epochId would grow the monitor to " +
-          s"${known.size + incoming.size} groups (> maxGroups $maxGroups) " +
-          "— the group column has id-like cardinality; segment on a " +
-          "coarser column or raise maxGroups")
-      // Resolve (and validate) the WHOLE batch before any mutation — the
-      // same pre-mutation discipline as the maxGroups check above: a
-      // sink/tracker fit mismatch throws with counts AND the epoch floor
-      // untouched, so a replay of this epoch is not merge-skipped against
-      // half-merged state.
-      val resolved = batch.map {
-        case (g, Some(cat), n) =>
-          val tops = refTop.getOrElse(g, Seq.empty)
-          val i = tops.indexWhere(_._1 == cat)
-          require(i >= 0, s"classified category '$cat' is not in group " +
-            s"'$g''s fitted top set — sink and tracker disagree on the fit")
-          (g, i, tops.size, n)
-        case (g, None, n) => (g, -1, 0, n)
+        epochId: Long): Boolean =
+      fold(epochId) {
+        requireAdmits(refTop.keySet ++ refOther.keySet ++ curTop.keySet ++
+          curOther.keySet, batch.map(_._1), maxGroups, "group",
+          s"epoch $epochId")
+        val resolved = batch.map {
+          case (g, Some(cat), n) =>
+            val tops = refTop.getOrElse(g, Seq.empty)
+            val i = tops.indexWhere(_._1 == cat)
+            require(i >= 0, s"classified category '$cat' is not in group " +
+              s"'$g''s fitted top set — sink and tracker disagree on the fit")
+            (g, i, tops.size, n)
+          case (g, None, n) => (g, -1, 0, n)
+        }
+        () => resolved.foreach { case (g, i, nTops, n) =>
+          if (i >= 0) curTop.getOrElseUpdate(g, new Array[Long](nTops))(i) += n
+          else curOther.put(g, curOther.getOrElse(g, 0L) + n)
+        }
       }
-      lastEpoch = epochId
-      resolved.foreach { case (g, i, nTops, n) =>
-        if (i >= 0) curTop.getOrElseUpdate(g, new Array[Long](nTops))(i) += n
-        else curOther.put(g, curOther.getOrElse(g, 0L) + n)
-      }
-      true
-    }
 
     /** Cumulative rows in [[graft.operators.Validation
       * .categoricalDriftByGroupFromCounts]]'s frame shape
@@ -985,89 +798,40 @@ object StreamOps {
       * over each group's own emitted rows). */
     def psiByGroup: Map[String, Double] = synchronized {
       counts.groupBy(_._1).map { case (g, rows) =>
-        val tr = rows.map(_._4).sum + alpha * rows.size
-        val tc = rows.map(_._5).sum + alpha * rows.size
-        g -> rows.map { case (_, _, _, nr, nc) =>
-          val p = (nr + alpha) / tr; val q = (nc + alpha) / tc
-          (q - p) * math.log(q / p)
-        }.sum
+        g -> psiTerms(rows.map(_._4), rows.map(_._5), alpha).sum
       }
     }
 
-    /** Clear the stream side + epoch floor (the fitted reference stays). */
-    def reset(): Unit = synchronized {
-      lastEpoch = Long.MinValue
-      curTop.clear(); curOther.clear()
+    protected def writeConfig(out: DataOutputStream): Unit = {
+      out.writeInt(topK); out.writeDouble(alpha); out.writeInt(maxGroups)
     }
 
-    /** Checkpoint cumulative state + epoch floor; header carries the full
-      * monitor identity incl. the fitted per-group top sets. */
-    def toBytes: Array[Byte] = synchronized {
-      val bos = new java.io.ByteArrayOutputStream()
-      val out = new java.io.DataOutputStream(bos)
-      out.writeInt(GroupCatDriftMagic)
-      out.writeInt(topK); out.writeDouble(alpha); out.writeInt(maxGroups)
-      out.writeInt(refTop.size)
-      refTop.toSeq.sortBy(_._1).foreach { case (g, ts) =>
-        out.writeUTF(g); out.writeInt(ts.size)
+    override protected def writeReference(out: DataOutputStream): Unit = {
+      writeMap(out, refTop) { ts =>
+        out.writeInt(ts.size)
         ts.foreach { case (c, n) => out.writeUTF(c); out.writeLong(n) }
       }
-      out.writeInt(refOther.size)
-      refOther.toSeq.sortBy(_._1).foreach { case (g, n) =>
-        out.writeUTF(g); out.writeLong(n)
-      }
-      out.writeLong(lastEpoch)
-      out.writeInt(curTop.size)
-      curTop.toSeq.sortBy(_._1).foreach { case (g, arr) =>
-        out.writeUTF(g); out.writeInt(arr.length); arr.foreach(out.writeLong)
-      }
-      out.writeInt(curOther.size)
-      curOther.toSeq.sortBy(_._1).foreach { case (g, n) =>
-        out.writeUTF(g); out.writeLong(n)
-      }
-      out.flush()
-      bos.toByteArray
+      writeMap(out, refOther)(out.writeLong)
     }
 
-    /** Restore state serialized by [[toBytes]]; throws on a foreign blob
-      * or monitor-identity mismatch, with the tracker unchanged. */
-    def restore(bytes: Array[Byte]): Unit = synchronized {
-      require(bytes.length >= 8,
-        s"not a GroupCatDriftTracker checkpoint (${bytes.length} bytes)")
-      val in = new java.io.DataInputStream(
-        new java.io.ByteArrayInputStream(bytes))
-      val magic = in.readInt()
-      require(magic == GroupCatDriftMagic,
-        s"not a GroupCatDriftTracker checkpoint (magic 0x${magic.toHexString})")
-      val (sK, sA, sG) = (in.readInt(), in.readDouble(), in.readInt())
-      require(sK == topK && sA == alpha && sG == maxGroups,
-        s"checkpoint was written by a differently-configured monitor " +
-          s"(topK=$sK, alpha=$sA, maxGroups=$sG)")
-      val sRefTop = (1 to in.readInt()).map { _ =>
-        (in.readUTF(), Seq.fill(in.readInt())((in.readUTF(), in.readLong())))
-      }.toMap
-      val sRefOther = (1 to in.readInt()).map { _ =>
-        (in.readUTF(), in.readLong())
-      }.toMap
-      require(sRefTop == refTop && sRefOther == refOther,
-        "checkpoint was written against a DIFFERENT reference mix — " +
-          "refit from the checkpoint's reference snapshot")
-      // parse the whole blob before mutating
-      val epoch = in.readLong()
-      val sCurTop = (1 to in.readInt()).map { _ =>
-        (in.readUTF(), Array.fill(in.readInt())(in.readLong()))
-      }.toMap
-      val sCurOther = (1 to in.readInt()).map { _ =>
-        (in.readUTF(), in.readLong())
-      }.toMap
-      lastEpoch = epoch
-      curTop.clear(); sCurTop.foreach { case (g, a) => curTop.put(g, a) }
-      curOther.clear(); sCurOther.foreach { case (g, n) => curOther.put(g, n) }
+    protected def writeState(out: DataOutputStream): Unit = {
+      writeMap(out, curTop) { arr =>
+        out.writeInt(arr.length); arr.foreach(out.writeLong)
+      }
+      writeMap(out, curOther)(out.writeLong)
     }
+
+    protected def readState(in: DataInputStream): () => Unit = {
+      val top = readMap(in)(Array.fill(in.readInt())(in.readLong()))
+      val other = readMap(in)(in.readLong())
+      () => {
+        curTop.clear(); curTop ++= top
+        curOther.clear(); curOther ++= other
+      }
+    }
+
+    protected def clearState(): Unit = { curTop.clear(); curOther.clear() }
   }
-
-  /** [[GroupCatDriftTracker.toBytes]] header magic ("gGCT"). */
-  private val GroupCatDriftMagic: Int = 0x67474354
 
   /** Fit the per-group categorical monitor ONCE: (group, category) counts
     * reduce map-side, each group's top-K cut comes off a rank window with
@@ -1104,9 +868,8 @@ object StreamOps {
     val allGroups = ref.filter(col(groupCol).isNotNull)
       .select(col(groupCol).cast("string").as("g")).distinct()
       .collect().map(_.getString(0))
-    require(allGroups.length <= maxGroups,
-      s"reference snapshot has ${allGroups.length} groups (> maxGroups " +
-        s"$maxGroups) — segment on a coarser column or raise maxGroups")
+    requireAdmits(Set.empty, allGroups.toSeq, maxGroups, "group",
+      "the reference snapshot")
     val topAll = allGroups.map(g => g -> top.getOrElse(g, Seq.empty)).toMap
     val refOther = allGroups.map(g => g -> tails.getOrElse(g, 0L)).toMap
     new GroupCatDriftTracker(topK, alpha, maxGroups, topAll, refOther)
@@ -1155,14 +918,8 @@ object StreamOps {
         }
         .toSeq
       tracker.update(counts, epochId)
-      val failing = tracker.psiByGroup.filter(_._2 > maxPsi).toSeq
-        .sortBy(-_._2)
-      if (failing.nonEmpty)
-        throw new IllegalStateException(
-          s"stream per-group categorical drift gate tripped at epoch " +
-            s"$epochId on '$catCol' (maxPsi $maxPsi): " +
-            failing.map { case (grp, p) => f"group '$grp' PSI $p%.4f" }
-              .mkString("; "))
+      requireGroupsUnder(tracker.psiByGroup, maxPsi,
+        s"categorical drift gate tripped at epoch $epochId on '$catCol'")
     }
   }
 
@@ -1183,14 +940,15 @@ object StreamOps {
    * flag is preserved mid-stream: min/max dims accumulate per side, and
    * the cosine is NULL (never a truncated-position value) whenever any
    * side of a label mixes widths or the sides' widths differ. Labels are
-   * tracked as STRINGS (cast once on both sides). Replay-safe via the
-   * standard epoch floor; scoped to ONE query.
+   * tracked as STRINGS (cast once on both sides). Replay-safe and
+   * checkpointed through [[EpochFolded]]; the checkpoint's identity is
+   * maxLabels and the fitted reference stats and centroid sums.
    */
   final class EmbedDriftTracker private[streaming] (
       val maxLabels: Int,
       private val refStats: Map[String, (Long, Double, Int, Int)],
-      private val refCent: Map[String, Array[Double]]) extends Serializable {
-    private var lastEpoch: Long = Long.MinValue
+      private val refCent: Map[String, Array[Double]])
+      extends EpochFolded(0x67454454) { // "gEDT"
     // label -> (n, sum of L2 norms, min dim, max dim)
     private val curStats = scala.collection.mutable
       .HashMap.empty[String, (Long, Double, Int, Int)]
@@ -1202,29 +960,22 @@ object StreamOps {
     private[streaming] def update(
         stats: Seq[(String, Long, Double, Int, Int)],
         cents: Seq[(String, Int, Double)], epochId: Long): Boolean =
-      synchronized {
-        if (epochId <= lastEpoch) return false // replayed epoch: merged
-        val incoming = stats.map(_._1).distinct
-          .filterNot(l => refStats.contains(l) || curStats.contains(l))
-        val after =
-          refStats.keySet.union(curStats.keySet).size + incoming.size
-        require(after <= maxLabels,
-          s"epoch $epochId would grow the monitor to $after labels " +
-            s"(> maxLabels $maxLabels) — the label column has id-like " +
-            "cardinality; segment on a coarser column or raise maxLabels")
-        lastEpoch = epochId
-        stats.foreach { case (l, n, ns, dn, dx) =>
-          val (n0, ns0, dn0, dx0) =
-            curStats.getOrElse(l, (0L, 0.0, Int.MaxValue, Int.MinValue))
-          curStats.put(l, (n0 + n, ns0 + ns, math.min(dn0, dn),
-            math.max(dx0, dx)))
+      fold(epochId) {
+        requireAdmits(refStats.keySet ++ curStats.keySet, stats.map(_._1),
+          maxLabels, "label", s"epoch $epochId")
+        () => {
+          stats.foreach { case (l, n, ns, dn, dx) =>
+            val (n0, ns0, dn0, dx0) =
+              curStats.getOrElse(l, (0L, 0.0, Int.MaxValue, Int.MinValue))
+            curStats.put(l, (n0 + n, ns0 + ns, math.min(dn0, dn),
+              math.max(dx0, dx)))
+          }
+          cents.foreach { case (l, pos, s) =>
+            val m = curCent.getOrElseUpdate(l,
+              scala.collection.mutable.HashMap.empty[Int, Double])
+            m.put(pos, m.getOrElse(pos, 0.0) + s)
+          }
         }
-        cents.foreach { case (l, pos, s) =>
-          val m = curCent.getOrElseUpdate(l,
-            scala.collection.mutable.HashMap.empty[Int, Double])
-          m.put(pos, m.getOrElse(pos, 0.0) + s)
-        }
-        true
       }
 
     /** One row per label (union of reference and stream labels), the
@@ -1260,92 +1011,51 @@ object StreamOps {
       }
     }
 
-    /** Clear the stream side + epoch floor (the fitted reference stays). */
-    def reset(): Unit = synchronized {
-      lastEpoch = Long.MinValue
-      curStats.clear()
-      curCent.clear()
-    }
-
-    /** Checkpoint cumulative state + epoch floor; header carries the full
-      * monitor identity incl. the fitted reference stats and centroid
-      * sums ([[DriftTracker.toBytes]]'s contract). */
-    def toBytes: Array[Byte] = synchronized {
-      val bos = new java.io.ByteArrayOutputStream()
-      val out = new java.io.DataOutputStream(bos)
-      out.writeInt(EmbedDriftMagic)
+    protected def writeConfig(out: DataOutputStream): Unit =
       out.writeInt(maxLabels)
-      def writeStats(m: collection.Map[String, (Long, Double, Int, Int)]): Unit = {
-        out.writeInt(m.size)
-        m.toSeq.sortBy(_._1).foreach { case (l, (n, ns, dn, dx)) =>
-          out.writeUTF(l); out.writeLong(n); out.writeDouble(ns)
-          out.writeInt(dn); out.writeInt(dx)
-        }
-      }
-      def writeCent(m: collection.Map[String, Seq[(Int, Double)]]): Unit = {
-        out.writeInt(m.size)
-        m.toSeq.sortBy(_._1).foreach { case (l, ps) =>
-          out.writeUTF(l); out.writeInt(ps.size)
-          ps.sortBy(_._1).foreach { case (p, s) =>
-            out.writeInt(p); out.writeDouble(s)
-          }
-        }
-      }
-      writeStats(refStats)
-      writeCent(refCent.map { case (l, a) => l -> a.zipWithIndex.map(_.swap).toSeq })
-      out.writeLong(lastEpoch)
-      writeStats(curStats)
-      writeCent(curCent.map { case (l, m) => l -> m.toSeq })
-      out.flush()
-      bos.toByteArray
+
+    override protected def writeReference(out: DataOutputStream): Unit = {
+      writeStats(out, refStats)
+      writeCent(out, refCent.map { case (l, a) =>
+        l -> a.zipWithIndex.map(_.swap).toSeq
+      })
     }
 
-    /** Restore state serialized by [[toBytes]]; throws on a foreign blob
-      * or monitor-identity mismatch, with the tracker unchanged. */
-    def restore(bytes: Array[Byte]): Unit = synchronized {
-      require(bytes.length >= 8,
-        s"not an EmbedDriftTracker checkpoint (${bytes.length} bytes)")
-      val in = new java.io.DataInputStream(
-        new java.io.ByteArrayInputStream(bytes))
-      val magic = in.readInt()
-      require(magic == EmbedDriftMagic,
-        s"not an EmbedDriftTracker checkpoint (magic 0x${magic.toHexString})")
-      val sMax = in.readInt()
-      require(sMax == maxLabels,
-        s"checkpoint was written with maxLabels=$sMax, this monitor has " +
-          s"$maxLabels")
-      def readStats(): Map[String, (Long, Double, Int, Int)] =
-        (1 to in.readInt()).map { _ =>
-          (in.readUTF(), (in.readLong(), in.readDouble(), in.readInt(),
-            in.readInt()))
-        }.toMap
-      def readCent(): Map[String, Seq[(Int, Double)]] =
-        (1 to in.readInt()).map { _ =>
-          (in.readUTF(), Seq.fill(in.readInt())((in.readInt(), in.readDouble())))
-        }.toMap
-      val sRefStats = readStats()
-      val sRefCent = readCent()
-      require(sRefStats == refStats && sRefCent == refCent.map {
-          case (l, a) => l -> a.zipWithIndex.map(_.swap).toSeq },
-        "checkpoint was written against a DIFFERENT reference snapshot — " +
-          "refit from the checkpoint's reference")
-      // parse the whole blob before mutating
-      val epoch = in.readLong()
-      val sCurStats = readStats()
-      val sCurCent = readCent()
-      lastEpoch = epoch
-      curStats.clear(); sCurStats.foreach { case (l, v) => curStats.put(l, v) }
-      curCent.clear()
-      sCurCent.foreach { case (l, ps) =>
-        val m = scala.collection.mutable.HashMap.empty[Int, Double]
-        ps.foreach { case (p, s) => m.put(p, s) }
-        curCent.put(l, m)
+    protected def writeState(out: DataOutputStream): Unit = {
+      writeStats(out, curStats)
+      writeCent(out, curCent.map { case (l, m) => l -> m.toSeq })
+    }
+
+    private def writeStats(out: DataOutputStream,
+        m: collection.Map[String, (Long, Double, Int, Int)]): Unit =
+      writeMap(out, m) { case (n, ns, dn, dx) =>
+        out.writeLong(n); out.writeDouble(ns)
+        out.writeInt(dn); out.writeInt(dx)
+      }
+
+    /** Per label, its (position, component sum) pairs in position order. */
+    private def writeCent(out: DataOutputStream,
+        m: collection.Map[String, Seq[(Int, Double)]]): Unit =
+      writeMap(out, m) { ps =>
+        out.writeInt(ps.size)
+        ps.sortBy(_._1).foreach { case (p, s) =>
+          out.writeInt(p); out.writeDouble(s)
+        }
+      }
+
+    protected def readState(in: DataInputStream): () => Unit = {
+      val stats = readMap(in)((in.readLong(), in.readDouble(), in.readInt(),
+        in.readInt()))
+      val cents = readMap(in)(scala.collection.mutable.HashMap.from(
+        Seq.fill(in.readInt())((in.readInt(), in.readDouble()))))
+      () => {
+        curStats.clear(); curStats ++= stats
+        curCent.clear(); curCent ++= cents
       }
     }
+
+    protected def clearState(): Unit = { curStats.clear(); curCent.clear() }
   }
-
-  /** [[EmbedDriftTracker.toBytes]] header magic ("gEDT"). */
-  private val EmbedDriftMagic: Int = 0x67454454
 
   /** Fit the embedding monitor's reference side ONCE: per-label count /
     * norm-sum / dim bounds plus per-(label, pos) centroid sums — the
@@ -1356,10 +1066,8 @@ object StreamOps {
       maxLabels: Int = 10000): EmbedDriftTracker = {
     require(maxLabels > 0, s"maxLabels must be positive, got $maxLabels")
     val (stats, cents) = embedDriftPartials(ref, labelCol, vecCol)
-    require(stats.map(_._1).distinct.size <= maxLabels,
-      s"reference snapshot has ${stats.map(_._1).distinct.size} labels " +
-        s"(> maxLabels $maxLabels) — segment on a coarser column or raise " +
-        "maxLabels")
+    requireAdmits(Set.empty, stats.map(_._1), maxLabels, "label",
+      "the reference snapshot")
     val refStats = stats.map { case (l, n, ns, dn, dx) =>
       l -> ((n, ns, dn, dx))
     }.toMap
@@ -1511,56 +1219,42 @@ object StreamOps {
    * overwhelmingly common case; a term spread perfectly thin below every
    * batch head can be missed — the standard tradeoff for bounded state).
    *
-   * Epoch-idempotent: a replayed `foreachBatch` epoch (failure recovery)
-   * is skipped, not double-merged — same rule as the connector sink's
-   * idempotent epoch commit. That guard assumes epochs INCREASE within one
-   * query lifetime, so a tracker is SINGLE-QUERY (single-checkpoint)
-   * scoped: starting a second query with a fresh checkpoint restarts epoch
-   * ids at 0, which the guard would silently skip. Call [[HeavyHitterTracker
-   * .reset]] (or build a new tracker) before reusing one across queries.
+   * Replay-safe and checkpointed through [[EpochFolded]], like the connector
+   * sink's idempotent epoch commit: a replayed epoch is skipped, not
+   * double-merged, so a tracker serves ONE query (reset() before reuse).
+   * The checkpoint's identity is (k, eps, confidence, seed): a sketch built
+   * with any other parameters has a different width, depth or hash seed,
+   * and merging it would silently corrupt every count.
    */
-  /** [[HeavyHitterTracker.toBytes]] header magic: guards against feeding a
-    * pre-header (or foreign) byte blob into [[HeavyHitterTracker.restore]]. */
-  private val HeavyHitterMagic: Int = 0x67484854 // "gHHT"
-
   final class HeavyHitterTracker private[streaming] (
-      k: Int, eps: Double, confidence: Double, seed: Int) extends Serializable {
-    @transient private var cms: org.apache.spark.util.sketch.CountMinSketch = _
+      k: Int, eps: Double, confidence: Double, seed: Int)
+      extends EpochFolded(0x67484854) { // "gHHT"
+    @transient private var cms: CountMinSketch = _
     private var candidates: List[String] = Nil
-    private var lastEpoch: Long = Long.MinValue
 
     private[streaming] def update(
         batchCms: Option[Array[Byte]], batchTerms: Seq[String],
-        epochId: Long): Unit = synchronized {
-      if (epochId <= lastEpoch) return // replayed epoch: already merged
-      lastEpoch = epochId
-      batchCms.foreach { bytes =>
-        val b = org.apache.spark.util.sketch.CountMinSketch.readFrom(
-          new java.io.ByteArrayInputStream(bytes))
-        if (cms == null) cms = b else { cms.mergeInPlace(b); () }
+        epochId: Long): Boolean =
+      fold(epochId) {
+        val batch = batchCms.map(b =>
+          CountMinSketch.readFrom(new ByteArrayInputStream(b)))
+        () => {
+          batch.foreach { b =>
+            if (cms == null) cms = b else { cms.mergeInPlace(b); () }
+          }
+          if (cms != null) {
+            candidates = (candidates ++ batchTerms).distinct
+              .map(t => t -> cms.estimateCount(t))
+              .sortBy { case (t, n) => (-n, t) }
+              .take(k).map(_._1)
+          }
+        }
       }
-      if (cms != null) {
-        candidates = (candidates ++ batchTerms).distinct
-          .map(t => t -> cms.estimateCount(t))
-          .sortBy { case (t, n) => (-n, t) }
-          .take(k).map(_._1)
-      }
-    }
 
     /** Current top-k (term, estimated count), best-ranked first. */
     def result: Seq[(String, Long)] = synchronized {
       if (cms == null) Nil
       else candidates.map(t => t -> cms.estimateCount(t))
-    }
-
-    /** Clear all state (sketch, candidates, epoch watermark) so the tracker
-      * can feed a NEW query whose epoch ids restart at 0 — without this, the
-      * replay guard would mistake the new query's batches for replays of the
-      * old one's and skip every one of them. */
-    def reset(): Unit = synchronized {
-      cms = null
-      candidates = Nil
-      lastEpoch = Long.MinValue
     }
 
     /** Point estimate for any term from the merged sketch (CMS one-sided
@@ -1569,72 +1263,34 @@ object StreamOps {
       if (cms == null) 0L else cms.estimateCount(term)
     }
 
-    /** Serialize (sketch + candidates + last epoch) — checkpoint this
-      * beside the stream's offset log so a driver restart resumes the
-      * tracker instead of losing history (the tracker itself is
-      * process-local state; Spark checkpoints offsets, not foreachBatch
-      * user state). */
-    def toBytes: Array[Byte] = synchronized {
-      val bos = new java.io.ByteArrayOutputStream()
-      val out = new java.io.DataOutputStream(bos)
-      // header: the tracker's CMS parameters. Restoring into a tracker
-      // built with different (k, eps, confidence, seed) would silently
-      // merge INCOMPATIBLE sketches — width/depth/hash-seed all differ, so
-      // counts become garbage with no error. restore() validates loudly.
-      out.writeInt(HeavyHitterMagic)
-      out.writeInt(k)
-      out.writeDouble(eps)
-      out.writeDouble(confidence)
-      out.writeInt(seed)
-      out.writeLong(lastEpoch)
+    protected def writeConfig(out: DataOutputStream): Unit = {
+      out.writeInt(k); out.writeDouble(eps)
+      out.writeDouble(confidence); out.writeInt(seed)
+    }
+
+    protected def writeState(out: DataOutputStream): Unit = {
       out.writeInt(candidates.length)
       candidates.foreach(out.writeUTF)
       if (cms == null) out.writeInt(0)
       else {
-        val sk = new java.io.ByteArrayOutputStream()
+        val sk = new ByteArrayOutputStream()
         cms.writeTo(sk)
-        val bytes = sk.toByteArray
-        out.writeInt(bytes.length)
-        out.write(bytes)
+        out.writeInt(sk.size)
+        sk.writeTo(out)
       }
-      out.flush()
-      bos.toByteArray
     }
 
-    /** Restore state serialized by [[toBytes]]. The byte header carries the
-      * writing tracker's (k, eps, confidence, seed); restoring into a
-      * tracker built with DIFFERENT parameters throws instead of silently
-      * merging incompatible sketches into garbage counts. */
-    def restore(bytes: Array[Byte]): Unit = synchronized {
-      // 28-byte header: magic + k + eps + confidence + seed
-      require(bytes.length >= 28,
-        s"not a HeavyHitterTracker checkpoint (${bytes.length} bytes — " +
-          "shorter than the parameter header)")
-      val in = new java.io.DataInputStream(new java.io.ByteArrayInputStream(bytes))
-      val magic = in.readInt()
-      require(magic == HeavyHitterMagic,
-        s"not a HeavyHitterTracker checkpoint (magic 0x${magic.toHexString}; " +
-          "pre-header-format bytes cannot be restored — rebuild the tracker " +
-          "and replay, the header was introduced before any stable release)")
-      val (k0, eps0, conf0, seed0) =
-        (in.readInt(), in.readDouble(), in.readDouble(), in.readInt())
-      require(k0 == k && eps0 == eps && conf0 == confidence && seed0 == seed,
-        s"checkpoint was written by a tracker with (k=$k0, eps=$eps0, " +
-          s"confidence=$conf0, seed=$seed0) but this tracker has (k=$k, " +
-          s"eps=$eps, confidence=$confidence, seed=$seed) — merging " +
-          "differently-configured CMS sketches silently corrupts counts; " +
-          "rebuild the tracker with the checkpoint's parameters")
-      lastEpoch = in.readLong()
-      candidates = List.fill(in.readInt())(in.readUTF())
-      val skLen = in.readInt()
-      cms = if (skLen == 0) null
-      else {
-        val sk = new Array[Byte](skLen)
-        in.readFully(sk)
-        org.apache.spark.util.sketch.CountMinSketch.readFrom(
-          new java.io.ByteArrayInputStream(sk))
-      }
+    protected def readState(in: DataInputStream): () => Unit = {
+      val cands = List.fill(in.readInt())(in.readUTF())
+      val sk = new Array[Byte](in.readInt())
+      in.readFully(sk)
+      val sketch =
+        if (sk.isEmpty) null
+        else CountMinSketch.readFrom(new ByteArrayInputStream(sk))
+      () => { candidates = cands; cms = sketch }
     }
+
+    protected def clearState(): Unit = { cms = null; candidates = Nil }
   }
 
   /** Build the tracker plus the `foreachBatch` function that feeds it.
@@ -1649,7 +1305,7 @@ object StreamOps {
       s"candidatesPerBatch must be >= 0 (0 = default 4k), got $candidatesPerBatch")
     val perBatch = if (candidatesPerBatch > 0) candidatesPerBatch else 4 * k
     val tracker = new HeavyHitterTracker(k, eps, confidence, seed)
-    val fn = (batch: DataFrame, epochId: Long) => {
+    val fn: (DataFrame, Long) => Unit = (batch, epochId) => {
       // the CMS aggregate and the top-M candidate job share one
       // materialization of the exploded token stream — without the persist
       // each trigger would scan/split/explode the batch twice

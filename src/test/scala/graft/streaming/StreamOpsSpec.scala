@@ -955,4 +955,158 @@ class StreamOpsSpec extends AnyFunSuite {
     assert(streamC.toSeq == batchC.toSeq,
       s"stream ${streamC.toSeq} != batch ${batchC.toSeq}")
   }
+
+  /** One tracker fed epochs 0 until `n` of a fixed per-tracker script,
+    * behind closures so the checkpoint tests below treat the seven monitor
+    * types alike. `replay()` re-sends epoch n-1; `next()` sends epoch n. */
+  private final class Fed(n: Int, val feed: Int => Any, val state: () => Any,
+      val toBytes: () => Array[Byte], val restore: Array[Byte] => Unit) {
+    (0 until n).foreach(feed)
+    def replay(): Unit = { feed(n - 1); () }
+    def next(): Unit = { feed(n); () }
+  }
+
+  private val monitors: Seq[(String, Int => Fed)] = Seq(
+    "ConstraintTracker" -> { n =>
+      val t = new StreamOps.ConstraintTracker(Seq("a", "b"))
+      def feed(e: Int) = t.update(Seq(
+        ("a", e + 2L, e % 2L, if (e % 2 == 1) Some(s"id$e") else None),
+        ("b", 1L, 1L, Some(s"z${9 - e}"))), e.toLong)
+      new Fed(n, feed, () => t.result, () => t.toBytes, t.restore)
+    },
+    "DriftTracker" -> { n =>
+      val t = new StreamOps.DriftTracker(0.0, 10.0, 4, 0.5,
+        Array(3L, 1L, 0L, 2L))
+      def feed(e: Int) =
+        t.update(Seq((e % 4, e + 1L), ((e + 2) % 4, 2L)), e.toLong)
+      new Fed(n, feed, () => t.counts, () => t.toBytes, t.restore)
+    },
+    "CatDriftTracker" -> { n =>
+      val t = new StreamOps.CatDriftTracker(2, 0.5, Array("a", "b"),
+        Array(5L, 3L), 2L)
+      def feed(e: Int) = t.update(
+        Seq((Some(if (e % 2 == 0) "a" else "b"), e + 1L), (None, 2L)), e.toLong)
+      new Fed(n, feed, () => t.counts, () => t.toBytes, t.restore)
+    },
+    "GroupDriftTracker" -> { n =>
+      val t = new StreamOps.GroupDriftTracker(0.0, 10.0, 3, 0.5, 10,
+        Map("g1" -> Array(1L, 2L, 0L), "g2" -> Array(0L, 0L, 4L)))
+      def feed(e: Int) = t.update(
+        Seq((s"g${e % 3}", e % 3, e + 1L), (s"n$e", -1, 1L)), e.toLong)
+      new Fed(n, feed, () => t.counts, () => t.toBytes, t.restore)
+    },
+    "GroupCatDriftTracker" -> { n =>
+      val t = new StreamOps.GroupCatDriftTracker(1, 0.5, 10,
+        Map("g1" -> Seq(("a", 3L)), "g2" -> Seq(("x", 2L))),
+        Map("g1" -> 1L, "g2" -> 0L))
+      def feed(e: Int) = t.update(Seq(("g1", Some("a"), e + 1L),
+        (s"g${e % 2 + 1}", None, 2L), (s"n$e", None, 1L)), e.toLong)
+      new Fed(n, feed, () => t.counts, () => t.toBytes, t.restore)
+    },
+    "EmbedDriftTracker" -> { n =>
+      val t = new StreamOps.EmbedDriftTracker(10,
+        Map("x" -> ((2L, 2.0, 2, 2))), Map("x" -> Array(1.8, 0.2)))
+      def feed(e: Int) = t.update(
+        Seq(("x", 1L, 1.0 + e / 4.0, 2, 2), (s"l$e", 1L, 0.5, 2, 2)),
+        Seq(("x", 0, 0.9 + e / 8.0), ("x", 1, 0.1), (s"l$e", 0, 0.3),
+          (s"l$e", 1, 0.4)), e.toLong)
+      new Fed(n, feed, () => t.result, () => t.toBytes, t.restore)
+    },
+    "HeavyHitterTracker" -> { n =>
+      // eps 0.5 / confidence 0.5: a 1 x 4 sketch keeps the pinned bytes short
+      val t = new StreamOps.HeavyHitterTracker(2, 0.5, 0.5, 7)
+      def feed(e: Int) = {
+        val cms =
+          org.apache.spark.util.sketch.CountMinSketch.create(0.5, 0.5, 7)
+        cms.add("a", e + 1L); cms.add(s"t$e", 2L)
+        val bos = new java.io.ByteArrayOutputStream(); cms.writeTo(bos)
+        t.update(Some(bos.toByteArray), Seq(s"t$e", "a"), e.toLong)
+      }
+      new Fed(n, feed, () => t.result, () => t.toBytes, t.restore)
+    })
+
+  private def hex(b: Array[Byte]): String =
+    b.map(x => f"${x & 0xff}%02x").mkString
+  private def unhex(s: String): Array[Byte] =
+    s.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray
+
+  test("tracker checkpoints: toBytes is byte-identical to the pinned format, and the pinned bytes restore") {
+    // toBytes of each tracker fed epochs 0 and 1: the checkpoint format,
+    // pinned so that blobs already written keep restoring
+    val golden = Map(
+      "ConstraintTracker" -> (
+        "6743545200000002000161000162000000000000000100000000000000050000" +
+        "000000000001010003696431000000000000000200000000000000020100027a" +
+        "38"),
+      "DriftTracker" -> (
+        "6744465400000000000000004024000000000000000000043fe0000000000000" +
+        "0000000000000003000000000000000100000000000000000000000000000002" +
+        "0000000000000001000000000000000100000000000000020000000000000002" +
+        "0000000000000002"),
+      "CatDriftTracker" -> (
+        "67434454000000023fe000000000000000000002000161000162000000000000" +
+        "0005000000000000000300000000000000020000000000000001000000000000" +
+        "000100000000000000020000000000000004"),
+      "GroupDriftTracker" -> (
+        "6747445400000000000000004024000000000000000000033fe0000000000000" +
+        "0000000a00000002000267310000000000000001000000000000000200000000" +
+        "0000000000026732000000000000000000000000000000000000000000000004" +
+        "0000000000000001000000040002673000000000000000010000000000000000" +
+        "0000000000000000000267310000000000000000000000000000000200000000" +
+        "0000000000026e30000000000000000000000000000000000000000000000000" +
+        "00026e31000000000000000000000000000000000000000000000000"),
+      "GroupCatDriftTracker" -> (
+        "67474354000000013fe00000000000000000000a000000020002673100000001" +
+        "0001610000000000000003000267320000000100017800000000000000020000" +
+        "0002000267310000000000000001000267320000000000000000000000000000" +
+        "0001000000010002673100000001000000000000000300000004000267310000" +
+        "00000000000200026732000000000000000200026e3000000000000000010002" +
+        "6e310000000000000001"),
+      "EmbedDriftTracker" -> (
+        "674544540000000a000000010001780000000000000002400000000000000000" +
+        "000002000000020000000100017800000002000000003ffccccccccccccd0000" +
+        "00013fc999999999999a00000000000000010000000300026c30000000000000" +
+        "00013fe0000000000000000000020000000200026c3100000000000000013fe0" +
+        "0000000000000000000200000002000178000000000000000240020000000000" +
+        "0000000002000000020000000300026c3000000002000000003fd33333333333" +
+        "33000000013fd999999999999a00026c3100000002000000003fd33333333333" +
+        "33000000013fd999999999999a00017800000002000000003ffecccccccccccc" +
+        "000000013fc999999999999a"),
+      "HeavyHitterTracker" -> (
+        "67484854000000023fe00000000000003fe00000000000000000000700000000" +
+        "0000000100000002000161000274300000003c00000001000000000000000700" +
+        "00000100000004000000005d878bcc0000000000000000000000000000000300" +
+        "000000000000020000000000000002"))
+    monitors.foreach { case (name, fed) =>
+      val live = fed(2)
+      assert(hex(live.toBytes()) == golden(name), s"$name: format moved")
+      val restored = fed(0)
+      restored.restore(unhex(golden(name)))
+      assert(restored.state() == live.state(), name)
+      // the restored floor: epoch 1 replayed is skipped, epoch 2 merges
+      restored.feed(1); restored.feed(2)
+      assert(restored.state() == fed(3).state(), s"$name: floor not restored")
+    }
+  }
+
+  test("tracker restore: every truncated checkpoint throws with state and epoch floor untouched") {
+    monitors.foreach { case (name, fed) =>
+      // a blob with a different state and a later floor (epoch 4), so a
+      // partial install would show in the state or in the floor
+      val blob = fed(5).toBytes()
+      (0 until blob.length).foreach { len =>
+        val t = fed(2)
+        val before = t.state()
+        intercept[Exception](t.restore(blob.take(len)))
+        assert(t.state() == before,
+          s"$name: a $len-byte prefix changed the state")
+        t.replay()
+        assert(t.state() == before,
+          s"$name: after a $len-byte prefix, replayed epoch 1 merged")
+        t.next()
+        assert(t.state() != before,
+          s"$name: after a $len-byte prefix, epoch 2 was skipped")
+      }
+    }
+  }
 }
