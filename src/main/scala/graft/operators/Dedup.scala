@@ -1471,13 +1471,10 @@ object Dedup extends Logging {
     val spark = docs.sparkSession
     val m = EpochIndex.committed(spark, path, MinHashIndex)
     val p = minHashParams(m)
-    def fp(df: DataFrame, c: String): (Long, Long) = {
-      val r = df.agg(count(lit(1)),
-        coalesce(bit_xor(xxhash64(col(c))), lit(0L))).head()
-      (r.getLong(0), r.getLong(1))
-    }
-    val (ic, ih) = fp(EpochIndex.scan(spark, path, MinHashIndex, m, "shingles"), "doc_id")
-    val (cc, ch) = fp(shingleBase(docs, idCol, textCol, p.k, "doc_id"), "doc_id")
+    val (ic, ih) = EpochIndex.idFingerprint(
+      EpochIndex.scan(spark, path, MinHashIndex, m, "shingles"), "doc_id")
+    val (cc, ch) = EpochIndex.idFingerprint(
+      shingleBase(docs, idCol, textCol, p.k, "doc_id"), "doc_id")
     if (ic != cc || ih != ch) throw new IllegalStateException(
       s"MinHash index at $path is stale: it covers $ic documents " +
         s"(id-fingerprint $ih) but the corpus has $cc shingle-eligible " +

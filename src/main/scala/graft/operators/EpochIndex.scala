@@ -2,17 +2,21 @@ package graft.operators
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.functions.{bit_xor, coalesce, col, count, lit, xxhash64}
 import org.apache.spark.sql.streaming.DataStreamWriter
 
 /**
  * The one commit protocol of the epoch-partitioned persisted indexes:
  * content-hash and MinHash ([[Dedup]]), perceptual hash ([[Multimodal]]),
- * the fuzzy segment index ([[Fuzzy]]) and BM25 corpus statistics
- * ([[CorpusOps]]). Each family supplies only its own part: the frames it
- * writes, the rule that merges them, and its params.
+ * the fuzzy segment index ([[Fuzzy]]), BM25 corpus statistics
+ * ([[CorpusOps]]) and the LSH and IVF vector indexes ([[Similarity]]).
+ * Each family supplies only its own part: the frames it writes, the rule
+ * that merges them, its params and the partition column of a table.
  *
  * Layout under an index `path`:
- *  - `<table>/epoch=<id>/`: parquet, one directory per table per epoch.
+ *  - `<table>/epoch=<id>/`: parquet, one directory per table per epoch
+ *    (`<table>/epoch=<id>/<col>=<value>/` for a table with a partition
+ *    column, so a probe's filter on it prunes files in every epoch).
  *    Negative ids are generations written by save, batch append and
  *    compaction; ids >= 0 belong to stream epochs (and BM25's epoch-keyed
  *    appends);
@@ -36,11 +40,14 @@ private[graft] object EpochIndex {
 
   /** One index family. `tag` is stored in the manifest and checked on
     * every read, `name` and `saveFn` make the refusal messages point at
-    * the right builder, and `merge` folds a table's rows from many epochs
-    * into one generation (default: full-row distinct). */
+    * the right builder, `merge` folds a table's rows from many epochs
+    * into one generation (default: full-row distinct), and
+    * `partitionCols` names the column a table is partitioned by within
+    * each epoch (table -> column; tables not named are unpartitioned). */
   final case class Family(tag: String, name: String, saveFn: String,
       tables: Seq[String],
-      merge: (String, DataFrame) => DataFrame = (_, df) => df.distinct())
+      merge: (String, DataFrame) => DataFrame = (_, df) => df.distinct(),
+      partitionCols: Map[String, String] = Map.empty)
 
   /** A committed manifest: the visible epochs and the family's params. */
   final case class Manifest(family: String, epochs: Set[Long],
@@ -56,14 +63,14 @@ private[graft] object EpochIndex {
 
   /** How old a lease file must be before a new writer may break it: a
     * writer that died without cleanup must not brick its index forever,
-    * but a SLOW live compaction must not get its lease stolen mid-swap. */
+    * but a SLOW live compaction must not get its lease stolen mid-merge. */
   private[operators] val IndexLeaseStaleMs: Long = 30L * 60 * 1000
 
-  /** Best-effort single-writer lease over an index path. The compaction
-    * swap is crash-safe against a writer DYING, but two simultaneous
+  /** Best-effort single-writer lease over an index path. The manifest
+    * commit is crash-safe against a writer DYING, but two simultaneous
     * writers (two jobs sharing an index path — append while compacting,
-    * two compactions) can interleave the checked renames into states no
-    * single-writer recovery contemplates. Every index mutation therefore
+    * two compactions) can interleave their commits and prunes into states
+    * no single-writer recovery contemplates. Every index mutation therefore
     * takes `<path>/__lease` via create-exclusive first and fails LOUDLY
     * (with the holder's tag in the message) if another writer holds it;
     * a lease older than the stale threshold is treated as a dead
@@ -71,7 +78,7 @@ private[graft] object EpochIndex {
     * HEARTBEAT thread re-touches the lease mtime every `staleMs / 3`, so
     * a live writer outliving the threshold (a corpus-scale compaction
     * can easily run past 30 min) keeps its lease fresh instead of having
-    * it silently broken — and its swap corrupted — by a concurrent
+    * it silently broken — and its generation pruned — by a concurrent
     * writer. Best-effort by design: create-exclusive is atomic on HDFS
     * and on local paths through [[indexFs]] (`CREATE_NEW`); on stores
     * without atomic create the guard still refuses every
@@ -275,10 +282,14 @@ private[graft] object EpochIndex {
     }
 
   /** Write one epoch's frames (overwriting whatever an earlier attempt
-    * left under that still-uncommitted id), tables side by side. */
-  private def stage(path: String, epoch: Long, frames: Frames): Unit =
-    Exec.concurrently(frames.map { case (t, df) =>
-      () => df.write.mode("overwrite").parquet(epochDir(path, t, epoch))
+    * left under that still-uncommitted id), tables side by side. A table
+    * with a partition column is clustered by it first, so each of its
+    * values gets one file per epoch rather than one per input partition. */
+  private def stage(path: String, family: Family, epoch: Long, frames: Frames): Unit =
+    Exec.concurrently(frames.map { case (t, df) => () =>
+      family.partitionCols.get(t)
+        .fold(df.write)(c => df.repartition(col(c)).write.partitionBy(c))
+        .mode("overwrite").parquet(epochDir(path, t, epoch))
     })
 
   /** `m` with the schema of each staged table it does not hold yet: a
@@ -290,8 +301,9 @@ private[graft] object EpochIndex {
   private def schemaParam(table: String): String = s"schema.$table"
 
   /** [[stage]], then the manifest to commit. */
-  private def staged(path: String, epoch: Long, frames: Frames, m: Manifest): Manifest = {
-    stage(path, epoch, frames)
+  private def staged(path: String, family: Family, epoch: Long, frames: Frames,
+      m: Manifest): Manifest = {
+    stage(path, family, epoch, frames)
     withSchemas(m, frames)
   }
 
@@ -318,6 +330,14 @@ private[graft] object EpochIndex {
       .parquet(epochs.map(epochDir(path, table, _)): _*)
   }
 
+  /** Order-independent fingerprint of an id column: (count, xor of the id
+    * hashes). One narrow column scan; an index and the corpus it claims
+    * to cover agree on it unless ids were added, dropped or swapped. */
+  def idFingerprint(df: DataFrame, idCol: String): (Long, Long) = {
+    val r = df.agg(count(lit(1)), coalesce(bit_xor(xxhash64(col(idCol))), lit(0L))).head()
+    (r.getLong(0), r.getLong(1))
+  }
+
   // ---- mutations ----
 
   /** Create (or re-create wholesale) an index: write a fresh generation
@@ -331,7 +351,7 @@ private[graft] object EpochIndex {
     withIndexLease(fs, path, family.saveFn) {
       val g = freshGeneration(fs, path, family)
       val m = Manifest(family.tag, Set(g), params)
-      commit(fs, path, staged(path, g, frames(m), m))
+      commit(fs, path, staged(path, family, g, frames(m), m))
       prune(fs, path, family, Set(g))
     }
   }
@@ -344,7 +364,7 @@ private[graft] object EpochIndex {
     withIndexLease(fs, path, op) {
       val m = committed(spark, path, family)
       val g = freshGeneration(fs, path, family)
-      commit(fs, path, staged(path, g, frames(m), m.copy(epochs = m.epochs + g)))
+      commit(fs, path, staged(path, family, g, frames(m), m.copy(epochs = m.epochs + g)))
     }
   }
 
@@ -366,7 +386,8 @@ private[graft] object EpochIndex {
   /** One epoch's admission outside a stream: stage its frames, commit. */
   def admitEpoch(spark: SparkSession, path: String, family: Family,
       epochId: Long)(frames: Manifest => Frames): Unit =
-    commitEpoch(spark, path, family, epochId)(m => staged(path, epochId, frames(m), m))
+    commitEpoch(spark, path, family, epochId)(m =>
+      staged(path, family, epochId, frames(m), m))
 
   /** What a stream epoch's probe hands on: the survivors `writeBatch`
     * sees, the index frames of those survivors (cut with the params read
@@ -388,7 +409,7 @@ private[graft] object EpochIndex {
       if (!admit) writeBatch(p.fresh, epochId)
       else commitEpoch(batch.sparkSession, path, family, epochId) { m =>
         val frames = p.frames(m)
-        Exec.concurrently(writeBatch(p.fresh, epochId), stage(path, epochId, frames))
+        Exec.concurrently(writeBatch(p.fresh, epochId), stage(path, family, epochId, frames))
         withSchemas(m, frames)
       }
     } finally p.release()
@@ -438,7 +459,7 @@ private[graft] object EpochIndex {
       if (n <= 1) { prune(fs, path, family, m.epochs); 0 }
       else {
         val g = freshGeneration(fs, path, family)
-        commit(fs, path, staged(path, g, family.tables.map(t =>
+        commit(fs, path, staged(path, family, g, family.tables.map(t =>
           t -> family.merge(t, scan(spark, path, family, m, t).drop("epoch"))),
           m.copy(epochs = Set(g))))
         prune(fs, path, family, Set(g))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.hashFunctions._
@@ -19,7 +19,7 @@ import graft.functions.hashFunctions._
  *   sample, each vector assigned to its nearest centroid at index-build
  *   time; queries scan `nProbe` nearest cells only.
  */
-object Similarity extends org.apache.spark.internal.Logging {
+object Similarity {
 
   /** Executor-side guard: fail the job with a pointed error when a stored
     * vector's dimension differs from the query's — `cosine_similarity`
@@ -76,9 +76,17 @@ object Similarity extends org.apache.spark.internal.Logging {
   /** Exact cosine top-k neighbors of `queryVec` (excluding `excludeId`). */
   def bruteForceTopK(
       embs: DataFrame, idCol: String, vecCol: String,
-      queryVec: Array[Double], k: Int = 10, excludeId: Option[Long] = None): DataFrame = {
+      queryVec: Array[Double], k: Int = 10, excludeId: Option[Long] = None): DataFrame =
+    topK(embs, idCol, vecCol, queryVec, k, excludeId)
+
+  /** The tail every single-query search shares over its candidates: ids as
+    * `vec_id`, scored by the stable-rounded cosine with `queryVec` (a
+    * dimension mismatch fails, [[requireDim]]), top `k` by (cosine desc,
+    * vec_id asc), `excludeId` left out. */
+  private def topK(candidates: DataFrame, idCol: String, vecCol: String,
+      queryVec: Array[Double], k: Int, excludeId: Option[Long]): DataFrame = {
     val qLit = array(queryVec.toIndexedSeq.map(lit): _*)
-    val scored = requireDim(embs, col(vecCol), queryVec.length)
+    val scored = requireDim(candidates, col(vecCol), queryVec.length)
       .select(col(idCol).as("vec_id"),
         graft.functions.TextFunctions.stableRound(
           cosine_similarity(col(vecCol), qLit), 6).as("cosine"))
@@ -107,12 +115,22 @@ object Similarity extends org.apache.spark.internal.Logging {
     requireBroadcastSizedQueries(queries, "knnJoin")
     val q = broadcast(queries.select(col(qIdCol).as("query_id"),
       col(qVecCol).cast("array<double>").as("qv")))
-    val scored = corpus.select(col(cIdCol).as("vec_id"), col(cVecCol).as("v"))
-      .crossJoin(q)
+    rankPairs(corpus.select(col(cIdCol).as("vec_id"), col(cVecCol).as("v")).crossJoin(q),
+      k, excludeSelf, "query/corpus")
+  }
+
+  /** The tail every k-NN join shares over its (query, vector) candidate
+    * pairs `(query_id, qv, vec_id, v)`: fail on a pair whose dimensions
+    * differ (`sides` names them in the message), score by the
+    * stable-rounded cosine, keep each query's top `k` by (cosine desc,
+    * vec_id asc). */
+  private def rankPairs(pairs: DataFrame, k: Int, excludeSelf: Boolean,
+      sides: String): DataFrame = {
+    val scored = pairs
       .filter(assert_true(
         size(col("v")).isNull || size(col("qv")).isNull ||
           size(col("v")) === size(col("qv")),
-        lit("query/corpus embedding dimensions differ")).isNull)
+        lit(s"$sides embedding dimensions differ")).isNull)
       .select(col("query_id"), col("vec_id"),
         graft.functions.TextFunctions.stableRound(
           cosine_similarity(col("v"), col("qv")), 6).as("cosine"))
@@ -232,19 +250,8 @@ object Similarity extends org.apache.spark.internal.Logging {
         (bucketed.filter(col("bucket").isin(vals: _*)), probes)
       }
     val (corpusSide, probes) = pruned
-    val scored = corpusSide
-      .join(if (broadcastProbes) broadcast(probes) else probes, "bucket")
-      .filter(assert_true(
-        size(col("v")).isNull || size(col("qv")).isNull ||
-          size(col("v")) === size(col("qv")),
-        lit("query/corpus embedding dimensions differ")).isNull)
-      .select(col("query_id"), col("vec_id"),
-        graft.functions.TextFunctions.stableRound(
-          cosine_similarity(col("v"), col("qv")), 6).as("cosine"))
-    val base = if (excludeSelf) scored.filter(col("query_id") =!= col("vec_id")) else scored
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id")).orderBy(col("cosine").desc, col("vec_id").asc)
-    base.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
+    rankPairs(corpusSide.join(if (broadcastProbes) broadcast(probes) else probes, "bucket"),
+      k, excludeSelf, "query/corpus")
   }
 
   /** The hyperplane-bucketed vector table `(vec_id, v, bucket)` — the live
@@ -293,39 +300,33 @@ object Similarity extends org.apache.spark.internal.Logging {
   }
 
   /** Top-k against an existing LSH index (built here or loaded from a
-    * persisted one). The probe filter compares in the index's own bucket
-    * type, so on a [[loadLshIndex]] table (bucket = a partition directory
-    * column) it stays a pure partition-pruning predicate: only the probed
-    * buckets' FILES are listed and read — the "index once, seek many" shape
-    * of the reference's offset-indexed scan unit (OffsetRange.scala:53-83). */
+    * persisted one). The probe filter compares in the index's own `long`
+    * bucket type, so on a [[loadLshIndex]] table (bucket = a partition
+    * directory column) it stays a pure partition-pruning predicate: only the
+    * probed buckets' FILES are listed and read — the "index once, seek many"
+    * shape of the reference's offset-indexed scan unit
+    * (OffsetRange.scala:53-83). */
   def lshTopKWith(
       index: DataFrame, numBits: Int, seed: Long,
       queryVec: Array[Double], k: Int = 10, multiProbe: Int = 0,
-      excludeId: Option[Long] = None): DataFrame = {
-    val probes = probeBuckets(queryVec, numBits, seed, multiProbe)
-    // match the bucket column's type exactly (partition discovery infers INT
-    // for small buckets): a cast around the column would defeat pruning
-    val probeVals: Seq[Any] = index.schema("bucket").dataType match {
-      case org.apache.spark.sql.types.IntegerType => probes.map(_.toInt)
-      case _ => probes
-    }
-    val qLit = array(queryVec.toIndexedSeq.map(lit): _*)
-    val scored = requireDim(
-        index.filter(col("bucket").isin(probeVals: _*)), col("v"), queryVec.length)
-      .select(col("vec_id"),
-        graft.functions.TextFunctions.stableRound(
-          cosine_similarity(col("v"), qLit), 6).as("cosine"))
-    excludeId.fold(scored)(id => scored.filter(col("vec_id") =!= id))
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-      .limit(k)
-  }
+      excludeId: Option[Long] = None): DataFrame =
+    topK(index.filter(col("bucket").isin(probeBuckets(queryVec, numBits, seed, multiProbe): _*)),
+      "vec_id", "v", queryVec, k, excludeId)
+
+  /** The LSH index family: one `buckets` table, `(vec_id, v, bucket)` or
+    * in int8 form `(vec_id, q, scale, bucket)`, partitioned by `bucket`
+    * so a probe reads only its buckets' files in every committed epoch.
+    * The manifest holds `num_bits`, `seed` and `int8`. */
+  private[graft] val LshIndex = EpochIndex.Family("graft-lsh-index-v1", "LSH",
+    "saveLshIndex", Seq("buckets"), partitionCols = Map("buckets" -> "bucket"))
 
   /**
    * Persist an LSH index so repeated queries stop paying a full corpus scan:
-   * `buckets/` holds the bucketed vector table partitioned BY BUCKET — a
-   * query then reads only its probe buckets' files — and `params/` the
-   * (numBits, seed, int8) triple so load-side probing uses the identical
-   * planes and appends keep the storage form.
+   * the bucketed vector table, partitioned BY BUCKET — a query then reads
+   * only its probe buckets' files — stored through [[EpochIndex]], whose
+   * manifest records the (numBits, seed, int8) triple so load-side probing
+   * uses the identical planes and appends keep the storage form. A failed
+   * save leaves the previous index serving.
    *
    * `int8 = true` stores [[quantizeInt8]] codes + per-vector scale instead
    * of the raw doubles — at 100 TB the index bytes ARE the probe-time scan
@@ -336,47 +337,34 @@ object Similarity extends org.apache.spark.internal.Logging {
    * true cosines are within quantization error of each other.
    */
   def saveLshIndex(index: DataFrame, numBits: Int, seed: Long, path: String,
-      int8: Boolean = false): Unit = {
-    val spark = index.sparkSession
-    // single-writer lease (EpochIndex.withIndexLease contract): concurrent
-    // save/append/compact on one index path fail loudly, not corrupt
-    EpochIndex.withIndexLease(EpochIndex.indexFs(spark, path), path, "saveLshIndex") {
-      // cluster each bucket into one task before partitionBy: otherwise every
-      // input partition emits a file per bucket it touches (N x 2^bits small
-      // files), and probe-time file listing/opens dominate the scan it saved
-      storageForm(index, int8).repartition(col("bucket"))
-        .write.mode("overwrite").partitionBy("bucket").parquet(s"$path/buckets")
-      import spark.implicits._
-      Seq((numBits, seed, int8)).toDF("num_bits", "seed", "int8")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/params")
-    }
-    ()
-  }
+      int8: Boolean = false): Unit =
+    EpochIndex.save(index.sparkSession, path, LshIndex, Map("num_bits" -> numBits.toString,
+      "seed" -> seed.toString, "int8" -> int8.toString))(_ =>
+      Seq("buckets" -> storageForm(index, int8, "bucket")))
 
-  private def storageForm(index: DataFrame, int8: Boolean): DataFrame =
+  /** A vector table as stored: as given, or with `v` as int8 codes + scale. */
+  private def storageForm(index: DataFrame, int8: Boolean, part: String): DataFrame =
     if (!int8) index
     else index.select(col("vec_id"), quantizeInt8(col("v")).as("q"),
-      int8Scale(col("v")).as("scale"), col("bucket"))
+      int8Scale(col("v")).as("scale"), col(part))
+
+  /** The committed rows of a family's vector table, `(vec_id, v, <part>)`:
+    * an int8 index gets its `v` back from codes + scale. */
+  private def storedVectors(spark: SparkSession, path: String,
+      family: EpochIndex.Family, m: EpochIndex.Manifest, table: String): DataFrame = {
+    val v = if (m.param("int8").toBoolean) dequantizeInt8(col("q"), col("scale")) else col("v")
+    EpochIndex.scan(spark, path, family, m, table)
+      .select(col("vec_id"), v.as("v"), col(family.partitionCols(table)))
+  }
 
   /** Load a persisted LSH index: (buckets, numBits, seed). An int8-stored
     * index comes back with its `v` column reconstructed from codes+scale,
     * so every probe/validation path works unchanged. */
   def loadLshIndex(spark: org.apache.spark.sql.SparkSession, path: String)
       : (DataFrame, Int, Long) = {
-    val p = spark.read.parquet(s"$path/params").select(col("num_bits"), col("seed")).head()
-    val raw = spark.read.parquet(s"$path/buckets")
-    val df = if (raw.columns.contains("q"))
-      raw.select(col("vec_id"), dequantizeInt8(col("q"), col("scale")).as("v"), col("bucket"))
-    else raw
-    (df, p.getInt(0), p.getLong(1))
-  }
-
-  /** Order-independent corpus fingerprint: (count, xor of id hashes). One
-    * narrow column scan — cheap enough to run before every query batch. */
-  private def corpusFingerprint(df: DataFrame, idCol: String): (Long, Long) = {
-    val r = df.agg(count(lit(1)),
-      coalesce(bit_xor(xxhash64(col(idCol))), lit(0L))).head()
-    (r.getLong(0), r.getLong(1))
+    val m = EpochIndex.committed(spark, path, LshIndex)
+    (storedVectors(spark, path, LshIndex, m, "buckets"),
+      m.param("num_bits").toInt, m.param("seed").toLong)
   }
 
   /**
@@ -389,8 +377,8 @@ object Similarity extends org.apache.spark.internal.Logging {
       spark: org.apache.spark.sql.SparkSession, path: String,
       corpus: DataFrame, idCol: String): Unit = {
     val (idx, _, _) = loadLshIndex(spark, path)
-    val (ic, ih) = corpusFingerprint(idx, "vec_id")
-    val (cc, ch) = corpusFingerprint(corpus, idCol)
+    val (ic, ih) = EpochIndex.idFingerprint(idx, "vec_id")
+    val (cc, ch) = EpochIndex.idFingerprint(corpus, idCol)
     if (ic != cc || ih != ch) throw new IllegalStateException(
       s"LSH index at $path is stale: it covers $ic vectors " +
         s"(id-fingerprint $ih) but the corpus has $cc (fingerprint $ch). " +
@@ -400,29 +388,19 @@ object Similarity extends org.apache.spark.internal.Logging {
   /**
    * Incremental index maintenance: bucket `newVecs` with the PERSISTED
    * params (identical hyperplanes, so old and new vectors land in
-   * compatible buckets) and append them — no rebuild of the existing
-   * bucket files. Probes see old + new vectors transparently; at 100 TB
-   * this turns daily corpus growth into a delta-sized write instead of a
-   * full re-index. When appends accumulate many small files per bucket,
-   * [[compactLshIndex]] rewrites just the multi-file buckets.
+   * compatible buckets; read under the index lease, so a concurrent rebuild
+   * cannot hand this append the planes of the index it replaced) and
+   * commit them as one more generation in the index's storage form — no
+   * rewrite of the existing buckets. Probes see old + new vectors
+   * transparently; at 100 TB this turns daily corpus growth into a
+   * delta-sized write instead of a full re-index. [[compactLshIndex]]
+   * merges the accumulated generations back into one.
    */
   def appendToLshIndex(
-      newVecs: DataFrame, idCol: String, vecCol: String, path: String): Unit = {
-    val spark = newVecs.sparkSession
-    EpochIndex.withIndexLease(EpochIndex.indexFs(spark, path), path, "appendToLshIndex") {
-      // params are read under the lease, so a concurrent rebuild cannot
-      // hand this append the planes of the index it replaced
-      val params = spark.read.parquet(s"$path/params")
-      val p = params.select(col("num_bits"), col("seed")).head()
-      // deltas must keep the index's storage form: appending raw doubles to an
-      // int8 index would mix schemas inside the bucket files
-      val int8 = params.columns.contains("int8") &&
-        params.select(col("int8")).head().getBoolean(0)
-      storageForm(lshIndex(newVecs, idCol, vecCol, p.getInt(0), p.getLong(1)), int8)
-        .repartition(col("bucket"))
-        .write.mode("append").partitionBy("bucket").parquet(s"$path/buckets")
-    }
-  }
+      newVecs: DataFrame, idCol: String, vecCol: String, path: String): Unit =
+    EpochIndex.append(newVecs.sparkSession, path, LshIndex, "appendToLshIndex")(m =>
+      Seq("buckets" -> storageForm(lshIndex(newVecs, idCol, vecCol,
+        m.param("num_bits").toInt, m.param("seed").toLong), m.param("int8").toBoolean, "bucket")))
 
   /**
    * IVF-style index: assign every vector to its nearest of `nCells`
@@ -460,59 +438,59 @@ object Similarity extends org.apache.spark.internal.Logging {
       excludeId: Option[Long] = None): DataFrame = {
     val qCells = cents.map { case (cid, c) => (cid, cosineOf(queryVec, c)) }
       .sortBy(-_._2).take(nProbe).map(_._1)
-    val qLit = array(queryVec.toIndexedSeq.map(lit): _*)
-    val scored = requireDim(
-        index.filter(col("cell").isin(qCells.toIndexedSeq: _*)), col("v"), queryVec.length)
-      .select(col("vec_id"),
-        graft.functions.TextFunctions.stableRound(
-          cosine_similarity(col("v"), qLit), 6).as("cosine"))
-    excludeId.fold(scored)(id => scored.filter(col("vec_id") =!= id))
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-      .limit(k)
+    topK(index.filter(col("cell").isin(qCells.toIndexedSeq: _*)), "vec_id", "v",
+      queryVec, k, excludeId)
   }
+
+  /** The IVF index family: `assignments`, the per-vector cell table in
+    * [[LshIndex]]'s storage forms, partitioned by `cell`; and `centroids`
+    * `(cell, centroid)`, staged in every generation, so a merge keeps one
+    * row per cell. The manifest holds `int8`. */
+  private[graft] val IvfIndex = EpochIndex.Family("graft-ivf-index-v1", "IVF",
+    "saveIvfIndex", Seq("assignments", "centroids"),
+    (table, df) => if (table == "centroids") df.dropDuplicates("cell") else df.distinct(),
+    Map("assignments" -> "cell"))
 
   /**
    * Persist an IVF index so the (k-means + assignment) build cost is paid
-   * once: `assignments/` holds the per-vector cell table partitioned BY CELL
+   * once: `assignments` holds the per-vector cell table partitioned BY CELL
    * — a query then prunes to its nProbe cells at the file-listing level —
-   * and `centroids/` the tiny centroid table. `int8` stores quantized
-   * codes + scale like [[saveLshIndex]]; probes are storage-form agnostic.
+   * and `centroids` the tiny centroid table, both stored through
+   * [[EpochIndex]]. `int8` stores quantized codes + scale like
+   * [[saveLshIndex]]; probes are storage-form agnostic.
    */
   def saveIvfIndex(
       index: DataFrame, cents: Array[(Int, Array[Double])], path: String,
-      int8: Boolean = false): Unit = {
-    val spark = index.sparkSession
-    EpochIndex.withIndexLease(EpochIndex.indexFs(spark, path), path, "saveIvfIndex") {
-      // one file per cell (see saveLshIndex): probe-time listing cost stays
-      // proportional to probed cells, not input partitioning
-      ivfStorageForm(index, int8).repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(s"$path/assignments")
-      import spark.implicits._
-      cents.toSeq.map { case (cid, c) => (cid, c.toSeq) }.toDF("cell", "centroid")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-    }
-    ()
+      int8: Boolean = false): Unit =
+    EpochIndex.save(index.sparkSession, path, IvfIndex, Map("int8" -> int8.toString))(_ =>
+      ivfFrames(index, cents, int8))
+
+  /** One IVF generation: the assignments in storage form, the centroids. */
+  private def ivfFrames(index: DataFrame, cents: Array[(Int, Array[Double])],
+      int8: Boolean): EpochIndex.Frames =
+    Seq("assignments" -> storageForm(index, int8, "cell"),
+      "centroids" -> centroidTable(index.sparkSession, cents))
+
+  private def centroidTable(spark: SparkSession,
+      cents: Array[(Int, Array[Double])]): DataFrame = {
+    import spark.implicits._
+    cents.toSeq.map { case (cid, c) => (cid, c.toSeq) }.toDF("cell", "centroid")
   }
 
-  private def ivfStorageForm(index: DataFrame, int8: Boolean): DataFrame =
-    if (!int8) index
-    else index.select(col("vec_id"), quantizeInt8(col("v")).as("q"),
-      int8Scale(col("v")).as("scale"), col("cell"))
-
-  /** Load a persisted IVF index: (assignments, centroids). An int8-stored
-    * index (detected by schema) comes back with `v` reconstructed. */
-  def loadIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String)
-      : (DataFrame, Array[(Int, Array[Double])]) = {
-    val raw = spark.read.parquet(s"$path/assignments")
-    val index = if (raw.columns.contains("q"))
-      raw.select(col("vec_id"), dequantizeInt8(col("q"), col("scale")).as("v"), col("cell"))
-    else raw
-    val cents = spark.read.parquet(s"$path/centroids")
-      .select(col("cell"), col("centroid"))
+  private def committedCentroids(spark: SparkSession, path: String,
+      m: EpochIndex.Manifest): Array[(Int, Array[Double])] =
+    EpochIndex.scan(spark, path, IvfIndex, m, "centroids")
+      .dropDuplicates("cell").select(col("cell"), col("centroid"))
       .collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
       .sortBy(_._1)
-    (index, cents)
+
+  /** Load a persisted IVF index: (assignments, centroids). An int8-stored
+    * index comes back with `v` reconstructed. */
+  def loadIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String)
+      : (DataFrame, Array[(Int, Array[Double])]) = {
+    val m = EpochIndex.committed(spark, path, IvfIndex)
+    (storedVectors(spark, path, IvfIndex, m, "assignments"), committedCentroids(spark, path, m))
   }
 
   /**
@@ -531,10 +509,7 @@ object Similarity extends org.apache.spark.internal.Logging {
       queries: DataFrame, qIdCol: String, qVecCol: String,
       k: Int = 10, nProbe: Int = 4, excludeSelf: Boolean = true): DataFrame = {
     requireBroadcastSizedQueries(queries, "ivfKnnJoinWith")
-    val spark = index.sparkSession
-    import spark.implicits._
-    val centDf = broadcast(
-      cents.toSeq.map { case (cid, c) => (cid, c.toSeq) }.toDF("cell", "centroid"))
+    val centDf = broadcast(centroidTable(index.sparkSession, cents))
     val q = queries.select(col(qIdCol).as("query_id"),
         col(qVecCol).cast("array<double>").as("qv"))
       .filter(col("qv").isNotNull && size(col("qv")) > 0)
@@ -548,19 +523,8 @@ object Similarity extends org.apache.spark.internal.Logging {
       .localCheckpoint(eager = false) // driver cell-collect + join share it
     val cellVals: Seq[Any] = probes.select(col("cell")).distinct()
       .collect().map(_.get(0)).toSeq
-    val scored = index.filter(col("cell").isin(cellVals: _*))
-      .join(broadcast(probes), "cell")
-      .filter(assert_true(
-        size(col("v")).isNull || size(col("qv")).isNull ||
-          size(col("v")) === size(col("qv")),
-        lit("query/index embedding dimensions differ")).isNull)
-      .select(col("query_id"), col("vec_id"),
-        graft.functions.TextFunctions.stableRound(
-          cosine_similarity(col("v"), col("qv")), 6).as("cosine"))
-    val base = if (excludeSelf) scored.filter(col("query_id") =!= col("vec_id")) else scored
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id")).orderBy(col("cosine").desc, col("vec_id").asc)
-    base.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
+    rankPairs(index.filter(col("cell").isin(cellVals: _*)).join(broadcast(probes), "cell"),
+      k, excludeSelf, "query/index")
   }
 
   /** IVF twin of [[validateLshIndex]]: count + order-independent id-hash
@@ -569,8 +533,8 @@ object Similarity extends org.apache.spark.internal.Logging {
       spark: org.apache.spark.sql.SparkSession, path: String,
       corpus: DataFrame, idCol: String): Unit = {
     val (idx, _) = loadIvfIndex(spark, path)
-    val (ic, ih) = corpusFingerprint(idx, "vec_id")
-    val (cc, ch) = corpusFingerprint(corpus, idCol)
+    val (ic, ih) = EpochIndex.idFingerprint(idx, "vec_id")
+    val (cc, ch) = EpochIndex.idFingerprint(corpus, idCol)
     if (ic != cc || ih != ch) throw new IllegalStateException(
       s"IVF index at $path is stale: it covers $ic vectors " +
         s"(id-fingerprint $ih) but the corpus has $cc (fingerprint $ch). " +
@@ -578,131 +542,34 @@ object Similarity extends org.apache.spark.internal.Logging {
   }
 
   /** IVF twin of [[appendToLshIndex]]: assign `newVecs` to the PERSISTED
-    * centroids (cells stay stable — centroids are never refit on append, so
-    * probes remain consistent) and append delta-sized files per cell;
-    * [[compactIvfIndex]] merges the accumulated per-cell files. Refit with
-    * a fresh saveIvfIndex when the corpus distribution drifts enough that
-    * fixed centroids hurt recall. */
+    * centroids (read under the lease; cells stay stable — centroids are
+    * never refit on append, so probes remain consistent) and commit them
+    * as one more generation; [[compactIvfIndex]] merges the generations.
+    * Refit with a fresh saveIvfIndex when the corpus distribution drifts
+    * enough that fixed centroids hurt recall. */
   def appendToIvfIndex(
-      newVecs: DataFrame, idCol: String, vecCol: String, path: String): Unit = {
-    val spark = newVecs.sparkSession
-    EpochIndex.withIndexLease(EpochIndex.indexFs(spark, path), path, "appendToIvfIndex") {
-      // read under the lease (appendToLshIndex's rationale)
-      val cents = spark.read.parquet(s"$path/centroids")
-        .select(col("cell"), col("centroid"))
-        .collect()
-        .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
-        .sortBy(_._1)
-      // schema-detect the persisted storage form so deltas match it
-      val int8 = spark.read.parquet(s"$path/assignments").columns.contains("q")
-      ivfStorageForm(
-          newVecs.select(col(idCol).as("vec_id"), col(vecCol).as("v"))
-            .withColumn("cell", best_centroid(col("v"), cents.map(_._2))), int8)
-        .repartition(col("cell"))
-        .write.mode("append").partitionBy("cell").parquet(s"$path/assignments")
+      newVecs: DataFrame, idCol: String, vecCol: String, path: String): Unit =
+    EpochIndex.append(newVecs.sparkSession, path, IvfIndex, "appendToIvfIndex") { m =>
+      val cents = committedCentroids(newVecs.sparkSession, path, m)
+      ivfFrames(ivfIndexWith(newVecs, idCol, vecCol, cents), cents, m.param("int8").toBoolean)
     }
-  }
 
   /**
-   * Compact an appended LSH index: each [[appendToLshIndex]] adds one file
-   * per touched bucket, so after N daily appends a probe opens N files per
-   * bucket and the file-pruning win erodes linearly. Compaction rewrites
-   * ONLY the buckets whose file count exceeds `maxFilesPerBucket` (found by
-   * a pure metadata listing — no data read for single-file buckets) back to
-   * one file each; `params/` is untouched, so probes before and after
-   * answer identically. Returns the number of buckets rewritten.
-   *
-   * Not crash-atomic, and not isolated from concurrent probes: new files
-   * land in the bucket before the old ones are deleted, so a probe that
-   * lists files mid-swap can see a bucket's vectors TWICE (duplicates can
-   * displace genuine neighbors from its top-k), and a crash mid-swap leaves
-   * the duplicates behind — [[validateLshIndex]] catches that state loudly
-   * (count fingerprint mismatch); rebuild with [[saveLshIndex]] if it
-   * fires. Run compaction in a maintenance window, like any file-level
-   * rewrite without a transactional table format underneath.
+   * Compact an appended LSH index: each [[appendToLshIndex]] commits one
+   * more generation, so after N appends a probe opens up to N files per
+   * bucket and the file-pruning win erodes linearly. Compaction merges the
+   * committed generations into one ([[EpochIndex.compact]]) — one file per
+   * bucket again, probes answer identically, and a crash before its
+   * manifest flip leaves the previous index serving. Returns the number of
+   * generations merged, 0 if the index was already compact.
    */
-  def compactLshIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-      maxFilesPerBucket: Int = 1): Int =
-    EpochIndex.withIndexLease(EpochIndex.indexFs(spark, path), path, "compactLshIndex") {
-      compactPartitionedTable(spark, s"$path/buckets", "bucket", maxFilesPerBucket)
-    }
+  def compactLshIndex(spark: org.apache.spark.sql.SparkSession, path: String): Int =
+    EpochIndex.compact(spark, path, LshIndex, "compactLshIndex")
 
-  /** IVF twin of [[compactLshIndex]]: rewrites only over-threshold cells of
-    * `assignments/`; `centroids/` (the cell geometry) is untouched. */
-  def compactIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-      maxFilesPerCell: Int = 1): Int =
-    EpochIndex.withIndexLease(EpochIndex.indexFs(spark, path), path, "compactIvfIndex") {
-      compactPartitionedTable(spark, s"$path/assignments", "cell", maxFilesPerCell)
-    }
-
-  /** Rewrite the partitions of a `partCol=value`-laid-out parquet table that
-    * hold more than `maxFiles` data files, one output file per partition.
-    * Listing is metadata-only; the single rewrite job reads just the
-    * over-threshold partitions (partition-pruned scan), writes them under a
-    * sibling tmp dir, then swaps files per partition (move new in, delete
-    * old) and drops the tmp dir. */
-  private def compactPartitionedTable(
-      spark: org.apache.spark.sql.SparkSession, table: String,
-      partCol: String, maxFiles: Int): Int = {
-    import org.apache.hadoop.fs.Path
-    require(maxFiles >= 1, s"maxFiles must be >= 1, got $maxFiles")
-    val root = new Path(table)
-    val fs = EpochIndex.indexFs(spark, table)
-    def dataFiles(dir: Path) = fs.listStatus(dir).filter(st => st.isFile &&
-      !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith("."))
-    val overAll = fs.listStatus(root)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith(s"$partCol="))
-      .filter(st => dataFiles(st.getPath).length > maxFiles)
-    if (overAll.isEmpty) return 0
-    val df = spark.read.parquet(table)
-    // probe values in the partition column's own inferred type (see
-    // lshTopKWith): a cast would defeat partition pruning and scan everything.
-    // A dir whose value does NOT parse in that type — above all the Hive
-    // null-partition sentinel holding null-vector rows (a null bucket/cell is
-    // legal index content that no probe ever reads) — is SKIPPED, not fatal:
-    // an `isin` over typed values could never select its rows for rewrite
-    // anyway, and aborting all compaction over an uncompactable dir would be
-    // the worse failure.
-    val parse: String => Option[Any] = df.schema(partCol).dataType match {
-      case org.apache.spark.sql.types.IntegerType => v => v.toIntOption
-      case org.apache.spark.sql.types.LongType => v => v.toLongOption
-      case _ => v =>
-        if (v == "__HIVE_DEFAULT_PARTITION__") None else Some(v)
-    }
-    val (over, skipped) = overAll.partition(st =>
-      parse(st.getPath.getName.stripPrefix(s"$partCol=")).isDefined)
-    skipped.foreach(st => logWarning(
-      s"compaction skipping ${st.getPath.getName}: partition value outside " +
-        s"the $partCol column's type (null-vector rows land here; probes " +
-        "never read them, so the extra files cost nothing at query time)"))
-    if (over.isEmpty) return 0
-    val typedVals: Seq[Any] = over.toSeq.flatMap(st =>
-      parse(st.getPath.getName.stripPrefix(s"$partCol=")))
-    val tmp = new Path(root.getParent, root.getName + ".compact-tmp")
-    fs.delete(tmp, true)
-    df.filter(col(partCol).isin(typedVals: _*))
-      .repartition(col(partCol))
-      .write.partitionBy(partCol).parquet(tmp.toString)
-    over.foreach { st =>
-      val oldFiles = dataFiles(st.getPath)
-      val newDir = new Path(tmp, st.getPath.getName)
-      // additive first, delete after: a crash mid-swap duplicates, never
-      // loses. Every rename result is CHECKED — a silently failed rename
-      // (e.g. cross-filesystem) with the old files then deleted would lose
-      // the bucket's rows; instead the old files stay put and the error is
-      // loud (the bucket holds duplicates until validate/rebuild, which
-      // displaces neighbors but never drops them)
-      val movedAll = dataFiles(newDir).forall(f =>
-        fs.rename(f.getPath, new Path(st.getPath, f.getPath.getName)))
-      if (!movedAll) throw new java.io.IOException(
-        s"compaction of ${st.getPath}: move of compacted files failed; old " +
-          "files retained (bucket may hold duplicates — run validate, " +
-          "re-run compaction or rebuild)")
-      oldFiles.foreach(f => fs.delete(f.getPath, false))
-    }
-    fs.delete(tmp, true)
-    over.length
-  }
+  /** IVF twin of [[compactLshIndex]]: one file per cell again, and one
+    * centroid row per cell. */
+  def compactIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String): Int =
+    EpochIndex.compact(spark, path, IvfIndex, "compactIvfIndex")
 
   /** Seeded k-means centroids (Spark MLlib; deterministic for a fixed seed
     * and input). Cached per (plan-agnostic) table identity via a small keyed

@@ -52,10 +52,11 @@ class HarnessSpec extends AnyFunSuite {
 
   test("index manifests, leases and epoch directories are built in EpochIndex.scala alone") {
     // one commit protocol for the persisted indexes: no family writes its
-    // own manifest, takes its own lease or names its own epoch directory
+    // own manifest, takes its own lease, names its own epoch directory or
+    // appends into a live index directory
     val sources = scalaFiles("src/main/scala/graft/operators")
     assert(sources.exists(_.toString.endsWith("/operators/EpochIndex.scala")))
-    val needles = Seq("manifest-", "__lease", "epoch=")
+    val needles = Seq("manifest-", "__lease", "epoch=", "mode(\"append\")")
     val copies = for {
       p <- sources if !p.toString.endsWith("/operators/EpochIndex.scala")
       (line, i) <- Files.readAllLines(p).asScala.zipWithIndex

@@ -935,6 +935,12 @@ class SimilaritySpec extends AnyFunSuite {
 
   lazy val embs = graft.Tables.embeddings(spark, SparkTestSession.sf001)
 
+  /** The `<partCol>=<value>` directories of a persisted index table, inside
+    * each of its epoch directories. */
+  private def partitionDirs(table: String, partCol: String): Seq[java.io.File] =
+    new java.io.File(table).listFiles().toSeq.filter(_.getName.startsWith("epoch="))
+      .flatMap(_.listFiles().toSeq.filter(_.getName.startsWith(s"$partCol=")))
+
   test("bruteForceTopK returns k ordered neighbors") {
     val qv = Similarity.vectorOf(embs, "vec_id", "embedding", 0L)
     val top = Similarity.bruteForceTopK(embs, "vec_id", "embedding", qv, 10, Some(0L))
@@ -1156,8 +1162,7 @@ class SimilaritySpec extends AnyFunSuite {
       nProbe = 3, excludeId = Some(0L)).as[(Long, Double)].collect().toSeq
     assert(reloaded == live)
     // assignments are partitioned by cell -> probe prunes at file level
-    assert(new java.io.File(s"$path/assignments").listFiles()
-      .exists(_.getName.startsWith("cell=")))
+    assert(partitionDirs(s"$path/assignments", "cell").nonEmpty)
   }
 
   test("knnJoin: exact per-query top-k equals per-query bruteForceTopK") {
@@ -1429,13 +1434,14 @@ class SimilaritySpec extends AnyFunSuite {
     val scans = scansOf(q.queryExecution.executedPlan)
     assert(scans.nonEmpty, "expected a parquet file scan in the probe plan")
     val readBuckets = scans.flatMap { s =>
-      val dt = s.relation.partitionSchema.fields(0).dataType
+      val i = s.relation.partitionSchema.fieldIndex("bucket")
+      val dt = s.relation.partitionSchema(i).dataType
       s.selectedPartitions.filePartitionIterator
-        .map(_.values.get(0, dt).toString.toLong).toSeq
+        .map(_.values.get(i, dt).toString.toLong).toSeq
     }.toSet
     val probes = Similarity.probeBuckets(qv, 6, 42L, 2).toSet
-    val onDisk = new java.io.File(s"$path/buckets").listFiles()
-      .filter(_.getName.startsWith("bucket=")).map(_.getName.stripPrefix("bucket=").toLong).toSet
+    val onDisk = partitionDirs(s"$path/buckets", "bucket")
+      .map(_.getName.stripPrefix("bucket=").toLong).toSet
     assert(readBuckets == (probes intersect onDisk),
       s"scan read buckets $readBuckets, probes were $probes (on disk: ${onDisk.size})")
     assert(readBuckets.size < onDisk.size, "pruning must skip non-probe buckets")
@@ -1539,9 +1545,10 @@ class SimilaritySpec extends AnyFunSuite {
       .filter(_.relation.partitionSchema.fields.nonEmpty)
     assert(scans.nonEmpty, "expected a bucket-partitioned parquet scan")
     val readBuckets = scans.flatMap { s =>
-      val dt = s.relation.partitionSchema.fields(0).dataType
+      val i = s.relation.partitionSchema.fieldIndex("bucket")
+      val dt = s.relation.partitionSchema(i).dataType
       s.selectedPartitions.filePartitionIterator
-        .map(_.values.get(0, dt).toString.toLong).toSeq
+        .map(_.values.get(i, dt).toString.toLong).toSeq
     }.toSet
     val probeBuckets = queries.select(
         graft.functions.hashFunctions.hyperplane_lsh_bucket(
@@ -1550,8 +1557,7 @@ class SimilaritySpec extends AnyFunSuite {
       .flatMap((b: Long) => (0 until 5).map(i => b ^ (1L << i)).toSet + b)
     assert(readBuckets.subsetOf(probeBuckets),
       s"scan read $readBuckets beyond the probe set $probeBuckets")
-    val allOnDisk = new java.io.File(s"$path/buckets").listFiles()
-      .count(_.getName.startsWith("bucket="))
+    val allOnDisk = partitionDirs(s"$path/buckets", "bucket").map(_.getName).distinct.size
     assert(readBuckets.size < allOnDisk, "pruning must skip non-probe buckets")
     // a null query vector has a null bucket: dropped silently (the
     // knnJoinLsh contract), never an NPE in the driver-side bucket collect
@@ -1627,9 +1633,10 @@ class SimilaritySpec extends AnyFunSuite {
       .filter(_.relation.partitionSchema.fields.nonEmpty)
     assert(scans.nonEmpty, "expected a cell-partitioned parquet scan")
     val readCells = scans.flatMap { s =>
-      val dt = s.relation.partitionSchema.fields(0).dataType
+      val i = s.relation.partitionSchema.fieldIndex("cell")
+      val dt = s.relation.partitionSchema(i).dataType
       s.selectedPartitions.filePartitionIterator
-        .map(_.values.get(0, dt).toString.toInt).toSeq
+        .map(_.values.get(i, dt).toString.toInt).toSeq
     }.toSet
     def cosine(a: Array[Double], b: Array[Double]): Double = {
       var d = 0.0; var na = 0.0; var nb = 0.0; var i = 0
@@ -1653,10 +1660,11 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("compaction: appended multi-file buckets collapse to one file, probes unchanged") {
+    // data files per bucket (cell), summed over the table's epoch directories
     def bucketFiles(dir: String, prefix: String): Map[String, Int] =
-      new java.io.File(dir).listFiles().filter(_.getName.startsWith(prefix))
-        .map(d => d.getName -> d.listFiles().count(f =>
-          f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))).toMap
+      partitionDirs(dir, prefix.stripSuffix("=")).groupMapReduce(_.getName)(d =>
+        d.listFiles().count(f =>
+          f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith(".")))(_ + _)
     // --- LSH: three slices = up to 3 files per bucket ---
     val path = java.nio.file.Files.createTempDirectory("lsh-compact").toString
     Similarity.saveLshIndex(
@@ -1674,6 +1682,8 @@ class SimilaritySpec extends AnyFunSuite {
     }
     val before = probe()
     assert(Similarity.compactLshIndex(spark, path) > 0)
+    assert(EpochIndex.committed(spark, path, Similarity.LshIndex).epochs.size == 1,
+      "compaction must leave one committed generation")
     assert(bucketFiles(s"$path/buckets", "bucket=").values.forall(_ == 1),
       "every bucket must hold exactly one data file after compaction")
     assert(probe() == before, "compaction must not change probe answers")
@@ -1692,6 +1702,7 @@ class SimilaritySpec extends AnyFunSuite {
     }
     val ibefore = iprobe()
     assert(Similarity.compactIvfIndex(spark, ipath) > 0)
+    assert(EpochIndex.committed(spark, ipath, Similarity.IvfIndex).epochs.size == 1)
     assert(bucketFiles(s"$ipath/assignments", "cell=").values.forall(_ == 1))
     assert(iprobe() == ibefore)
     Similarity.validateIvfIndex(spark, ipath, embs, "vec_id")
@@ -1711,14 +1722,15 @@ class SimilaritySpec extends AnyFunSuite {
       numBits = 4, seed = 42L, path)
     Similarity.appendToLshIndex(withNull(1), "vec_id", "embedding", path)
     Similarity.appendToLshIndex(withNull(2), "vec_id", "embedding", path)
-    val nullDir = new java.io.File(s"$path/buckets/bucket=__HIVE_DEFAULT_PARTITION__")
-    assert(nullDir.isDirectory && nullDir.listFiles().count(f =>
+    val nullDirs = partitionDirs(s"$path/buckets", "bucket")
+      .filter(_.getName == "bucket=__HIVE_DEFAULT_PARTITION__")
+    assert(nullDirs.flatMap(_.listFiles()).count(f =>
       f.isFile && !f.getName.startsWith("_")) > 1,
       "null-vector rows must have produced a multi-file default partition")
     // pre-fix this threw NumberFormatException on '__HIVE_DEFAULT_PARTITION__'
     assert(Similarity.compactLshIndex(spark, path) > 0)
-    // real buckets compacted; the null partition is untouched, and probes
-    // (which never select a null bucket) still answer
+    // every bucket merged, the null one too, and probes (which never
+    // select a null bucket) still answer
     val (idx, bits, seedv) = Similarity.loadLshIndex(spark, path)
     val qv = Similarity.vectorOf(embs, "vec_id", "embedding", 0L)
     assert(Similarity.lshTopKWith(idx, bits, seedv, qv, 5, multiProbe = 2,

@@ -9,8 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
 
 /** The epoch-commit protocol of the persisted indexes ([[EpochIndex]])
-  * under injected crashes, for all five families, plus its bounded-growth
-  * and refusal contracts. */
+  * under injected crashes: stream epochs of the five dedup and stats
+  * families, failed saves, appends and compactions of the LSH and IVF
+  * vector indexes; plus its bounded-growth and refusal contracts. */
 class EpochIndexSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -316,6 +317,12 @@ class EpochIndexSpec extends AnyFunSuite {
     // the layout an index had before manifests: data and params, no manifest
     df(corpus).write.parquet(s"$base/old/hashes/epoch=-1")
     Seq("text").toDF("key_cols").write.parquet(s"$base/old/params")
+    // ...and the LSH and IVF tables, partitioned in place
+    Seq((0L, Seq(1.0), 3L)).toDF("vec_id", "v", "bucket")
+      .write.partitionBy("bucket").parquet(s"$base/old/buckets")
+    Seq((0L, Seq(1.0), 0)).toDF("vec_id", "v", "cell")
+      .write.partitionBy("cell").parquet(s"$base/old/assignments")
+    Seq((0, Seq(1.0))).toDF("cell", "centroid").write.parquet(s"$base/old/centroids")
     val old = s"$base/old"
     val batch = df(batches(0))
     def refused(saveFn: String)(probe: => Any): Unit = {
@@ -328,6 +335,8 @@ class EpochIndexSpec extends AnyFunSuite {
     refused("saveFuzzyIndex")(Fuzzy.loadFuzzyIndex(spark, old))
     refused("saveBm25Stats")(CorpusOps.loadBm25Stats(spark, old))
     refused("saveHashIndex")(Dedup.appendToHashIndex(batch, Seq($"text"), old))
+    refused("saveLshIndex")(Similarity.loadLshIndex(spark, old))
+    refused("saveIvfIndex")(Similarity.loadIvfIndex(spark, old))
     // another family's index is refused the same way
     val mh = s"$base/mh"
     Dedup.saveMinHashIndex(df(corpus), "doc_id", "text", mh)
@@ -335,6 +344,86 @@ class EpochIndexSpec extends AnyFunSuite {
       Dedup.dedupAgainstHashIndex(batch, Seq($"text"), mh))
     assert(e.getMessage.contains("saveHashIndex") &&
       e.getMessage.contains("graft-minhash-index-v1"), e.getMessage)
+    FileUtils.deleteQuietly(new java.io.File(base))
+  }
+
+  /** 48 seeded 8-dimensional vectors, `(vec_id, embedding)`. */
+  private lazy val vecs: DataFrame = (0 until 48).map { i =>
+    val r = new java.util.Random(7L + i)
+    i.toLong -> Seq.fill(8)(r.nextGaussian())
+  }.toDF("vec_id", "embedding")
+
+  test("LSH and IVF: a failed save or append, or a crashed compaction, leaves the old index serving") {
+    val base = java.nio.file.Files.createTempDirectory("epoch-ann").toString
+    val (lsh, ivf) = (s"$base/lsh", s"$base/ivf")
+    val cents = Similarity.centroidsOf(vecs, "vec_id", "embedding", 4)
+    val evens = vecs.filter($"vec_id" % 2 === 0)
+    val odds = vecs.filter($"vec_id" % 2 =!= 0)
+    // input that throws mid-write, on one row
+    def failing(d: DataFrame) =
+      d.filter(assert_true($"vec_id" =!= 7L, lit("injected mid-write")).isNull)
+    def saveLsh(d: DataFrame) =
+      Similarity.saveLshIndex(Similarity.lshIndex(d, "vec_id", "embedding", 4, 42L), 4, 42L, lsh)
+    def saveIvf(d: DataFrame) =
+      Similarity.saveIvfIndex(Similarity.ivfIndexWith(d, "vec_id", "embedding", cents), cents, ivf)
+    val qv = Array.tabulate(8)(i => if (i % 2 == 0) 0.5 else -0.25)
+    def answers() = {
+      val (li, bits, seed) = Similarity.loadLshIndex(spark, lsh)
+      val (vi, vc) = Similarity.loadIvfIndex(spark, ivf)
+      (Similarity.lshTopKWith(li, bits, seed, qv, 5, multiProbe = 4)
+        .as[(Long, Double)].collect().toSeq,
+        Similarity.ivfTopKWith(vi, vc, qv, 5, nProbe = 2).as[(Long, Double)].collect().toSeq)
+    }
+    saveLsh(evens)
+    saveIvf(evens)
+    val saved = answers()
+    assert(saved._1.nonEmpty && saved._2.nonEmpty)
+    intercept[Exception](saveLsh(failing(vecs)))
+    intercept[Exception](saveIvf(failing(vecs)))
+    // an IVF save that fails between its tables: the assignments are sound,
+    // a null centroid breaks the centroid table
+    intercept[Exception](Similarity.saveIvfIndex(
+      Similarity.ivfIndexWith(vecs, "vec_id", "embedding", cents),
+      cents :+ (cents.length -> (null: Array[Double])), ivf))
+    assert(answers() == saved, "a failed save must leave the old index serving")
+    intercept[Exception](Similarity.appendToLshIndex(failing(odds), "vec_id", "embedding", lsh))
+    intercept[Exception](Similarity.appendToIvfIndex(failing(odds), "vec_id", "embedding", ivf))
+    assert(answers() == saved, "a failed append must leave the old index serving")
+    Similarity.appendToLshIndex(odds, "vec_id", "embedding", lsh)
+    Similarity.appendToIvfIndex(odds, "vec_id", "embedding", ivf)
+    Similarity.validateLshIndex(spark, lsh, vecs, "vec_id")
+    Similarity.validateIvfIndex(spark, ivf, vecs, "vec_id")
+    val grown = answers()
+    // crashed compaction: the merged generation is fully written but the
+    // process dies before the manifest flip. Built from the files of a real
+    // run: the pre-compaction index plus the generation a compaction wrote.
+    def epochDirs(path: String, t: String) = new java.io.File(s"$path/$t").listFiles()
+      .map(_.getName).filter(_.startsWith("epoch=")).toSet
+    for ((path, family, compact) <- Seq(
+        (lsh, Similarity.LshIndex, () => Similarity.compactLshIndex(spark, lsh)),
+        (ivf, Similarity.IvfIndex, () => Similarity.compactIvfIndex(spark, ivf)))) {
+      val committedBefore = EpochIndex.committed(spark, path, family).epochs
+      val bak = java.nio.file.Files.createTempDirectory("epoch-ann-bak").toFile
+      FileUtils.copyDirectory(new java.io.File(path), bak)
+      assert(compact() == 2)
+      val merged = epochDirs(path, family.tables.head).head
+      family.tables.foreach(t => FileUtils.copyDirectory(
+        new java.io.File(s"$path/$t/$merged"), new java.io.File(bak, s"$t/$merged")))
+      FileUtils.deleteDirectory(new java.io.File(path))
+      FileUtils.moveDirectory(bak, new java.io.File(path))
+      assert(EpochIndex.committed(spark, path, family).epochs == committedBefore)
+      assert(family.tables.forall(epochDirs(path, _).contains(merged)))
+      assert(answers() == grown,
+        s"${family.name}: the previous index must keep serving after a crashed flip")
+      // the next compaction merges the committed generations, prunes the orphan
+      assert(compact() == 2)
+      family.tables.foreach(t =>
+        assert(epochDirs(path, t).size == 1 && !epochDirs(path, t).contains(merged),
+          s"${family.name} $t kept the orphan generation: ${epochDirs(path, t)}"))
+    }
+    assert(answers() == grown, "compaction must not change probe answers")
+    Similarity.validateLshIndex(spark, lsh, vecs, "vec_id")
+    Similarity.validateIvfIndex(spark, ivf, vecs, "vec_id")
     FileUtils.deleteQuietly(new java.io.File(base))
   }
 
